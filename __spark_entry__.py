@@ -108,21 +108,27 @@ _DEFER_FIRST: tuple[str, ...] = ()
 # The ONLY manual rotation knob since round 13: proven entries whose
 # implementation the CURRENT round touched jump the staleness queue.
 # Everything else is ordered stalest-first automatically from the
-# CORRECTNESS history.  Round 15 (optimization round) touched the
-# MR/CEP lowering tiers + measure layer (nfa_lowering.py,
-# match_recognize.py: shared-frame checkpoints, merged aggregate
-# join-backs) — every lowered/measure-bearing MR/CEP entry re-verifies
-# first — plus the PPJoin prefix stage (dedup.py), the staged MAD plan
-# (stats.py), and the PQ-ANN temp-view cleanup (similarity.py).
+# CORRECTNESS history.  x_semdedup leads: its block-decomposed pair
+# join shipped without a driver-oracle row.  Every SQL text rewrite now
+# reads one lexer (sql_lex.py), so the group-window, LATERAL /
+# SYSTEM_TIME, DDL, hint, catalog-qualification and multi-INSERT
+# entries re-verify next, then every MR entry (MEASURES / DEFINE
+# splitting and the cross-variable DEFINE lowering read the same lexer),
+# then the CEP entries (their state conditions reach the same
+# conjunct split, which picks the lowering tier).
 _REVERIFY_FIRST: tuple[str, ...] = (
-    "x_mr_agg", "x_mr_subset", "x_mr_multikey", "x_mr_composed",
+    "x_semdedup",
+    "x_sql_tumble", "x_sql_hop", "x_sql_session", "x_sql_lateral",
+    "x_sql_system_time", "x_ddl_roundtrip", "x_ddl_like",
+    "x_ddl_options_hint", "x_catalog_qualified", "x_hive_dialect",
+    "x_hive_multi_insert", "x_mr_composed",
+    "x_mr_agg", "x_mr_subset", "x_mr_multikey",
     "x_mr_plus", "x_mr_offsets", "x_mr_next", "x_mr_optional",
     "x_mr_xvar", "x_mr_allrows", "x_mr_prev", "x_mr_skip_to_last",
     "x_mr_allrows_running", "x_mr_backtrack", "x_mr_alternation",
     "x_mr_group_funnel", "x_mr_quantified_tail",
     "x_cep_funnel3", "x_cep_any", "x_cep_times_df", "x_cep_optional_df",
     "x_cep_overlap_opt",
-    "x_dedup_jaccard", "x_mad_outliers", "x_ann_pq",
 )
 
 

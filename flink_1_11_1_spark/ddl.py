@@ -34,6 +34,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .sql_lex import lex
+
 # --------------------------------------------------------------- types
 
 _SIMPLE_TYPES = {
@@ -76,15 +78,14 @@ def flink_type_to_spark(t: str) -> str:
     m = re.match(r"^MAP\s*<(.*)>$", up, re.DOTALL)
     if m:
         inner = s[s.index("<") + 1 : s.rindex(">")]
-        k, v = _split_top(inner, ",")
+        k, v = lex(inner).split(",")
         return f"MAP<{flink_type_to_spark(k)}, {flink_type_to_spark(v)}>"
     m = re.match(r"^ROW\s*<(.*)>$", up, re.DOTALL)
     if m:
         inner = s[s.index("<") + 1 : s.rindex(">")]
-        fields = _split_top_all(inner, ",")
         parts = []
-        for f_ in fields:
-            name, ft = f_.strip().split(None, 1)
+        for f_ in lex(inner).split(","):
+            name, ft = f_.split(None, 1)
             parts.append(f"{name}: {flink_type_to_spark(ft)}")
         return "STRUCT<" + ", ".join(parts) + ">"
     # TIMESTAMP(3) [WITH LOCAL TIME ZONE], DECIMAL(10, 2), VARCHAR(255)...
@@ -100,41 +101,6 @@ def flink_type_to_spark(t: str) -> str:
     return spark
 
 
-def _split_top(s: str, sep: str) -> tuple[str, str]:
-    parts = _split_top_all(s, sep)
-    if len(parts) != 2:
-        raise ValueError(f"expected two {sep!r}-separated parts in {s!r}")
-    return parts[0], parts[1]
-
-
-def _split_top_all(s: str, sep: str) -> list[str]:
-    """Split on sep at paren/angle-bracket depth 0, outside quotes."""
-    out, depth, cur, quote = [], 0, [], None
-    for ch in s:
-        if quote:
-            cur.append(ch)
-            if ch == quote:
-                quote = None
-            continue
-        if ch in "'\"":
-            quote = ch
-            cur.append(ch)
-        elif ch in "(<":
-            depth += 1
-            cur.append(ch)
-        elif ch in ")>":
-            depth -= 1
-            cur.append(ch)
-        elif ch == sep and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur))
-    return [p for p in (x.strip() for x in out) if p]
-
-
 # ------------------------------------------------------------- parsing
 
 _WM_RE = re.compile(
@@ -148,7 +114,7 @@ _PK_RE = re.compile(
 )
 _COMPUTED_RE = re.compile(r"^(\w+)\s+AS\s+(.+)$", re.IGNORECASE | re.DOTALL)
 _PHYSICAL_RE = re.compile(
-    r"^(\w+)\s+(.+?)(\s+NOT\s+NULL)?(\s+COMMENT\s+'[^']*')?$",
+    r"^(\w+)\s+(.+?)(\s+NOT\s+NULL)?(\s+COMMENT\s+'(?:[^']|'')*')?$",
     re.IGNORECASE | re.DOTALL,
 )
 
@@ -157,32 +123,11 @@ _CREATE_TABLE_HEAD_RE = re.compile(
     re.IGNORECASE,
 )
 _CREATE_TABLE_TAIL_RE = re.compile(
-    r"^\s*(?:COMMENT\s+'[^']*'\s*)?"
+    r"^\s*(?:COMMENT\s+'(?:[^']|'')*'\s*)?"
     r"(?:PARTITIONED\s+BY\s*\(([^)]*)\)\s*)?"
     r"WITH\s*\((.*)\)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
-
-
-def _balanced_block(s: str, start: int) -> tuple[str, int]:
-    """Return (content, index-after-closing-paren) for the paren block
-    opening at ``start`` (s[start] == '('), respecting quotes."""
-    depth, quote = 0, None
-    for i in range(start, len(s)):
-        ch = s[i]
-        if quote:
-            if ch == quote:
-                quote = None
-            continue
-        if ch in "'\"":
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return s[start + 1 : i], i + 1
-    raise ValueError("unbalanced parentheses in CREATE TABLE")
 _CREATE_VIEW_RE = re.compile(
     r"^CREATE\s+(TEMPORARY\s+)?VIEW\s+(IF\s+NOT\s+EXISTS\s+)?([\w.`]+)\s+AS\s+(.+)$",
     re.IGNORECASE | re.DOTALL,
@@ -194,38 +139,26 @@ _DROP_RE = re.compile(
 _INSERT_RE = re.compile(
     r"^INSERT\s+(INTO|OVERWRITE)\s+([\w.`]+)\s+(.+)$", re.IGNORECASE | re.DOTALL
 )
-_PROP_RE = re.compile(r"'((?:[^'])*)'\s*=\s*'((?:[^'])*)'")
+_FROM_LIST_ENDERS = {
+    "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "UNION", "INTERSECT",
+    "EXCEPT", "WINDOW", "JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS",
+    "ON", "USING", "INSERT", "SELECT",
+}
 _MI_BRANCH_RE = re.compile(
     r"^INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?([\w.`]+)\s+(.+)$",
     re.IGNORECASE | re.DOTALL,
 )
-_MI_TAIL_KW_RE = re.compile(
-    r"\b(WHERE|GROUP|HAVING|ORDER|LIMIT|DISTRIBUTE|SORT|CLUSTER|WINDOW)\b",
-    re.IGNORECASE,
-)
+_MI_TAIL_KWS = {"WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "DISTRIBUTE",
+                "SORT", "CLUSTER", "WINDOW"}
 
 
 def _splice_from(body: str, from_text: str) -> str:
     """Insert ``FROM <from_text>`` into a FROM-less multi-insert SELECT
     body, before the first top-level tail keyword (WHERE/GROUP BY/...)
     — Hive multi-insert branches carry no FROM of their own."""
-    spans = _quoted_spans(body)
-    depth_at: list[int] = []
-    depth = 0
-    for idx, ch in enumerate(body):
-        if any(a <= idx < b for a, b in spans):
-            depth_at.append(depth)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        depth_at.append(depth)
-    for m in _MI_TAIL_KW_RE.finditer(body):
-        if depth_at[m.start()] == 0 and not any(
-            a <= m.start() < b for a, b in spans
-        ):
-            return f"{body[:m.start()]}FROM {from_text} {body[m.start():]}"
+    for t in lex(body).keywords:
+        if t.depth == 0 and t.text.upper() in _MI_TAIL_KWS:
+            return f"{body[:t.start]}FROM {from_text} {body[t.start:]}"
     return f"{body} FROM {from_text}"
 
 # sql-client SET / RESET (Flink 1.11 `SET k=v`; later quoted forms
@@ -277,133 +210,30 @@ _FLINK_CONF_MAP = {
 _SQL_DIALECTS = ("default", "hive")
 
 
+def _unquote(literal: str) -> str:
+    """Body of a quoted literal token, doubled quotes unescaped (the
+    Calcite rule: ``'it''s'`` is ``it's``)."""
+    q = literal[0]
+    return literal[1:-1].replace(q + q, q)
+
+
 def _strip_quotes(v: str) -> str:
     v = v.strip()
-    if len(v) >= 2 and v[0] == v[-1] and v[0] in "'\"":
-        return v[1:-1]
-    return v
-
-# FLIP-113 dynamic table options: `t /*+ OPTIONS('k'='v', ...) */`.
-# The option block matches quoted strings atomically so a ')' inside a
-# quoted value (e.g. a path) cannot end the hint early.
-_HINT_RE = re.compile(
-    r"([`\w.]+)\s*/\*\+\s*OPTIONS\s*\(((?:'[^']*'|[^')])*)\)\s*\*/", re.IGNORECASE
-)
+    toks = lex(v).toks
+    return _unquote(v) if len(toks) == 1 and toks[0].kind == "str" else v
 
 
-def _comment_spans(s: str) -> list[tuple[int, int]]:
-    """[start, end) spans of SQL comments (``--`` to end-of-line and
-    ``/* */`` blocks) OUTSIDE string literals/backtick identifiers.
-    Text rewrites must skip these — a window/lateral-shaped fragment in
-    a comment is not a call (found by review: a balanced
-    ``-- see SESSION(user)`` fragment crashed the group-window
-    renderer)."""
-    spans: list[tuple[int, int]] = []
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in "'\"`":
-            q = ch
-            i += 1
-            while i < n:
-                if q in "'\"" and s[i] == "\\":
-                    i += 2
-                    continue
-                if s[i] == q:
-                    if s[i + 1 : i + 2] == q:
-                        i += 2
-                        continue
-                    i += 1
-                    break
-                i += 1
-        elif ch == "-" and s[i + 1 : i + 2] == "-":
-            j = s.find("\n", i)
-            j = n if j == -1 else j
-            spans.append((i, j))
-            i = j
-        elif ch == "/" and s[i + 1 : i + 2] == "*":
-            j = s.find("*/", i + 2)
-            j = n if j == -1 else j + 2
-            spans.append((i, j))
-            i = j
-        else:
-            i += 1
-    return spans
-
-
-def _split_call_args(s: str, open_idx: int) -> tuple[list[str], int]:
-    """Split the balanced-paren argument list opening at ``open_idx``
-    into top-level comma-separated args (quote-aware: single/double
-    quotes with backslash + doubled-quote escapes, backtick
-    identifiers); returns (args, close_idx).  The ONE shared scanner
-    for call-shaped rewrites (group windows, LATERAL TABLE) — per the
-    CLAUDE.md scanner lesson, do not fork another copy."""
-    depth = 0
-    args: list[str] = []
-    start = open_idx + 1
-    i, n = open_idx, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in "'\"`":
-            q = ch
-            i += 1
-            while i < n:
-                if q in "'\"" and s[i] == "\\":
-                    i += 2
-                    continue
-                if s[i] == q:
-                    if s[i + 1 : i + 2] == q:
-                        i += 2
-                        continue
-                    break
-                i += 1
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                args.append(s[start:i].strip())
-                return args, i
-        elif ch == "," and depth == 1:
-            args.append(s[start:i].strip())
-            start = i + 1
-        i += 1
-    raise ValueError("unbalanced parentheses in call argument list")
-
-
-def _quoted_spans(s: str) -> list[tuple[int, int]]:
-    """[start, end) spans of STRING LITERALS (single/double quotes,
-    doubled-quote escapes) — SQL text scanners must track quotes, or a
-    hint-shaped substring inside a literal gets rewritten.  Backtick
-    regions are scanned (so a quote inside an identifier cannot open a
-    phantom literal) but NOT reported: a hinted table reference may
-    itself be backtick-quoted and must stay rewritable."""
-    spans: list[tuple[int, int]] = []
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in "'\"`":
-            start = i
-            i += 1
-            while i < n:
-                if ch in "'\"" and s[i] == "\\":
-                    i += 2  # lexer rule: backslash escapes the next char
-                    continue
-                if s[i] == ch:
-                    if s[i + 1 : i + 2] == ch:
-                        # doubled-char escape stays inside — '' and ""
-                        # in literals, `` in backtick identifiers
-                        # (Spark escapes ` as `` inside identifiers)
-                        i += 2
-                        continue
-                    i += 1
-                    break
-                i += 1
-            if ch != "`":
-                spans.append((start, i))
-        else:
-            i += 1
-    return spans
+def _props(text: str) -> dict[str, str]:
+    """``'k'='v'`` pairs of a WITH / SET / OPTIONS list, read from the
+    lexer's string tokens (a quote, comma or paren inside a value is
+    value text)."""
+    toks = [t for t in lex(text).toks if t.kind != "comment"]
+    return {
+        _unquote(k.text): _unquote(v.text)
+        for k, eq, v in zip(toks, toks[1:], toks[2:])
+        if eq.text == "=" and k.kind == v.kind == "str"
+        and k.text[0] == v.text[0] == "'"
+    }
 
 
 @dataclass
@@ -550,6 +380,41 @@ def merge_like(src: CreateTable, new: CreateTable,
     return out
 
 
+def _parse_columns(out: CreateTable, items: list[str]) -> None:
+    """Fill ``out`` from the column block's top-level items: watermark,
+    primary key, computed and physical columns."""
+    for item in items:
+        wm = _WM_RE.match(item)
+        if wm:
+            col, expr = wm.group(1), wm.group(2).strip()
+            iv = _INTERVAL_RE.search(expr)
+            if not iv:
+                raise ValueError(f"unsupported watermark expr: {expr!r}")
+            out.watermark_col = col
+            out.watermark_delay = f"{iv.group(1)} {iv.group(2).lower()}s"
+            continue
+        pk = _PK_RE.match(item)
+        if pk:
+            out.primary_key = [c.strip().replace("`", "") for c in pk.group(1).split(",")]
+            continue
+        comp = _COMPUTED_RE.match(item)
+        # "name AS expr" is computed UNLESS the token after the name
+        # parses as a type (physical columns never contain ' AS ')
+        if comp and not re.match(
+            r"^(ARRAY|MAP|ROW|MULTISET|" + "|".join(_SIMPLE_TYPES) + r")\b",
+            comp.group(2).strip().upper(),
+        ):
+            out.computed[_strip_ticks(comp.group(1))] = comp.group(2).strip()
+            continue
+        phys = _PHYSICAL_RE.match(item)
+        if not phys:
+            raise ValueError(f"cannot parse column definition: {item!r}")
+        cname, ctype, notnull, _comment = phys.groups()
+        out.columns.append(
+            (_strip_ticks(cname), flink_type_to_spark(ctype), bool(notnull))
+        )
+
+
 def parse_create_table_base(sql: str) -> CreateTable:
     """Lenient CREATE TABLE parse for the LIKE form: the column block
     and the WITH clause are both optional (``CREATE TABLE t2 LIKE t1``
@@ -573,43 +438,13 @@ def parse_create_table_base(sql: str) -> CreateTable:
     out = CreateTable(name=_strip_ticks(name), temporary=bool(temp))
     rest = rest.strip()
     if rest.startswith("("):
-        body, after = _balanced_block(rest, 0)
-        for item in _split_top_all(body, ","):
-            wm = _WM_RE.match(item)
-            if wm:
-                col, expr = wm.group(1), wm.group(2).strip()
-                iv = _INTERVAL_RE.search(expr)
-                if not iv:
-                    raise ValueError(f"unsupported watermark expr: {expr!r}")
-                out.watermark_col = col
-                out.watermark_delay = f"{iv.group(1)} {iv.group(2).lower()}s"
-                continue
-            pk = _PK_RE.match(item)
-            if pk:
-                out.primary_key = [
-                    c.strip().replace("`", "") for c in pk.group(1).split(",")
-                ]
-                continue
-            comp = _COMPUTED_RE.match(item)
-            if comp and not re.match(
-                r"^(ARRAY|MAP|ROW|MULTISET|"
-                + "|".join(_SIMPLE_TYPES) + r")\b",
-                comp.group(2).strip().upper(),
-            ):
-                out.computed[_strip_ticks(comp.group(1))] = comp.group(2).strip()
-                continue
-            phys = _PHYSICAL_RE.match(item)
-            if not phys:
-                raise ValueError(f"cannot parse column definition: {item!r}")
-            cname, ctype, notnull, _c = phys.groups()
-            out.columns.append(
-                (_strip_ticks(cname), flink_type_to_spark(ctype), bool(notnull))
-            )
-        rest = rest[after:].strip()
+        items, close = lex(rest).call(0)
+        _parse_columns(out, items)
+        rest = rest[close + 1:].strip()
     tail = _CREATE_TABLE_TAIL_RE.match(rest) if rest else None
     if tail:
         part_by, props_s = tail.groups()
-        out.props = dict(_PROP_RE.findall(props_s))
+        out.props = _props(props_s)
         if part_by:
             out.partitioned_by = [
                 c.strip().replace("`", "") for c in part_by.split(",")
@@ -632,46 +467,16 @@ def parse_create_table(sql: str) -> CreateTable:
     if not head:
         raise ValueError("not a CREATE TABLE ... WITH (...) statement")
     temp, _ine, name = head.groups()
-    body, after = _balanced_block(s, head.end() - 1)
-    tail = _CREATE_TABLE_TAIL_RE.match(s[after:])
+    items, close = lex(s).call(head.end() - 1)
+    tail = _CREATE_TABLE_TAIL_RE.match(s[close + 1:])
     if not tail:
         raise ValueError("CREATE TABLE must end with WITH ('connector'=..., ...)")
     part_by, props_s = tail.groups()
     out = CreateTable(name=_strip_ticks(name), temporary=bool(temp))
-    out.props = {k: v for k, v in _PROP_RE.findall(props_s)}
+    out.props = _props(props_s)
     if part_by:
         out.partitioned_by = [c.strip().replace("`", "") for c in part_by.split(",")]
-    for item in _split_top_all(body, ","):
-        wm = _WM_RE.match(item)
-        if wm:
-            col, expr = wm.group(1), wm.group(2).strip()
-            iv = _INTERVAL_RE.search(expr)
-            if not iv:
-                raise ValueError(f"unsupported watermark expr: {expr!r}")
-            n, unit = iv.group(1), iv.group(2).lower()
-            out.watermark_col = col
-            out.watermark_delay = f"{n} {unit}s"
-            continue
-        pk = _PK_RE.match(item)
-        if pk:
-            out.primary_key = [c.strip().replace("`", "") for c in pk.group(1).split(",")]
-            continue
-        comp = _COMPUTED_RE.match(item)
-        # "name AS expr" is computed UNLESS the token after the name
-        # parses as a type (physical columns never contain ' AS ')
-        if comp and not re.match(
-            r"^(ARRAY|MAP|ROW|MULTISET|" + "|".join(_SIMPLE_TYPES) + r")\b",
-            comp.group(2).strip().upper(),
-        ):
-            out.computed[_strip_ticks(comp.group(1))] = comp.group(2).strip()
-            continue
-        phys = _PHYSICAL_RE.match(item)
-        if not phys:
-            raise ValueError(f"cannot parse column definition: {item!r}")
-        cname, ctype, notnull, _comment = phys.groups()
-        out.columns.append(
-            (_strip_ticks(cname), flink_type_to_spark(ctype), bool(notnull))
-        )
+    _parse_columns(out, items)
     if not out.props.get("connector"):
         raise ValueError(f"CREATE TABLE {out.name}: missing 'connector' property")
     return out
@@ -905,9 +710,7 @@ class DdlCatalog:
             # CREATE of the merged declaration.
             lm = None
             for cand in _LIKE_RE.finditer(s):
-                if not any(
-                    a <= cand.start() < b for a, b in _quoted_spans(s)
-                ):
+                if lex(s).is_code(cand.start()):
                     lm = cand
             if lm is not None:
                 src_cat, src_db, src_tbl = self._resolve_name(lm.group(1))
@@ -944,7 +747,7 @@ class DdlCatalog:
             name = _strip_ticks(ma.group(1))
             from dataclasses import replace as _dcr
 
-            overrides = dict(_PROP_RE.findall(ma.group(2)))
+            overrides = _props(ma.group(2))
             ct = self.tables[name]
             self._evict_hint_aliases(name)
             self.tables[name] = _dcr(ct, props={**ct.props, **overrides})
@@ -1028,25 +831,11 @@ class DdlCatalog:
         Returns NotImplemented when the text is not a multi-insert
         (e.g. a plain ``FROM``-first SELECT, which Spark parses).
         """
-        spans = _quoted_spans(s)
-        offs: list[int] = []
-        depth = 0
-        i, n = 0, len(s)
-        while i < n:
-            hit = next((b for a, b in spans if a <= i < b), None)
-            if hit is not None:
-                i = hit
-                continue
-            ch = s[i]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and s[i : i + 6].upper() == "INSERT" and (
-                i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_")
-            ) and not (s[i + 6 : i + 7].isalnum() or s[i + 6 : i + 7] == "_"):
-                offs.append(i)
-            i += 1
+        # the statement's own ';'-split drops its comments, so no spliced
+        # source or branch can end inside one
+        s = " ".join(lex(s).split(";"))
+        offs = [t.start for t in lex(s).keywords
+                if t.depth == 0 and t.text.upper() == "INSERT"]
         if not offs:
             return NotImplemented
         src = s[4 : offs[0]].strip()
@@ -1157,7 +946,7 @@ class DdlCatalog:
         if m:
             name = re.match(r"^create\s+catalog\s+(\w+)", s,
                             re.IGNORECASE).group(1)
-            props = dict(_PROP_RE.findall(s))
+            props = _props(s)
             ctype = props.get("type", "generic_in_memory")
             if ctype != "generic_in_memory":
                 raise ValueError(
@@ -1244,47 +1033,22 @@ class DdlCatalog:
         return NotImplemented
 
     @staticmethod
-    def _from_list_spans(s: str) -> list[tuple[int, int]]:
-        """Character ranges of FROM table-lists: from each FROM keyword
-        (outside string literals) to the clause keyword / closing paren
-        that ends its list at the same paren depth.  Commas inside these
-        spans separate table references; commas anywhere else are
-        select-list / argument separators."""
-        spans_q = _quoted_spans(s) + _comment_spans(s)
-
-        def in_lit(p: int) -> bool:
-            return any(a <= p < b for a, b in spans_q)
-
-        enders = {
-            "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "UNION",
-            "INTERSECT", "EXCEPT", "WINDOW", "JOIN", "INNER", "LEFT",
-            "RIGHT", "FULL", "CROSS", "ON", "USING", "INSERT", "SELECT",
-        }
-        out: list[tuple[int, int]] = []
-        for m in re.finditer(r"\bFROM\b", s, re.IGNORECASE):
-            if in_lit(m.start()):
+    def _from_list_commas(s: str) -> set[int]:
+        """Offsets of the commas that separate FROM-list table
+        references: from each FROM keyword to the clause keyword or
+        closing paren that ends its list, at the FROM's own depth.  Every
+        other comma separates select-list items or call arguments."""
+        toks, kws = lex(s).toks, set(lex(s).keywords)
+        out: set[int] = set()
+        for i, t in enumerate(toks):
+            if t not in kws or t.text.upper() != "FROM":
                 continue
-            i, depth = m.end(), 0
-            while i < len(s):
-                if in_lit(i):
-                    i += 1
-                    continue
-                c = s[i]
-                if c == "(":
-                    depth += 1
-                elif c == ")":
-                    if depth == 0:
-                        break
-                    depth -= 1
-                elif (depth == 0 and (c.isalpha() or c == "_")
-                      and not (s[i - 1].isalnum() or s[i - 1] == "_")):
-                    w = re.match(r"\w+", s[i:]).group(0)
-                    if w.upper() in enders:
-                        break
-                    i += len(w)
-                    continue
-                i += 1
-            out.append((m.end(), i))
+            for u in toks[i + 1:]:
+                if u.depth < t.depth or (u.depth == t.depth and u in kws
+                                         and u.text.upper() in _FROM_LIST_ENDERS):
+                    break
+                if u.depth == t.depth and u.text == ",":
+                    out.add(u.start)
         return out
 
     def _qualify_names(self, s: str) -> str:
@@ -1299,12 +1063,14 @@ class DdlCatalog:
         pats: list[tuple[str, str, bool]] = []
         cur_cat, cur_db = self.current
         for (cat, db, tbl), alias in self.qualified.items():
+            # anchored at the optional opening backtick, so a quoted
+            # path (`cat`.`db`.`t`) matches at its first token
             pats.append((
-                rf"\b`?{re.escape(cat)}`?\s*\.\s*`?{re.escape(db)}`?"
-                rf"\s*\.\s*`?{re.escape(tbl)}`?\b", alias, False))
+                rf"(?<![\w.`])`?{re.escape(cat)}`?\s*\.\s*`?{re.escape(db)}`?"
+                rf"\s*\.\s*`?{re.escape(tbl)}`?(?!\w)", alias, False))
             if cat == cur_cat:
                 pats.append((
-                    rf"(?<![\w.`]){re.escape(db)}\s*\.\s*`?"
+                    rf"(?<![\w.`])`?{re.escape(db)}`?\s*\.\s*`?"
                     rf"{re.escape(tbl)}`?(?![\w.])", alias, False))
             if (cat, db) == (cur_cat, cur_db) and alias != tbl:
                 # Bare registered names rewrite ONLY in table positions
@@ -1324,50 +1090,17 @@ class DdlCatalog:
                 pats.append((
                     rf"(,\s*)`?{re.escape(tbl)}`?(?![\w.])",
                     rf"\g<1>{alias}", True))
-        spans = _quoted_spans(s)
-        cspans = _comment_spans(s)
-        fspans = self._from_list_spans(s)
-
-        def in_literal(pos: int) -> bool:
-            return any(a <= pos < b for a, b in spans)
-
-        def in_skip(pos: int) -> bool:
-            return (any(a <= pos < b for a, b in spans)
-                    or any(a <= pos < b for a, b in cspans))
-
-        def in_fromlist(pos: int) -> bool:
-            # the match must sit in a FROM-list span AND at paren depth 0
-            # within it — a comma inside a subquery or call-argument list
-            # that happens to live inside the span separates columns /
-            # arguments, not table references (``FROM t1, (SELECT x,
-            # orders FROM o) sub`` must not rewrite the inner column).
-            # Spans NEST (a derived table's inner FROM opens its own span
-            # inside the outer one): the match counts when ANY containing
-            # span sees it at depth 0 — only the span whose list the
-            # comma actually continues does.  The depth scan skips quoted
-            # AND comment spans (an unbalanced paren in a comment must
-            # not skew it).
-            for a, b in fspans:
-                if not (a <= pos < b):
-                    continue
-                depth = 0
-                for i in range(a, pos):
-                    if in_skip(i):
-                        continue
-                    if s[i] == "(":
-                        depth += 1
-                    elif s[i] == ")":
-                        depth -= 1
-                if depth == 0:
-                    return True
-            return False
-
+        commas = self._from_list_commas(s)
         for pat, repl, flist_only in pats:
             out, last = [], 0
             for m in re.finditer(pat, s):
-                if in_literal(m.start()):
-                    continue
-                if flist_only and not in_fromlist(m.start()):
+                # a FROM-list continuation (``FROM a, b``) rewrites only
+                # at a comma that separates table references — one inside
+                # a subquery or call-argument list separates columns /
+                # arguments (``FROM t1, (SELECT x, orders FROM o) sub``
+                # must not rewrite the inner column)
+                if not lex(s).is_code(m.start()) or (
+                        flist_only and m.start() not in commas):
                     continue
                 out.append(s[last:m.start()])
                 out.append(m.expand(repl))
@@ -1375,9 +1108,7 @@ class DdlCatalog:
             if out:
                 out.append(s[last:])
                 s = "".join(out)
-                spans = _quoted_spans(s)
-                cspans = _comment_spans(s)
-                fspans = self._from_list_spans(s)
+                commas = self._from_list_commas(s)
         return s
 
     # -- FLIP-113 dynamic table options ----------------------------------
@@ -1406,25 +1137,19 @@ class DdlCatalog:
         connectors (kafka/datagen) get the alias registered without a
         batch view — ``stream_table(alias)`` serves it.
 
-        Hint-shaped text inside a string literal is left alone: matches
-        starting inside a quoted region (single/double/backtick, with
-        doubled-quote escapes — the execute_script scanner's rules) are
-        not rewritten or stripped.
+        Hints are lexer tokens, so hint-shaped text inside a string
+        literal or a comment is left alone.
         """
         from dataclasses import replace as _dc_replace
 
-        spans = _quoted_spans(s)
+        if "/*+" not in s:
+            return s
 
-        def repl(m: re.Match) -> str:
-            if any(a <= m.start() < b for a, b in spans):
-                return m.group(0)  # inside a string literal: untouched
-            name = _strip_ticks(m.group(1))
+        def repl(ref: str, overrides: dict[str, str]) -> str:
+            name = _strip_ticks(ref)
             ct = self.tables.get(name)
-            if ct is None:
-                return m.group(1)  # keep the reference verbatim, drop the hint
-            overrides = dict(_PROP_RE.findall(m.group(2)))
-            if not overrides:
-                return m.group(1)
+            if ct is None or not overrides:
+                return ref  # keep the reference verbatim, drop the hint
             cache_key = (name, tuple(sorted(overrides.items())))
             alias = self._hint_aliases.get(cache_key)
             if alias is None:
@@ -1440,7 +1165,26 @@ class DdlCatalog:
                     pass  # stream-only connector: stream_table(alias) serves it
             return alias
 
-        return _HINT_RE.sub(repl, s)
+        toks = lex(s).toks
+        out, last = [], 0
+        for i, t in enumerate(toks):
+            if (t.text != "/*+" or i + 1 == len(toks)
+                    or toks[i + 1].text.upper() != "OPTIONS"):
+                continue
+            end = next((u for u in toks[i + 1:] if u.kind == "hint"), None)
+            # the hinted name: the adjacent word / `ident` / '.' run
+            j = i
+            while j > 0 and (toks[j - 1].kind in ("word", "ident")
+                             or toks[j - 1].text == ".") and (
+                    j == i or toks[j - 1].end == toks[j].start):
+                j -= 1
+            if end is None or end.text != "*/" or j == i:
+                continue
+            out.append(s[last:toks[j].start])
+            out.append(repl(s[toks[j].start:toks[i - 1].end],
+                            _props(s[t.end:end.start])))
+            last = end.end
+        return "".join(out) + s[last:]
 
     # -- CREATE TABLE ----------------------------------------------------
 

@@ -81,6 +81,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog
+from ..sql_lex import lex
 from ..streaming import nfa
 
 _MR_RE = re.compile(
@@ -166,32 +167,6 @@ _MEASURE_RE = re.compile(
     r"\s+AS\s+(?P<alias>\w+)$",
     re.IGNORECASE,
 )
-
-
-def _split_top(text: str) -> list[str]:
-    """Split on commas not nested in parentheses or quotes."""
-    parts, depth, q, cur = [], 0, None, []
-    for ch in text:
-        if q:
-            cur.append(ch)
-            if ch == q:
-                q = None
-            continue
-        if ch in "'\"":
-            q = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-            continue
-        cur.append(ch)
-    tail = "".join(cur).strip()
-    if tail:
-        parts.append(tail)
-    return parts
 
 
 def _parse_quant(tok: str) -> tuple[str, int, int | None, bool]:
@@ -427,13 +402,11 @@ def _state_ranges(s) -> dict[str, tuple]:
     top-level numeric-comparison conjuncts of the state's own row
     condition (``V.col OP number`` / bare refs) — the range twin of
     the literal-equality prover."""
-    from ..streaming.nfa_lowering import _split_top_and
-
     src = s.sql_cond if s.py_cond is not None else s.cond
     if src is None:
         return {}
     out: dict[str, tuple] = {}
-    for part in _split_top_and(src):
+    for part in lex(src).split("AND"):
         m = _RANGE_RE.match(part.strip())
         if not m:
             continue
@@ -488,8 +461,6 @@ def _leading_ctes(sql: str) -> list[tuple[str, str]]:
     pairs where ``defs_text`` is every definition up to and including
     this one — enough context to evaluate a CTE that references earlier
     CTEs (``WITH a AS (...), b AS (SELECT * FROM a) ...``)."""
-    from ..ddl import _balanced_block
-
     m = re.match(r"^\s*WITH\s+", sql, re.IGNORECASE)
     if not m:
         return []
@@ -501,7 +472,7 @@ def _leading_ctes(sql: str) -> list[tuple[str, str]]:
         if not nm:
             return out
         name = nm.group(1)
-        _, after = _balanced_block(sql, i + nm.end() - 1)
+        after = lex(sql).call(i + nm.end() - 1)[1] + 1
         out.append((name, sql[m.end():after].strip()))
         j = after
         while j < len(sql) and sql[j].isspace():
@@ -536,30 +507,22 @@ def expand_mr_factors(
     a DataFrame and the match runs over it directly — the enclosing
     statement keeps its WITH clause untouched.  Documented delta: a
     parenthesized subquery as the source still raises (register a view
-    or lift it into a CTE first).  Keyword text inside string literals
-    is ignored (``_quoted_spans`` scan).
+    or lift it into a CTE first).  Keyword text inside string literals,
+    comments and backtick identifiers is ignored (``sql_lex``).
 
     Created views are recorded in :data:`last_factor_views` (reset per
     call) so ``ddl.execute`` can drop them once the enclosing statement
     has been analyzed — they are statement-scoped, not session views.
     """
-    from ..ddl import _balanced_block, _quoted_spans
-
     del last_factor_views[:]
     # SQL identifiers are case-insensitive: key by lowercase so a
     # factor written SRC finds the CTE declared src
     ctes = {name.lower(): defs for name, defs in _leading_ctes(sql)}
     out = sql
     while True:
-        spans = _quoted_spans(out)
-        kw = next(
-            (
-                c
-                for c in _MR_KW_RE.finditer(out)
-                if not any(a <= c.start() < b for a, b in spans)
-            ),
-            None,
-        )
+        lx = lex(out)
+        kw = next((c for c in _MR_KW_RE.finditer(out) if lx.is_code(c.start())),
+                  None)
         if kw is None:
             return out
         tb = _MR_TABLE_BEFORE_RE.search(out[: kw.start()])
@@ -576,7 +539,8 @@ def expand_mr_factors(
             i += 1
         if i >= len(out) or out[i] != "(":
             raise ValueError("MATCH_RECOGNIZE must be followed by (...)")
-        body, after = _balanced_block(out, i)
+        close = lx.call(i)[1]
+        body, after = out[i + 1:close], close + 1
         view = f"__mr_factor_{_MR_FACTOR_N[0]}"
         _MR_FACTOR_N[0] += 1
         events = None
@@ -643,7 +607,7 @@ def match_recognize(
     # MEASURES and DEFINE as "rows labeled with any member".
     subsets: dict[str, tuple[str, ...]] = {}
     if c.group("subset"):
-        for part in _split_top(c.group("subset")):
+        for part in lex(c.group("subset")).split(","):
             sm = re.match(r"^(\w+)\s*=\s*\(([\w\s,]*)\)$", part.strip())
             if not sm:
                 raise ValueError(f"unparseable SUBSET item {part!r}")
@@ -672,7 +636,7 @@ def match_recognize(
     defines: dict[str, str] = {}
     xconds: dict[str, tuple[str, tuple[str, ...], str]] = {}
     prev_cols: set[tuple[str, int]] = set()
-    for d in _split_top(c.group("define")):
+    for d in lex(c.group("define")).split(","):
         dm = re.match(r"(?P<var>\w+)\s+AS\s+(?P<cond>.+)$", d, re.IGNORECASE | re.DOTALL)
         if not dm:
             raise ValueError(f"unparseable DEFINE {d!r}")
@@ -886,7 +850,7 @@ def match_recognize(
     aggbacks: list[tuple[str, object, str, str]] = []
     runbacks: list[tuple[str, object, str, str]] = []  # RUNNING measures
     _classifier_alias: str | None = None
-    for i, mtext in enumerate(_split_top(c.group("measures"))):
+    for i, mtext in enumerate(lex(c.group("measures")).split(",")):
         mn = re.match(
             r"^MATCH_NUMBER\s*\(\s*\)\s+AS\s+(?P<alias>\w+)$", mtext.strip(), re.IGNORECASE
         )

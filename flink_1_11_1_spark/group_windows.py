@@ -29,11 +29,12 @@ SURVEY §4).  The GROUP BY item itself becomes the window struct, which
 is exactly how Spark expresses the same plan, so grouping keys,
 HAVING, and ORDER BY all keep working untouched.
 
-The scanner follows the repo's SQL-text discipline: string literals
-are skipped (``_quoted_spans``), arguments are balanced-paren parsed
-(a ')' inside a nested call or literal cannot end the argument list),
-and the function-name match requires a non-word/non-dot left boundary
-so ``user_session(`` or ``my.TUMBLE(`` never rewrite.
+The rewrite reads the shared lexer (``sql_lex``): calls inside string
+literals, comments and backtick identifiers are skipped, arguments are
+balanced-paren parsed (a ')' inside a nested call or literal cannot end
+the argument list), and the function-name match requires a
+non-word/non-dot left boundary so ``user_session(`` or ``my.TUMBLE(``
+never rewrite.
 """
 
 from __future__ import annotations
@@ -41,7 +42,7 @@ from __future__ import annotations
 import re
 from decimal import Decimal
 
-from .ddl import _comment_spans, _quoted_spans, _split_call_args
+from .sql_lex import lex
 
 _GW_RE = re.compile(
     r"(?<![\w.])(TUMBLE|HOP|SESSION)(_START|_END|_ROWTIME|_PROCTIME)?\s*\(",
@@ -121,9 +122,6 @@ def _duration(text: str) -> str:
     return f"{_interval_ms(text)} milliseconds"
 
 
-# argument splitting: the shared quote-aware scanner (ddl._split_call_args)
-
-
 def _render(fn: str, suffix: str, args: list[str]) -> str:
     fn = fn.upper()
     struct = "session_window" if fn == "SESSION" else "window"
@@ -201,17 +199,16 @@ def rewrite_group_windows(sql: str) -> str:
     """
     if not _GW_RE.search(sql):
         return sql
-    skip = _quoted_spans(sql) + _comment_spans(sql)
+    lx = lex(sql)
     calls: list[tuple[int, int, str, str, list[str]]] = []
     pos = 0
     for m in _GW_RE.finditer(sql):
         if m.start() < pos:
             continue  # inside an argument list already consumed
-        if any(a <= m.start() < b for a, b in skip):
-            continue  # inside a string literal or comment
-        open_idx = sql.index("(", m.end() - 1)
+        if not lx.is_code(m.start()):
+            continue  # inside a string literal, comment or identifier
         try:
-            args, close_idx = _split_call_args(sql, open_idx)
+            args, close_idx = lx.call(m.end() - 1)
         except ValueError:
             # unbalanced parens after the token — not a real call
             # (e.g. a window-shaped fragment in an unterminated

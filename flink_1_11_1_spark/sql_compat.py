@@ -20,13 +20,16 @@ UDTF-correlate query carries.
     temporal joins (a 1.12 SQL feature) stay on the dedicated
     operators (operators/joins.asof_join,
     streaming/temporal.streaming_temporal_rowtime_join).
+
+Both rewrites read the shared lexer (``sql_lex``): a match inside a
+string literal, comment or backtick identifier is left alone.
 """
 
 from __future__ import annotations
 
 import re
 
-from .ddl import _comment_spans, _quoted_spans, _split_call_args
+from .sql_lex import lex
 
 _LATERAL_TABLE_RE = re.compile(
     r"(?<![\w.])LATERAL\s+TABLE\s*\(", re.IGNORECASE
@@ -44,15 +47,15 @@ def rewrite_lateral_table(sql: str) -> str:
     """``LATERAL TABLE (call)`` → ``LATERAL call`` (alias list kept)."""
     if not _LATERAL_TABLE_RE.search(sql):
         return sql
-    skip = _quoted_spans(sql) + _comment_spans(sql)
+    lx = lex(sql)
     out: list[str] = []
     pos = 0
     for m in _LATERAL_TABLE_RE.finditer(sql):
-        if m.start() < pos or any(a <= m.start() < b for a, b in skip):
+        if m.start() < pos or not lx.is_code(m.start()):
             continue
-        open_idx = sql.index("(", m.end() - 1)
+        open_idx = m.end() - 1
         try:
-            _args, close_idx = _split_call_args(sql, open_idx)
+            _args, close_idx = lx.call(open_idx)
         except ValueError:
             continue  # unterminated fragment — leave untouched
         inner = sql[open_idx + 1 : close_idx].strip()
@@ -80,11 +83,11 @@ def rewrite_for_system_time(
     streaming/temporal.streaming_temporal_rowtime_join)."""
     if "SYSTEM_TIME" not in sql.upper():
         return sql
-    skip = _quoted_spans(sql) + _comment_spans(sql)
+    lx = lex(sql)
     out: list[str] = []
     pos = 0
     for m in _FOR_SYSTEM_TIME_RE.finditer(sql):
-        if m.start() < pos or any(a <= m.start() < b for a, b in skip):
+        if m.start() < pos or not lx.is_code(m.start()):
             continue
         attr = m.group(0).split()[-1].replace("`", "")
         col = attr.split(".")[-1].rstrip("()")

@@ -73,6 +73,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..sql_lex import lex
+
 # Caps on the tier-A enumeration: beyond these the unrolled plan stops
 # being obviously better than the fold (and the expression tree grows).
 _MAX_VECTORS = 16
@@ -92,67 +94,18 @@ _DOTREF_RE = re.compile(r"\b([A-Za-z_]\w*)\.([A-Za-z_]\w*)\b")
 _EQ_LIT_RE = re.compile(r"^\s*(?:(\w+)\s*\.\s*)?(\w+)\s*=\s*'([^']*)'\s*$")
 
 
-def _segments(text: str):
-    """Split into (is_quoted, chunk) pairs, single-quoted SQL strings
-    kept intact so rewrites never touch literals."""
-    res: list[tuple[bool, str]] = []
-    buf: list[str] = []
-    quoted = False
-    for ch in text:
-        buf.append(ch)
-        if ch == "'":
-            if quoted:
-                res.append((True, "".join(buf)))
-                buf = []
-            else:
-                if len(buf) > 1:
-                    res.append((False, "".join(buf[:-1])))
-                buf = ["'"]
-            quoted = not quoted
-    if buf:
-        res.append((quoted, "".join(buf)))
-    return res
-
-
-def _sub_outside_quotes(text: str, fn) -> str:
-    return "".join(chunk if q else fn(chunk) for q, chunk in _segments(text))
-
-
-def _split_top_and(cond: str) -> list[str]:
-    """Split on top-level AND (outside quotes and parens)."""
-    parts, depth, cur = [], 0, []
-    i, n = 0, len(cond)
-    quoted = False
-    while i < n:
-        ch = cond[i]
-        if ch == "'":
-            quoted = not quoted
-        elif not quoted:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and cond[i : i + 3].upper() == "AND":
-                before = cond[i - 1] if i else " "
-                after = cond[i + 3] if i + 3 < n else " "
-                if not (before.isalnum() or before == "_") and not (
-                    after.isalnum() or after == "_"
-                ):
-                    parts.append("".join(cur))
-                    cur = []
-                    i += 3
-                    continue
-        cur.append(ch)
-        i += 1
-    parts.append("".join(cur))
-    return [p.strip() for p in parts if p.strip()]
+def _sub_code(pat: re.Pattern, fn, text: str) -> str:
+    """``pat.sub(fn, text)`` for matches that start in code (string
+    literals, comments and backtick identifiers are left alone)."""
+    lx = lex(text)
+    return pat.sub(lambda m: fn(m) if lx.is_code(m.start()) else m.group(0), text)
 
 
 def _literal_conjuncts(cond: str, this: str | None) -> dict[str, str]:
     """``col -> literal`` for top-level ``col = 'lit'`` conjuncts that
     constrain the CURRENT row (bare or ``this``-prefixed refs only)."""
     out: dict[str, str] = {}
-    for part in _split_top_and(cond):
+    for part in lex(cond).split("AND"):
         m = _EQ_LIT_RE.match(part)
         if m and (m.group(1) is None or m.group(1) == this or m.group(1) == "THIS"):
             out[m.group(2)] = m.group(3)
@@ -285,20 +238,17 @@ def _instantiate(
             return "NULL"
         return ref(col, offs[-1])  # bare Var.col = Flink LAST default
 
-    def rewrite(chunk: str) -> str:
-        chunk = _FNREF_RE.sub(fnrepl, chunk)
-        return _DOTREF_RE.sub(dotrepl, chunk)
-
-    out = _sub_outside_quotes(sql_cond, rewrite)
+    out = _sub_code(_DOTREF_RE, dotrepl, _sub_code(_FNREF_RE, fnrepl, sql_cond))
     if false:
         return None
     # validate: no stray identifiers survive (they would resolve against
     # the raw frame and silently change semantics)
-    probe = re.sub(r"`[^`]*`", " ", out)
-    probe = re.sub(r"'[^']*'", " ", probe)
-    for tok in re.finditer(r"\b([A-Za-z_]\w*)\b\s*(\()?", probe):
-        name, is_fn = tok.group(1), tok.group(2)
-        if is_fn or name.upper() in _SQL_KEYWORDS or name.upper() == "INTERVAL":
+    toks = lex(out).toks
+    for t, nxt in zip(toks, (*toks[1:], None)):
+        name = t.text
+        if (t.kind != "word" or not (name[0].isalpha() or name[0] == "_")
+                or (nxt is not None and nxt.text == "(")
+                or name.upper() in _SQL_KEYWORDS or name.upper() == "INTERVAL"):
             continue
         raise _Unlowerable(f"unmapped identifier {name!r} in cross-variable DEFINE")
     return out

@@ -18,9 +18,9 @@ to Catalyst (the analyzed DataFrame is returned untouched).  Frames /
 orders Flink itself rejects raise ``UnsupportedStreamingPlan`` with the
 capability-matrix style message instead of Spark's late generic one.
 
-Text discipline: every scan is quote/comment/paren-aware via the shared
-helpers in ``ddl`` (the CLAUDE.md scanner lesson — no greedy regex over
-SQL text).
+Text discipline: every scan reads the shared lexer (``sql_lex``), so
+quotes, comments, backtick identifiers and parens mean what they mean
+to Spark's parser — no greedy regex over SQL text.
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sql_lex import lex
 from .capability import UnsupportedStreamingPlan
 
 _OVER_RE = re.compile(r"\bOVER\s*\(", re.IGNORECASE)
@@ -50,57 +51,17 @@ _PROCTIME_ERR = (
 def _has_over(text: str) -> bool:
     """True when an OVER keyword appears OUTSIDE quotes/comments (a
     string literal containing 'OVER (' must not trigger routing —
-    review finding; the CLAUDE.md scanner discipline)."""
-    return any(tok == "OVER" for _, tok, _ in _scan_top_level(text))
+    review finding)."""
+    return any(t.text.upper() == "OVER" for t in lex(text).keywords)
 
 # clause keywords that end the FROM part / are unsupported at top level
 _TAIL_KWS = ("GROUP", "HAVING", "ORDER", "LIMIT", "UNION", "INTERSECT",
              "EXCEPT", "WINDOW", "QUALIFY")
 
 
-def _skip_spans(s: str) -> list[tuple[int, int]]:
-    from ..ddl import _comment_spans, _quoted_spans
-
-    return _quoted_spans(s) + _comment_spans(s)
-
-
-def _scan_top_level(s: str, start: int = 0):
-    """Yield (i, ch_or_word, depth) for positions outside quotes and
-    comments; identifiers are yielded whole (uppercased) once."""
-    spans = _skip_spans(s)
-
-    def skipped(p: int) -> int:
-        for a, b in spans:
-            if a <= p < b:
-                return b
-        return -1
-
-    depth = 0
-    i, n = start, len(s)
-    while i < n:
-        b = skipped(i)
-        if b >= 0:
-            i = b
-            continue
-        c = s[i]
-        if c == "(":
-            depth += 1
-            yield i, "(", depth
-            i += 1
-        elif c == ")":
-            yield i, ")", depth
-            depth -= 1
-            i += 1
-        elif (c.isalpha() or c == "_") and (
-            i == 0 or not (s[i - 1].isalnum() or s[i - 1] in "_$`.")
-        ):
-            m = re.match(r"[\w$]+", s[i:])
-            w = m.group(0)
-            yield i, w.upper(), depth
-            i += len(w)
-        else:
-            yield i, c, depth
-            i += 1
+def _top_words(s: str) -> list:
+    """Depth-0 keyword / name tokens of ``s``."""
+    return [t for t in lex(s).keywords if t.depth == 0]
 
 
 def _proctime_ordered(s: str) -> bool:
@@ -109,29 +70,11 @@ def _proctime_ordered(s: str) -> bool:
     before Catalyst sees the statement: the PROCTIME shim resolves to
     current_timestamp(), which Spark rejects as a window order with an
     opaque nondeterminism error instead of the capability row."""
-    toks = [t for _, t, _ in _scan_top_level(s)
-            if t in "()" or re.fullmatch(r"[\w$]+", t)]
+    kws = set(lex(s).keywords)
+    toks = [t.text.upper() for t in lex(s).toks
+            if t in kws or t.text in ("(", ")")]
     pat = ["ORDER", "BY", "PROCTIME", "(", ")"]
     return any(toks[i:i + 5] == pat for i in range(len(toks) - 4))
-
-
-def _split_top_commas(s: str) -> list[str]:
-    """Top-level comma split of a select list (quote/paren-aware)."""
-    items, last = [], 0
-    for i, tok, depth in _scan_top_level(s):
-        if tok == "," and depth == 0:
-            items.append(s[last:i].strip())
-            last = i + 1
-    items.append(s[last:].strip())
-    return items
-
-
-def _find_kw(s: str, kw: str, start: int = 0) -> int:
-    """Position of the first top-level (depth-0) keyword, or -1."""
-    for i, tok, depth in _scan_top_level(s, start):
-        if depth == 0 and tok == kw:
-            return i
-    return -1
 
 
 def _split_select(s: str) -> tuple[str, str] | None:
@@ -139,7 +82,8 @@ def _split_select(s: str) -> tuple[str, str] | None:
     m = _SELECT_RE.match(s)
     if not m:
         return None
-    pos = _find_kw(s, "FROM", m.end())
+    pos = next((t.start for t in _top_words(s)
+                if t.start >= m.end() and t.text.upper() == "FROM"), -1)
     if pos < 0:
         return None
     return s[m.end():pos].strip(), s[pos + 4:].strip()
@@ -176,7 +120,7 @@ def _parse_over_spec(spec: str) -> _OverSpec:
             "streaming OVER requires ORDER BY the rowtime attribute "
             "(Flink: StreamExecOverAggregate)")
     part = tuple(
-        _strip_name(c) for c in _split_top_commas(m.group("part"))
+        _strip_name(c) for c in lex(m.group("part")).split(",")
     ) if m.group("part") else ()
     tail = m.group("tail").strip()
     fm = re.search(r"\b(ROWS|RANGE)\b", tail, re.IGNORECASE)
@@ -226,21 +170,19 @@ _AGGS = {"SUM", "COUNT", "AVG", "MIN", "MAX"}
 
 def _parse_over_item(item: str):
     """``FN(args) OVER (spec) [AS alias]`` → (fn, arg, spec, alias)."""
-    from ..ddl import _split_call_args
-
     m = _AGG_ITEM_RE.match(item)
     if not m:
         raise UnsupportedStreamingPlan(
             f"streaming OVER select item must be a plain "
             f"aggregate-call item, got {item!r}")
     fn = m.group(1).upper()
-    args, close = _split_call_args(item, item.index("(", m.end() - 1))
+    args, close = lex(item).call(m.end() - 1)
     rest = item[close + 1:]
     mo = re.match(r"\s*OVER\s*(\()", rest, re.IGNORECASE)
     if not mo:
         raise UnsupportedStreamingPlan(
             f"could not parse OVER clause in select item {item!r}")
-    spec_args, spec_close = _split_call_args(rest, mo.end(1) - 1)
+    spec_args, spec_close = lex(rest).call(mo.end(1) - 1)
     spec = ", ".join(a for a in spec_args)
     alias_txt = rest[spec_close + 1:]
     alias = None
@@ -399,13 +341,9 @@ def _try_topn(spark: SparkSession, s: str):
     outer_list, rest = split
     if not rest.startswith("("):
         return None
-    # matching close paren of the derived table
-    close = -1
-    for i, tok, depth in _scan_top_level(rest):
-        if tok == ")" and depth == 1:
-            close = i
-            break
-    if close < 0:
+    try:  # matching close paren of the derived table
+        _args, close = lex(rest).call(0)
+    except ValueError:
         return None
     inner = rest[1:close].strip()
     after = rest[close + 1:].strip()
@@ -418,15 +356,13 @@ def _try_topn(spark: SparkSession, s: str):
     if not isplit:
         return None
     inner_list, inner_rest = isplit
-    items = _split_top_commas(inner_list)
+    items = lex(inner_list).split(",")
     rn_idx, rn_alias, rn_spec = -1, None, None
     for i, it in enumerate(items):
         m = re.match(
             r"^\s*ROW_NUMBER\s*\(\s*\)\s*OVER\s*(\()", it, re.IGNORECASE)
         if m:
-            from ..ddl import _split_call_args
-
-            spec_args, spec_close = _split_call_args(it, m.end(1) - 1)
+            spec_args, spec_close = lex(it).call(m.end(1) - 1)
             ma2 = _ALIAS_RE.match(it[spec_close + 1:])
             if not ma2:
                 return None
@@ -495,15 +431,15 @@ def _try_topn(spark: SparkSession, s: str):
         return got
 
     part_cols = [
-        _resolve(c) for c in _split_top_commas(m.group("part"))
+        _resolve(c) for c in lex(m.group("part")).split(",")
     ] if m.group("part") else []
     order_cols = []
-    for c in _split_top_commas(m.group("ord")):
+    for c in lex(m.group("ord")).split(","):
         desc = bool(re.search(r"\bDESC\b", c, re.IGNORECASE))
         name = _resolve(
             re.sub(r"\b(ASC|DESC)\b", "", c, flags=re.IGNORECASE).strip())
         order_cols.append(F.col(name).desc() if desc else F.col(name).asc())
-    outer_items = [it for it in _split_top_commas(outer_list)]
+    outer_items = lex(outer_list).split(",")
     if rn_alias in df_inner.columns:
         raise UnsupportedStreamingPlan(
             f"the rank alias {rn_alias!r} collides with an inner output "
@@ -552,12 +488,12 @@ def route_streaming_select(spark: SparkSession, s: str):
         raise UnsupportedStreamingPlan(
             "SELECT DISTINCT over a streaming OVER aggregate is not "
             "supported (deduplicate the result explicitly)")
-    for kw in _TAIL_KWS:
-        if _find_kw(rest, kw) >= 0:
+    for t in _top_words(rest):
+        if t.text.upper() in _TAIL_KWS:
             raise UnsupportedStreamingPlan(
                 f"streaming OVER statements cannot carry a top-level "
-                f"{kw} clause (Flink plans OVER before these too)")
-    items = _split_top_commas(select_list)
+                f"{t.text.upper()} clause (Flink plans OVER before these too)")
+    items = lex(select_list).split(",")
     aggs: list[tuple[str, str | None, str]] = []
     specs: set[tuple] = set()
     final_items: list[str] = []

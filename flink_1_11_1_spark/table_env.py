@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from . import catalog as _catalog
 from . import functions as _functions
 from .session import configure, get_spark
+from .sql_lex import lex
 
 
 @dataclass
@@ -434,11 +435,10 @@ class TableEnvironment:
         """Run a ``;``-separated Flink SQL script (the sql-client
         ``-f script.sql`` surface): statements execute in order through
         ``execute_sql``; the last statement's result (if any) is
-        returned.  The split respects single- and double-quoted strings
-        (with doubled-quote escapes) and backtick identifiers, so WITH
-        properties or literals containing ``;`` or ``--`` survive.
-        Outside quotes, ``--``-to-end-of-line comments are stripped
-        (sql-client convention).
+        returned.  Statements are the top-level ``;`` split of the shared
+        lexer (``sql_lex``), so a ``;`` inside a string literal, backtick
+        identifier or comment does not end a statement; comments are
+        dropped (sql-client convention), hints are kept.
 
         Dialect delta, deliberate and documented: the split treats a
         backslash before a quote as an escape UNCONDITIONALLY, because
@@ -449,40 +449,10 @@ class TableEnvironment:
         backslash is an ordinary character) is not representable in ANY
         Spark mode — spell it ``'tail\\\\'``.  Splitting by the lexer's
         rule keeps the bracketing identical to what the downstream
-        parser will see in both conf modes."""
-        stmts, buf = [], []
-        quote: str | None = None  # current open quote char, if any
-        i, n = 0, len(script)
-        while i < n:
-            ch = script[i]
-            if quote is not None:
-                buf.append(ch)
-                if ch == "\\" and quote in "'\"" and i + 1 < n:
-                    buf.append(script[i + 1])  # escaped char stays literal
-                    i += 2
-                    continue
-                if ch == quote:
-                    if quote in "'\"" and script[i + 1 : i + 2] == quote:
-                        buf.append(quote)  # doubled-quote escape ('')
-                        i += 2
-                        continue
-                    quote = None
-                i += 1
-                continue
-            if ch in "'\"`":
-                quote = ch
-                buf.append(ch)
-            elif ch == "-" and script[i : i + 2] == "--":
-                while i < n and script[i] != "\n":
-                    i += 1
-                continue
-            elif ch == ";":
-                stmts.append("".join(buf))
-                buf = []
-            else:
-                buf.append(ch)
-            i += 1
-        stmts.append("".join(buf))
+        parser will see in both conf modes.  By the same lexer rule a
+        ``--`` comment whose line ends in a backslash continues onto the
+        next line (the sql-client ends it at the newline)."""
+        stmts = lex(script).split(";")
         # Multi-sink common-subgraph reuse (Flink's
         # StreamCommonSubGraphBasedOptimizer, script-scoped): any view
         # referenced by >= 2 INSERT statements gets a LAZY
@@ -503,8 +473,6 @@ class TableEnvironment:
         result: DataFrame | None = None
         try:
             for s in stmts:
-                if not s.strip():
-                    continue
                 result = self.execute_sql(s)
                 m = _CREATE_VIEW_RE.match(s.strip().rstrip(";").strip())
                 if m and _strip_ticks(m.group(3)) in shared:

@@ -154,7 +154,7 @@ def test_hint_alias_evicted_on_recreate(spark, tmp_path):
 
 def test_hint_shaped_text_inside_literal_untouched(spark):
     """Hint-shaped text inside a string literal must survive the FLIP-113
-    rewrite verbatim (ADVICE r5: _HINT_RE was not quote-aware)."""
+    rewrite verbatim (ADVICE r5: the hint regex was not quote-aware)."""
     from flink_1_11_1_spark.table_env import TableEnvironment
 
     tenv = TableEnvironment(spark)
@@ -229,27 +229,29 @@ def test_bare_reset_unsets_all_session_properties(spark):
         spark.conf.set("spark.sql.shuffle.partitions", prior)
 
 
-def test_quoted_spans_doubled_backtick_identifier():
+def _string_spans(s):
+    from flink_1_11_1_spark.sql_lex import lex
+
+    return [(t.start, t.end) for t in lex(s).toks if t.kind == "str"]
+
+
+def test_lex_doubled_backtick_identifier():
     """An identifier like `a``b` must not end the backtick scan early
     and open a phantom quoted region that swallows later hint text
     (ADVICE r6)."""
-    from flink_1_11_1_spark.ddl import _quoted_spans
-
     s = "SELECT `a``b` FROM t WHERE x = 'lit''eral' AND y = 2"
-    spans = _quoted_spans(s)
+    spans = _string_spans(s)
     # exactly one string-literal span, covering 'lit''eral'
     assert len(spans) == 1
     start, end = spans[0]
     assert s[start:end] == "'lit''eral'"
 
 
-def test_quoted_spans_backslash_escape_in_literal():
+def test_lex_backslash_escape_in_literal():
     """Backslash-escaped quotes stay inside the literal, matching the
     lexer rule execute_script follows."""
-    from flink_1_11_1_spark.ddl import _quoted_spans
-
     s = r"SELECT 'a\'b' AS s, 'c' AS t"
-    spans = _quoted_spans(s)
+    spans = _string_spans(s)
     assert [s[a:b] for a, b in spans] == [r"'a\'b'", "'c'"]
 
 
@@ -525,6 +527,35 @@ def test_qualified_bare_name_rewrite_anchored(spark, tmp_path):
     finally:
         tenv.execute_sql("USE CATALOG default_catalog")
         tenv.execute_sql("DROP TABLE anc_cat.adb.anchors")
+
+
+def test_backtick_qualified_catalog_name_rewrite(spark, tmp_path):
+    """A catalog-qualified name written with backticks (Flink SQL's
+    ```cat`.`db`.`t``` form) rewrites to the session alias like the bare
+    form, whether every part or only some are quoted."""
+    from flink_1_11_1_spark.table_env import TableEnvironment
+
+    tenv = TableEnvironment(spark)
+    p = str(tmp_path / "bq_t")
+    spark.range(3).selectExpr("id", "id * 7 AS v").write.parquet(p)
+    tenv.execute_sql("CREATE CATALOG bq_cat WITH ('type'='generic_in_memory')")
+    tenv.execute_sql("CREATE DATABASE bq_cat.bdb")
+    tenv.execute_sql(f"""CREATE TABLE bq_cat.bdb.bt (id BIGINT, v BIGINT)
+        WITH ('connector'='filesystem', 'path'='{p}', 'format'='parquet')""")
+    try:
+        for ref in ("`bq_cat`.`bdb`.`bt`", "`bq_cat`.bdb.bt",
+                    "bq_cat.`bdb`.`bt`", "bq_cat.bdb.bt"):
+            rows = tenv.execute_sql(f"SELECT sum(v) AS s FROM {ref}").collect()
+            assert rows[0].s == 21, ref
+        # the db-qualified form under the catalog, backticks included
+        tenv.execute_sql("USE CATALOG bq_cat")
+        rows = tenv.execute_sql(
+            "SELECT count(*) AS n FROM `bdb`.`bt` a JOIN bdb.`bt` b "
+            "ON a.id = b.id").collect()
+        assert rows[0].n == 3
+    finally:
+        tenv.execute_sql("USE CATALOG default_catalog")
+        tenv.execute_sql("DROP TABLE bq_cat.bdb.bt")
 
 
 def test_database_qualifier_mismatch_rejected(spark):

@@ -76,6 +76,19 @@ def test_parse_full_create_table():
     assert ct.spark_schema_ddl().startswith("user_id BIGINT")
 
 
+def test_computed_column_beside_nested_types():
+    """``c AS a > 1`` is a comparison, not a closing type bracket: only a
+    ``<`` right after ARRAY/MAP/ROW/MULTISET nests, so the column after
+    the computed one survives and nested type strings still split."""
+    ct = parse_create_table(
+        "CREATE TABLE t (a INT, c AS a > 1, b STRING, "
+        "r ROW<x INT, y MAP<STRING, INT>>) WITH ('connector' = 'print')")
+    assert ct.columns == [
+        ("a", "INT", False), ("b", "STRING", False),
+        ("r", "STRUCT<x: INT, y: MAP<STRING, INT>>", False)]
+    assert ct.computed == {"c": "a > 1"}
+
+
 def test_parse_rejects_missing_connector():
     with pytest.raises(ValueError, match="connector"):
         parse_create_table(
@@ -496,6 +509,36 @@ def test_options_hint_value_containing_parens_and_alias_reuse(tenv, tmp_path):
     assert tenv.execute_sql(q).collect()[0].n == 7  # repeat: cached alias
     assert len(tenv.ddl.tables) == n_tables
     tenv.execute_sql("DROP TABLE hint_paren")
+
+
+def test_escaped_property_values_in_with_and_hint(tenv, tmp_path):
+    """A ``''`` inside a WITH or OPTIONS value is one quote (Calcite's
+    unescaping): ``'path'='.../it''s'`` reads the directory ``it's``,
+    declared or hinted."""
+    pdir = tmp_path / "it's"
+    tenv.spark.range(3).selectExpr("id AS a").write.parquet(str(pdir))
+    quoted = str(pdir).replace("'", "''")
+    ct = parse_create_table(
+        f"CREATE TABLE esc_t (a BIGINT COMMENT 'it''s a') COMMENT 'x''y' "
+        f"WITH ('connector' = 'filesystem', 'path' = '{quoted}', "
+        "'format' = 'parquet')")
+    assert ct.props["path"] == str(pdir)
+    assert ct.columns == [("a", "BIGINT", False)]
+    tenv.execute_sql(
+        f"CREATE TABLE esc_decl (a BIGINT) WITH ('connector' = 'filesystem', "
+        f"'path' = '{quoted}', 'format' = 'parquet')")
+    tenv.execute_sql(
+        f"CREATE TABLE esc_hint (a BIGINT) WITH ('connector' = 'filesystem', "
+        f"'path' = '{SF_SMOKE}/no_such_dir', 'format' = 'parquet')")
+    try:
+        assert tenv.execute_sql(
+            "SELECT count(*) AS n FROM esc_decl").collect()[0].n == 3
+        assert tenv.execute_sql(
+            "SELECT count(*) AS n FROM esc_hint "
+            f"/*+ OPTIONS('path'='{quoted}') */").collect()[0].n == 3
+    finally:
+        tenv.execute_sql("DROP TABLE esc_decl")
+        tenv.execute_sql("DROP TABLE esc_hint")
 
 
 def test_options_hint_stripped_keeps_backticks(tenv):

@@ -164,16 +164,19 @@ def test_for_system_time_rowtime_guard_wired_through_ddl(tenv, tmp_path):
         tenv.execute_sql("DROP TABLE gw_guard_t")
 
 
-def test_comment_spans_edges():
-    from flink_1_11_1_spark.ddl import _comment_spans
+def test_lex_comment_edges():
+    from flink_1_11_1_spark.sql_lex import lex
+
+    def comments(s):
+        return [(t.start, t.end) for t in lex(s).toks if t.kind == "comment"]
 
     # '--' inside a literal is not a comment
-    assert _comment_spans("SELECT 'a -- b' FROM t") == []
+    assert comments("SELECT 'a -- b' FROM t") == []
     # unterminated block comment runs to end
     s = "SELECT 1 /* open"
-    assert _comment_spans(s) == [(9, len(s))]
+    assert comments(s) == [(9, len(s))]
     # line comment without trailing newline runs to end
     s2 = "SELECT 1 -- note"
-    assert _comment_spans(s2) == [(9, len(s2))]
+    assert comments(s2) == [(9, len(s2))]
     # comment inside backticks is identifier text
-    assert _comment_spans("SELECT `a--b` FROM t") == []
+    assert comments("SELECT `a--b` FROM t") == []

@@ -157,6 +157,32 @@ def test_sql_over_range_interval_equals_batch(tenv, replay_dir):
     assert _keyed(got, lambda r: r.s) == _keyed(want, lambda r: r.s)
 
 
+def test_sql_over_qualified_column_named_like_keyword(tenv, replay_dir):
+    """A qualified column named like a clause keyword (``e.group``,
+    ``e.limit``, ``e.from``) is a name, not the GROUP / LIMIT / FROM
+    clause: Spark's default mode accepts it, so the OVER routing must
+    neither reject the statement nor split it there."""
+    from flink_1_11_1_spark.streaming.sql_over import _split_select
+
+    assert _split_select("SELECT e.from, x FROM t e") == ("e.from, x", "t e")
+    spark = tenv.spark
+    replay.events_stream(spark, replay_dir).selectExpr(
+        "user_id AS `group`", "event_id", "ts", "value", "0 AS `limit`"
+    ).createOrReplaceTempView("so_kw")
+    out = tenv.execute_sql(
+        "SELECT `group` AS user_id, event_id, sum(value) OVER (PARTITION "
+        "BY `group` ORDER BY ts ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) "
+        "AS s FROM so_kw e WHERE e.group IS NOT NULL AND e.limit = 0")
+    assert out.isStreaming
+    got, _ = replay.run_stream(out, "append", "so_kw_cols")
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("user_id").orderBy("ts").rowsBetween(-2, 0)
+    want = _batch_events(spark).select(
+        "user_id", "event_id", F.sum("value").over(w).alias("s")).collect()
+    assert _keyed(got, lambda r: r.s) == _keyed(want, lambda r: r.s)
+
+
 def test_sql_topn_pattern_routes_to_retract_stream(tenv, replay_dir, tmp_path):
     """The Flink rank pattern on a streaming aggregate returns a
     StreamingTopN handle whose folded retract records equal the batch

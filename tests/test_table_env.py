@@ -229,3 +229,25 @@ def test_create_temporal_table_function(spark):
     # order 1 at t=150 -> eur rate@100 (1.10); order 2 at 250 -> 1.20;
     # order 3 at t=50 predates any usd version -> dropped (inner)
     assert got == {1: 1.10, 2: 1.20}
+
+
+def test_execute_script_comment_backslash_continues(spark):
+    """Scripts split by Spark's lexer rules: a ``--`` comment whose line
+    ends in a backslash continues onto the next line, so that line's
+    statement is part of the comment (a documented dialect delta)."""
+    env = TableEnvironment(spark)
+    spark.catalog.dropTempView("bs_cont_v1")
+    spark.catalog.dropTempView("bs_cont_v2")
+    script = (
+        "CREATE TEMPORARY VIEW bs_cont_v1 AS SELECT 1 AS a;\n"
+        "-- data in C:\\tmp\\\n"
+        "CREATE TEMPORARY VIEW bs_cont_v2 AS SELECT 2 AS a;\n"
+        "SELECT 3 AS a"
+    )
+    try:
+        assert env.execute_script(script).first().a == 3
+        assert spark.catalog.tableExists("bs_cont_v1")
+        assert not spark.catalog.tableExists("bs_cont_v2")
+    finally:
+        spark.catalog.dropTempView("bs_cont_v1")
+        spark.catalog.dropTempView("bs_cont_v2")
