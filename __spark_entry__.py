@@ -94,11 +94,6 @@ def _green_rounds(artifact_dir: str | None = None) -> dict[str, int]:
     return out
 
 
-# Kept as the name tests/docs use; now computed, never hand-edited.
-_DRIVER_GREEN_HISTORY = frozenset(_green_rounds())
-
-
-
 # Unproven entries exceeding the 50-row driver window are deferred in
 # this order (shared-text TPC-H-style shapes first: one SQL string runs
 # on both engines, so a driver row adds the least new information).
@@ -116,8 +111,11 @@ _DEFER_FIRST: tuple[str, ...] = ()
 # splitting and the cross-variable DEFINE lowering read the same lexer),
 # then the CEP entries (their state conditions reach the same
 # conjunct split, which picks the lowering tier).
+# x_mad_outliers follows x_semdedup: its medians now leave NULL values
+# out, in the oracle and the Spark form.  The MR entries' aggregate and
+# column measures now join back through Column expressions.
 _REVERIFY_FIRST: tuple[str, ...] = (
-    "x_semdedup",
+    "x_semdedup", "x_mad_outliers",
     "x_sql_tumble", "x_sql_hop", "x_sql_session", "x_sql_lateral",
     "x_sql_system_time", "x_ddl_roundtrip", "x_ddl_like",
     "x_ddl_options_hint", "x_catalog_qualified", "x_hive_dialect",

@@ -1,10 +1,16 @@
 #!/usr/bin/env python
-"""BENCH driver: runs the declared suite + extension ops in one warm
-session at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
+"""Bench CLI: times every entry of ``__spark_entry__.queries()`` once,
+in name order, in one warm session at $SPARK_GRAFT_SF_DIR (default: the
+sf0.1 fixtures, ``catalog.DEFAULT_SF_DIR``) on local[$SPARK_GRAFT_CPUS],
+writes every timing to the detail file and prints ONE JSON line.
 
 Budget contract (BASELINE.md): each query within 2x of its matching
 shape row; suite wall-clock (incl. startup) under 300 s.
+
+The detail file records what this run measured and nothing else: no
+earlier run is read back.  Keep/revert decisions come from the paired
+parent/change runs of ``perfbench/``, not from comparing two bench runs;
+``load_probe`` and ``steal_s`` say how busy the host was.
 """
 
 from __future__ import annotations
@@ -14,310 +20,121 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
-from flink_1_11_1_spark import catalog, declared  # noqa: E402
-from flink_1_11_1_spark.extensions import registry  # noqa: E402
-from flink_1_11_1_spark.session import get_spark  # noqa: E402
+from __spark_entry__ import queries  # noqa: E402
+from flink_1_11_1_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
+from flink_1_11_1_spark.session import HOST_CPUS, cpus, get_spark  # noqa: E402
+
+HEADLINE = ("q03", "q05", "q22", "q34")  # BASELINE.md shape rows
+PROBE_SQL = "SELECT sum(id * 2) s, count(*) n FROM range(16777216) GROUP BY id % 64"
 
 
-def run_is_contended(load_probe: float, probe_floor: float | None) -> bool:
-    """True when this run's probe says the host is in a slow window.
+def steal_s(stat_line: str) -> float:
+    """Cumulative steal seconds on the aggregate ``cpu`` line of
+    /proc/stat (the 8th counter, in clock ticks)."""
+    fields = stat_line.split()
+    return int(fields[8]) / os.sysconf("SC_CLK_TCK") if len(fields) > 8 else 0.0
 
-    The gate adapts to the recorded idle floor (min probe ever seen,
-    tracked in the detail file — the probe query is data-independent,
-    so the floor is comparable across scales): anything 1.3x above it
-    is a degraded window (r14's 0.603 driver run vs the 0.423 idle
-    floor was exactly the poisoned case).  0.8 s is the absolute
-    fallback (idle reads 0.4-0.6 s on this box) when no floor is
-    recorded yet.
+
+def read_steal() -> float:
+    try:
+        with open("/proc/stat") as f:
+            return steal_s(f.readline())
+    except OSError:
+        return 0.0
+
+
+def sf_of(sf_dir: str) -> float | str:
+    """Scale factor named by the directory: ``.../sf0.1`` -> 0.1."""
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    return float(sf) if sf.replace(".", "").isdigit() else sf
+
+
+def detail_file(sf: float | str, n_cpus: int) -> str:
+    """sf0.1 at the host core count is the canonical record; every other
+    (sf, cpus) pair gets its own file, so it never overwrites that one."""
+    if sf == 0.1 and n_cpus == HOST_CPUS:
+        return "BENCH_DETAIL.json"
+    return f"BENCH_DETAIL_sf{sf}_c{n_cpus}.json"
+
+
+def measure(spark, sf_dir: str, names=None) -> dict:
+    """Warm up untimed, then time each named entry (default: all of
+    ``queries()``) once, in name order.  An entry that raises stops the
+    run.
+
+    The probe is a fixed, data-independent query run twice: the first
+    run warms the JIT, the second is timed and reported as
+    ``load_probe``.  q03, the heaviest headline shape, then runs once
+    untimed so the first timed entry does not absorb codegen warm-up.
+    ``steal_s`` is the host's steal time over warm-up and timed loop.
     """
-    if probe_floor and probe_floor > 0:
-        return load_probe > 1.3 * probe_floor
-    return load_probe > 0.8
+    runners = queries()
+    steal0 = read_steal()
+    spark.sql(PROBE_SQL).collect()
+    t0 = time.time()
+    spark.sql(PROBE_SQL).collect()
+    load_probe = round(time.time() - t0, 3)
+    runners["q03"](spark, sf_dir).collect()
+    timings = {}
+    for name in sorted(runners if names is None else names):
+        t0 = time.time()
+        runners[name](spark, sf_dir).collect()
+        timings[name] = round(time.time() - t0, 3)
+    return {
+        "load_probe": load_probe,
+        "steal_s": round(read_steal() - steal0, 2),
+        "queries": timings,
+    }
 
 
-def apply_retimer(
-    timings: dict[str, float],
-    prior: dict[str, float],
-    runners: dict,
-    budget: float = 20.0,
-    contended_run: bool = False,
-) -> tuple[dict[str, list[float]], dict[str, float]]:
-    """Re-time inflated readings, worst inflation ratio first.
-
-    Mutates ``timings``: a retimed entry keeps min(first, second); a
-    candidate the budget can't reach carries its prior forward and its
-    raw reading lands in the returned ``contended`` map (VERDICT r11
-    next #2 — never ship a single contention-inflated sample as the
-    round's value).  Returns (retimed_pairs, contended_raw_readings).
-
-    ``contended_run=True`` (probe-gated, VERDICT r14 next #3): when the
-    run's own load probe shows a degraded host window, min-of-2 would
-    only CONFIRM contention-inflated readings into the detail file
-    (round 14 shipped several such floors) — so every candidate carries
-    its prior instead and the raw reading is annotated; a real
-    regression still surfaces on the next clean-window run.
-    """
-    retimed: dict[str, list[float]] = {}
-    contended: dict[str, float] = {}
-    cands = [
-        (name, t) for name, t in timings.items()
-        if prior.get(name) and prior[name] > 0 and t >= 1.3 * prior[name]
-        and not (t < 0.4 and prior[name] < 0.4)  # sub-0.4 s jitter
-    ]
-    for name, t in sorted(
-        cands, key=lambda kv: kv[1] / prior[kv[0]], reverse=True
-    ):
-        if not contended_run and budget > 0 and t <= budget:
-            t0 = time.time()
-            runners[name]()
-            t2 = round(time.time() - t0, 3)
-            budget -= t2
-            retimed[name] = [t, t2]
-            timings[name] = min(t, t2)
-        else:
-            contended[name] = t
-            timings[name] = prior[name]
-    return retimed, contended
-
-
-def merge_detail(
-    detail_queries: dict[str, float],
-    prior: dict[str, float],
-    retimed: dict[str, list[float]],
-) -> dict[str, float]:
-    """Min-merge this run's detail values against the prior (VERDICT r12
-    next #6): the detail file is the cross-round retimer baseline, and
-    one slow (contended) run must not inflate it — a single reading
-    above the prior keeps the prior.  A reading that the retimer
-    CONFIRMED (min-of-2 still high → a real regression) records as-is;
-    so do improvements.
-    """
-    out = dict(detail_queries)
-    for n, t in out.items():
-        p = prior.get(n)
-        if p and p > 0 and n not in retimed and t > p:
-            out[n] = p
-    return out
+def summary_line(result: dict, detail: str) -> str:
+    """The one stdout line: run-level fields and the headline shapes.
+    Per-entry timings live in the detail file only, so the line does not
+    grow with the number of entries and stays under 1900 characters: a
+    caller that keeps only the last 2000 characters of stdout still gets
+    the whole line."""
+    q = result["queries"]
+    keys = ("metric", "value", "unit", "sf", "cpus", "load_probe", "steal_s")
+    return json.dumps(
+        {
+            **{k: result[k] for k in keys},
+            "entries": len(q),
+            "detail_file": detail,
+            "queries": {n: q[n] for n in HEADLINE if n in q},
+        },
+        separators=(",", ":"),
+    )
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     t_start = time.time()
     spark = get_spark("flink-1.11.1-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    catalog.register(spark, sf_dir)
-
-    # Load probe + warmup (round-7, VERDICT r6 "what's next" #4): the
-    # r5→r6 driver benches drifted ~1.35x uniformly from machine load,
-    # and the first suite entries absorb codegen/JIT warmup (q01 was
-    # 1.82x vs its own warm time).  So: (a) run a fixed data-independent
-    # probe twice — first untimed (JIT), second timed — and emit it as
-    # `load_probe` so cross-round ratios can be normalized; (b) run the
-    # heaviest headline shape (q03, full-lineitem agg) once untimed so
-    # the timed loop starts warm.
-    probe_sql = "SELECT sum(id * 2) s, count(*) n FROM range(16777216) GROUP BY id % 64"
-    spark.sql(probe_sql).collect()
-    t0 = time.time()
-    spark.sql(probe_sql).collect()
-    load_probe = round(time.time() - t0, 3)
-    spark.sql(declared.spark_text("q03")).collect()  # untimed warmup
-
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    prior: dict[str, float] = {}
-    probe_floor: float | None = None  # idle-probe memory for the gate
-    canonical_scale = True  # elision only at the canonical sf0.1 record
-    try:
-        with open(detail_path) as f:
-            _pd = json.load(f)
-        if _pd.get("sf") == sf_val:
-            prior = _pd.get("queries", {})
-            probe_floor = _pd.get("probe_floor") or _pd.get("load_probe")
-        else:
-            # A run at a different scale must neither retime against
-            # the canonical record nor clobber it (BENCH_DETAIL.json is
-            # the cross-round sf0.1 memory) — side file instead, which
-            # serves as this scale's RETIMER prior when present.  The
-            # ELISION tier stays off here (round-12 review): a smoke
-            # run at sf0.001 must execute every runner end-to-end — its
-            # job is catching crashes, not timing.
-            canonical_scale = False
-            detail_path = os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                f"BENCH_DETAIL_sf{sf}.json",
-            )
-            try:
-                with open(detail_path) as f:
-                    _sd = json.load(f)
-                if _sd.get("sf") == sf_val:
-                    prior = _sd.get("queries", {})
-                    probe_floor = _sd.get("probe_floor") or _sd.get("load_probe")
-            except Exception:
-                pass
-    except Exception:
-        pass
-
-    runners = {
-        qid: (lambda q=qid: spark.sql(declared.spark_text(q)).collect())
-        for qid in declared.QUERIES
-    }
-    runners.update(
-        (name, (lambda f=fn: f(spark, sf_dir).collect()))
-        for name, fn in registry.queries().items()
-    )
-
-    # Second elision tier (round 11, VERDICT r10 "next" #4): the suite
-    # outgrew the 300 s budget's comfort zone (215 s / 244 entries) and
-    # most entries are sub-second proven shapes whose timing carries no
-    # round-over-round information.  An entry is SKIP-eligible when it
-    # (a) has a prior recorded time under 1.5 s at this scale (raised
-    # from 1.0 s in round 12 — VERDICT r11 "next" #7's structural
-    # lever), (b) is not a BASELINE.md headline shape, and (c) is
-    # driver-proven (_DRIVER_GREEN_HISTORY — fresh entries always run).
-    # Of the
-    # eligible set, a deterministic rotating sample of 30 still runs
-    # each round (seed = number of BENCH_r*.json files ≈ round number,
-    # so the sample advances per round and every fast entry re-times
-    # every ~4–5 rounds); the rest carry their prior forward in the
-    # detail file and are counted in `queries_skipped`.  Correctness
-    # coverage is unaffected — every entry still runs in the driver
-    # window rotation and rehearse.py sweeps.  SPARK_GRAFT_BENCH_FULL=1
-    # disables the tier for a full timing sweep.
-    headline = {"q03", "q05", "q22", "q34"}  # BASELINE.md shape rows
-    skipped: list[str] = []
-    if prior and canonical_scale and not os.environ.get("SPARK_GRAFT_BENCH_FULL"):
-        import glob
-        import hashlib
-
-        try:
-            from __spark_entry__ import _DRIVER_GREEN_HISTORY as proven
-        except Exception:
-            proven = set()
-        seed = len(glob.glob(os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_r*.json")))
-        eligible = sorted(
-            n for n, t in prior.items()
-            if t < 1.5 and n in runners and n not in headline and n in proven
-        )
-        sample = set(sorted(
-            eligible,
-            key=lambda n: hashlib.md5(f"{seed}:{n}".encode()).hexdigest(),
-        )[:30])
-        skipped = [n for n in eligible if n not in sample]
-
-    timings: dict[str, float] = {}
-    for name, run in runners.items():
-        if name in skipped:
-            continue
-        t0 = time.time()
-        run()
-        timings[name] = round(time.time() - t0, 3)
-
-    # Noise control (round 9, VERDICT r8 "what's wrong" #1; hardened
-    # round 12 per VERDICT r11 "next" #2): an entry reading >= 1.3x its
-    # prior recorded time gets ONE re-run and the min is kept — at
-    # these magnitudes run-to-run spread is scheduler noise, and a
-    # second sample kills a false regression while a real one survives
-    # both runs.  Candidates are ordered by inflation RATIO descending
-    # (the round-11 cheapest-first order spent the whole budget on
-    # sub-2 s entries while the 2.5–4x contention-inflated graph trio
-    # shipped raw).  When the ~20 s budget exhausts — or a single
-    # reading alone exceeds it — the prior is carried forward and the
-    # raw reading recorded under `contended` instead of shipping one
-    # inflated sample as the round's value.
-    contended_run = run_is_contended(load_probe, probe_floor)
-    retimed, contended = apply_retimer(
-        timings, prior, runners, contended_run=contended_run
-    )
-
-    total = round(time.time() - t_start, 3)
-    try:
-        load_avg = round(os.getloadavg()[0], 2)
-    except OSError:
-        load_avg = None
+    measured = measure(spark, sf_dir)
     conf = spark.sparkContext.getConf()
-    config = {
-        "master": conf.get("spark.master"),
-        "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-        "aqe": spark.conf.get("spark.sql.adaptive.enabled"),
-        "driver_memory": conf.get("spark.driver.memory", "default"),
-        "spark_version": spark.version,
-    }
-    # The detail file keeps a value for EVERY entry (skipped ones carry
-    # their prior forward, listed under "carried") — it is the
-    # cross-round retimer memory and must not lose entries to the
-    # elision tier.  stdout reports only freshly-measured timings.
-    detail_queries = dict(timings)
-    for n in skipped:
-        detail_queries[n] = prior[n]
-    detail_queries = merge_detail(detail_queries, prior, retimed)
     result = {
         "metric": "suite_seconds",
-        "value": total,
+        "value": round(time.time() - t_start, 3),
         "unit": "sec",
-        "queries": detail_queries,
-        "sf": sf_val,
-        "load_probe": load_probe,
-        "probe_floor": round(min(probe_floor or load_probe, load_probe), 3),
-        "load_avg": load_avg,
-        "retimed": retimed,
-        "carried": skipped,
-        "contended": contended,
-        "config": config,
+        "sf": sf_of(sf_dir),
+        "cpus": cpus(),
+        "config": {
+            "master": conf.get("spark.master"),
+            "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+            "aqe": spark.conf.get("spark.sql.adaptive.enabled"),
+            "driver_memory": conf.get("spark.driver.memory", "default"),
+            "spark_version": spark.version,
+        },
+        **measured,  # load_probe, steal_s, queries
     }
-    # probe-gated contention note (VERDICT r11 next #2c): idle probe
-    # reads ~0.4–0.5 s on this box; the r11 contended driver run read
-    # 1.35.  Flag the run so a reader discounts absolute timings.
-    if contended_run or (load_avg or 0) > 16:
-        result["load_note"] = "contended"
-    # Full result (all timings + config) goes to a repo-committed file;
-    # stdout gets ONE compact line that must survive the driver's
-    # 2000-char stdout-tail capture (BENCH_r01–r04 all truncated
-    # mid-JSON → `parsed: null`).  If the full line is too long, drop
-    # the fastest sub-second timings (recoverable from the detail file)
-    # until it fits, and record how many were elided.
-    with open(detail_path, "w") as f:
+    detail = detail_file(result["sf"], result["cpus"])
+    with open(os.path.join(ROOT, detail), "w") as f:
         json.dump(result, f, indent=1)
-    budget = 1900
-    stdout_result = dict(result)
-    # fresh measurements only: contended entries hold carried priors in
-    # `timings`, so they are EXCLUDED here (like skipped ones) and their
-    # names emitted — a stdout reader must not mistake a carried prior
-    # for a fresh reading (ADVICE r12).
-    stdout_result["queries"] = {
-        k: v for k, v in timings.items() if k not in contended
-    }
-    stdout_result["carried"] = len(skipped)
-    stdout_result["contended"] = sorted(contended)  # raw readings in detail
-    line = json.dumps(stdout_result, separators=(",", ":"))
-    if len(line) > budget:
-        slim = dict(stdout_result)
-        slim.pop("config")
-        slim["retimed"] = len(retimed)  # pairs live in the detail file
-        slim["contended"] = len(contended)  # names live in the detail file
-        kept = dict(stdout_result["queries"])
-        # drop fastest-first, never the headline shapes; no speed floor —
-        # with 148 entries even >1 s timings must be elidable or the
-        # line outgrows the driver's 2000-char tail capture
-        for name, _ in sorted(timings.items(), key=lambda kv: kv[1]):
-            if len(json.dumps({**slim, "queries": kept}, separators=(",", ":"))) <= budget - 60:
-                break
-            if name not in headline:
-                kept.pop(name, None)
-        slim["queries"] = kept
-        # count only entries dropped by THIS budget pass — contended
-        # names were never in the stdout map (round-13 review: the old
-        # len(timings) base double-counted them against `contended`)
-        slim["queries_elided"] = len(stdout_result["queries"]) - len(kept)
-        slim["detail_file"] = "BENCH_DETAIL.json"
-        line = json.dumps(slim, separators=(",", ":"))
-    sys.stdout.flush()
-    print(line, flush=True)
+    print(summary_line(result, detail), flush=True)
 
 
 if __name__ == "__main__":

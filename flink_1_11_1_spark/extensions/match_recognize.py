@@ -28,7 +28,9 @@ SQL twin for a union reference).
 Measures: FIRST(V.col) / LAST(V.col) / V.col (= LAST, Flink's default
 for ONE ROW PER MATCH) / COUNT(V.*) / MATCH_NUMBER() (per-partition
 match ordinal, batch) / CLASSIFIER() (ALL ROWS PER MATCH only).
-``ts`` and ``event_id`` come
+``col`` may be a backtick-quoted identifier (a doubled backtick escapes
+a backtick), so a column whose name holds dots or quotes can be
+measured.  ``ts`` and ``event_id`` come
 straight from the match arrays; any other column is resolved with an
 event_id equi-join back to the source table (matches are small relative
 to the scanned events, so the join-back adds one shuffle of the match
@@ -163,10 +165,16 @@ def _parse_pattern(pattern: str) -> list[tuple]:
 _MEASURE_RE = re.compile(
     r"^(?:(?P<sem>RUNNING|FINAL)\s+)?"
     r"(?:(?P<fn>FIRST|LAST|COUNT|SUM|AVG|MIN|MAX)\s*\(\s*)?"
-    r"(?P<var>\w+)\.(?P<col>\w+|\*)(?:\s*,\s*(?P<off>\d+))?\s*\)?"
+    r"(?P<var>\w+)\.(?P<col>\w+|\*|`(?:[^`]|``)+`)(?:\s*,\s*(?P<off>\d+))?\s*\)?"
     r"\s+AS\s+(?P<alias>\w+)$",
     re.IGNORECASE,
 )
+
+
+def _col(name: str):
+    """Column reference to a source column by its exact name (a measure
+    may name a backtick-quoted column holding dots, quotes or backticks)."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def _parse_quant(tok: str) -> tuple[str, int, int | None, bool]:
@@ -845,7 +853,7 @@ def match_recognize(
 
     # measures (the match frame's key column keeps its source name/type)
     cols = [F.col(key)]
-    joinbacks: list[tuple[str, str]] = []  # (tmp id col, measure alias->source col)
+    joinbacks: list[tuple[str, str, str]] = []  # (tmp id col, measure alias, source col)
     # (fn, var-or-SUBSET-members, col, alias)
     aggbacks: list[tuple[str, object, str, str]] = []
     runbacks: list[tuple[str, object, str, str]] = []  # RUNNING measures
@@ -884,6 +892,8 @@ def match_recognize(
         fn = (mm.group("fn") or "LAST").upper()
         sem = (mm.group("sem") or "FINAL").upper()
         var, col, alias = mm.group("var"), mm.group("col"), mm.group("alias")
+        if col.startswith("`"):
+            col = col[1:-1].replace("``", "`")
         off = int(mm.group("off") or 0)
         if var not in variables and var not in subsets:
             raise ValueError(f"measure references unknown variable {var}")
@@ -960,7 +970,7 @@ def match_recognize(
             else:
                 idexpr = nfa.first_id(var) if fn == "FIRST" else nfa.last_id(var)
             cols.append(idexpr.alias(tmp))
-            joinbacks.append((tmp, f"{alias}:{col}"))
+            joinbacks.append((tmp, alias, col))
 
     if events.isStreaming and joinbacks:
         raise ValueError(
@@ -1018,10 +1028,9 @@ def match_recognize(
             out = out.localCheckpoint(eager=False)
             cols.append(F.col("_mid"))
         res = out.select(*cols)
-    for tmp, spec in joinbacks:
-        alias, col = spec.split(":")
+    for tmp, alias, col in joinbacks:
         side = events.select(
-            F.col("event_id").alias(f"{tmp}_k"), F.col(col).alias(alias)
+            F.col("event_id").alias(f"{tmp}_k"), _col(col).alias(alias)
         )
         res = res.join(side, res[tmp] == side[f"{tmp}_k"], "left").drop(tmp, f"{tmp}_k")
     if aggbacks:
@@ -1043,30 +1052,25 @@ def match_recognize(
         )
         need = sorted({col for _, _, col, _ in aggbacks})
         vals = events.select(
-            F.col("event_id").alias("_eid"), *[F.col(c) for c in need]
+            F.col("event_id").alias("_eid"), *[_col(c) for c in need]
         )
         agg_exprs = []
         for fn, var, col, alias in aggbacks:
-            pred = (
-                "_lbl IN (" + ", ".join(f"'{m}'" for m in var) + ")"
-                if isinstance(var, tuple)
-                else f"_lbl = '{var}'"
-            )
-            v = f"(CASE WHEN {pred} THEN `{col}` END)"
+            members = var if isinstance(var, tuple) else (var,)
+            v = F.when(F.col("_lbl").isin(*members), _col(col))
             # SUM/AVG accumulate in DECIMAL(28,10): double accumulation
             # is shuffle-order-dependent (non-associative), so the same
             # query could hash differently run to run; exact decimal
             # sums are order-free and cross-engine identical, cast back
             # to double once.  (1e-10 quantization of genuinely
             # irrational inputs is the documented price.)
-            if fn == "sum":
-                expr = f"cast(sum(cast({v} as decimal(28,10))) as double)"
-            elif fn == "avg":
-                expr = (f"cast(sum(cast({v} as decimal(28,10))) as double)"
-                        f" / count({v})")
+            if fn in ("sum", "avg"):
+                expr = F.sum(v.cast("decimal(28,10)")).cast("double")
+                if fn == "avg":
+                    expr = expr / F.count(v)
             else:
-                expr = f"{fn}({v})"
-            agg_exprs.append(F.expr(expr).alias(alias))
+                expr = F.min(v) if fn == "min" else F.max(v)
+            agg_exprs.append(expr.alias(alias))
         agg = pairs.join(vals, "_eid").groupBy("_mid").agg(*agg_exprs)
         res = res.join(agg, "_mid", "left").drop("_mid")
     if len(keys) > 1:

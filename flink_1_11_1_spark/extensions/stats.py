@@ -562,13 +562,15 @@ _MAD_V = (
 )
 
 # lower-median per event_type over a relation named {src} with columns
-# (event_type, {col})
+# (event_type, {col}); NULL values are left out, so a type whose values
+# are all NULL has no median row (the bucketed form below filters its
+# histogram the same way; its bucket join never matches a NULL row)
 _MAD_MED = """SELECT event_type, min({col}) AS {alias}
   FROM (
     SELECT event_type, {col},
            row_number() OVER (PARTITION BY event_type ORDER BY {col}) AS rn,
            count(*) OVER (PARTITION BY event_type) AS n
-    FROM {src}
+    FROM {src} WHERE {col} IS NOT NULL
   ) WHERE rn = cast(ceil(n / 2.0) as bigint) GROUP BY event_type"""
 
 _MAD_DEV = """SELECT v.event_type, abs(v.cents - m.median_cents) AS d
@@ -622,7 +624,8 @@ FROM (
              sum(cnt) OVER (PARTITION BY event_type ORDER BY bk
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
       FROM (SELECT event_type, {col} div 1000 AS bk, count(*) AS cnt
-            FROM {src} GROUP BY event_type, {col} div 1000)
+            FROM {src} WHERE {col} IS NOT NULL
+            GROUP BY event_type, {col} div 1000)
     ) WHERE target > below AND target <= cum
   ) h ON h.event_type = s.event_type AND h.bk = s.{col} div 1000
 ) WHERE lrn = target - below

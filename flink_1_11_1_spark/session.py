@@ -22,9 +22,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Cores this process may run on: the local[N] default when
+# $SPARK_GRAFT_CPUS is unset.
+HOST_CPUS = len(os.sched_getaffinity(0))
+
+
+def cpus() -> int:
+    """Local worker threads (and shuffle partitions) for this process."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", HOST_CPUS))
+
+
 # Confs that must be set before JVM start (builder-time).
 BUILDER_CONFS: dict[str, str] = {
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    "spark.sql.shuffle.partitions": str(cpus()),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -42,7 +52,7 @@ RUNTIME_CONFS: dict[str, str] = {
     # events.parquet stores INT64 TIMESTAMP(NANOS); Spark 4 refuses to
     # read it otherwise (FIXTURES.md "Canonical views").
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    "spark.sql.shuffle.partitions": str(cpus()),
 }
 
 
@@ -117,8 +127,7 @@ def configure(spark: SparkSession) -> SparkSession:
 def get_spark(app_name: str = "flink-1.11.1-spark", master: str | None = None) -> SparkSession:
     """Create (or fetch) the pinned engine session."""
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{cpus()}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in {**BUILDER_CONFS, **RUNTIME_CONFS}.items():
         builder = builder.config(k, v)

@@ -6,18 +6,17 @@ pattern/Pattern.java, SQL MATCH_RECOGNIZE via StreamExecMatch.  Scope is
 the S6 subset — ``Pattern.begin(A).followedBy(B).within(t)`` per key —
 the dominant production shape (funnel detection).
 
-Semantics (contract shared by all three implementations below): each A
-matches the FIRST B with ``a_ts <= b_ts <= a_ts + horizon`` (ties by B
-event id); overlapping A-horizons may share a B; matched/expired A's
+Semantics (contract shared by the streaming backend and the batch twin):
+each A matches the FIRST B with ``a_ts <= b_ts <= a_ts + horizon`` (ties
+by B event id); overlapping A-horizons may share a B; matched/expired A's
 leave the pending set, so state is bounded by the horizon (Flink's
 relative-time state cleanup).
 
-Two streaming backends, chosen automatically:
-- ``transformWithStateInPandas`` (Spark 4 native keyed-state API,
-  near-1:1 with Flink's KeyedProcessFunction) — preferred, but its state
-  protocol needs the ``protobuf`` python package;
-- ``applyInPandasWithState`` (Spark 3.2+ Arrow-based GroupState) —
-  no extra deps; state carried as array columns.
+The streaming backend is ``applyInPandasWithState`` (Spark 3.2+
+Arrow-based GroupState; no extra deps): the pending A's are carried as
+array columns of the group state.  Spark 4's ``transformWithStateInPandas``
+would be the closer match to Flink's KeyedProcessFunction, but its state
+protocol needs the ``protobuf`` python package.
 
 ``match_batch`` is the identical semantics as a batch window plan — the
 standalone batch operator AND the oracle for the streaming tests.
@@ -71,8 +70,7 @@ def _process_events(
     through unrelated events until its first B or horizon expiry.
     ``strict=True``: next (strict contiguity) — any intervening event
     that is not a B-match clears the pending A (Flink Pattern.next()).
-    Returns (matches, new_pending); shared by both streaming backends
-    so their semantics cannot drift.
+    Returns (matches, new_pending).
     """
     out: list[tuple] = []
     max_seen = 0
@@ -116,50 +114,6 @@ def _sorted_batch(rows: Iterator[pd.DataFrame]) -> pd.DataFrame:
 
 def _out_frame(out: list[tuple]) -> pd.DataFrame:
     return pd.DataFrame(out, columns=["user_id", "a_id", "b_id", "a_ts", "b_ts"])
-
-
-def has_transform_with_state() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-# ------------------------------------------- backend: transformWithState
-
-
-def _match_stream_tws(events: DataFrame, horizon_s: int, strict: bool = False) -> DataFrame:
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    horizon_us = horizon_s * 1_000_000
-
-    class FollowedByWithin(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.pending = handle.getListState("pending", "a_id LONG, a_ts LONG")
-
-        def handleInputRows(self, key, rows, timerValues):
-            events_pd = _sorted_batch(rows)
-            pend = [(int(r[0]), int(r[1])) for r in self.pending.get()]
-            out, pend = _process_events(key[0], events_pd, pend, horizon_us, strict)
-            self.pending.clear()
-            if pend:
-                self.pending.appendList(pend)
-            if out:
-                yield _out_frame(out)
-
-        def close(self) -> None:
-            pass
-
-    spark = events.sparkSession
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        FollowedByWithin(), MATCH_SCHEMA, outputMode="append", timeMode="None"
-    )
 
 
 # --------------------------------------- backend: applyInPandasWithState
@@ -218,10 +172,7 @@ def match_stream(
     from ..session import configure
 
     configure(events.sparkSession)  # ships this package to executors
-    flagged = _with_flags(events, a_cond, b_cond)
-    if has_transform_with_state():
-        return _match_stream_tws(flagged, horizon_s, strict)
-    return _match_stream_aip(flagged, horizon_s, strict)
+    return _match_stream_aip(_with_flags(events, a_cond, b_cond), horizon_s, strict)
 
 
 # ----------------------------------------------------------- batch twin

@@ -13,8 +13,7 @@ coverage is GUARANTEED: every case runs at least once every
 ``ceil(1/frac)`` rounds (round-12 review: an earlier per-round
 independent re-sample had no such bound — a case could sit out many
 consecutive seals).  Round number = count of committed
-CORRECTNESS_r*.json files, the same discipline as bench.py's elision
-sample.
+CORRECTNESS_r*.json files.
 """
 
 from __future__ import annotations

@@ -36,7 +36,7 @@ def test_driver_window_leads_with_unproven_entries():
     import __spark_entry__ as e
 
     names = list(e.queries())
-    fresh = [k for k in names if k not in e._DRIVER_GREEN_HISTORY]
+    fresh = [k for k in names if k not in e._green_rounds()]
     assert len(fresh) <= 50, f"{len(fresh)} unproven entries exceed the driver window"
     assert names[: len(fresh)] == fresh  # unproven first, proven rotations after
 

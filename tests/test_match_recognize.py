@@ -362,6 +362,31 @@ def test_aggregate_measures_hand_computed(spark):
     assert (r.s, r.m, r.lo, r.hi, r.c_id) == (6.5, 3.25, 2.5, 4.0, 4)
 
 
+def test_aggregate_measures_quoted_column_name(spark):
+    """A measure may name a backtick-quoted source column holding a
+    quote, a backtick and a dot: the aggregate and LAST join-backs refer
+    to it by its exact name, never through SQL text."""
+    sql = """
+    SELECT * FROM ev MATCH_RECOGNIZE (
+      PARTITION BY user_id
+      ORDER BY ts, event_id
+      MEASURES SUM(B.`it's ``v``.x`) AS s, MAX(B.`it's ``v``.x`) AS hi,
+               LAST(B.`it's ``v``.x`) AS b_last
+      ONE ROW PER MATCH
+      AFTER MATCH SKIP PAST LAST ROW
+      PATTERN (A B+ C)
+      DEFINE A AS A.event_type = 'A', B AS B.event_type = 'B',
+             C AS C.event_type = 'C'
+    )
+    """
+    ev = _events(
+        spark,
+        [(1, 0, "A", 1.0), (2, 5, "B", 2.5), (3, 9, "B", 4.0), (4, 12, "C", 9.0)],
+    ).withColumnRenamed("value", "it's `v`.x")
+    rows = match_recognize(spark, sql, events=ev).collect()
+    assert [(r.s, r.hi, r.b_last) for r in rows] == [(6.5, 4.0, 4.0)]
+
+
 def test_aggregate_measures_streaming_rejected(spark, tmp_path):
     sql = """
     SELECT * FROM ev MATCH_RECOGNIZE (

@@ -231,7 +231,7 @@ def test_s8_nfa_stream_equals_batch_iterative(spark, tmp_path):
 
 
 def test_s8_nfa_stream_equals_batch(spark, tmp_path):
-    """Streaming NFA (applyInPandasWithState, partials carried across
+    """Streaming NFA (applyInPandasWithState, partials kept across
     micro-batches) equals the batch fold on replayed events."""
     d = str(tmp_path / "replay")
     replay.write_replay(spark, SF_SMOKE, d, parts=6)

@@ -150,8 +150,10 @@ def test_mad_outliers_python_replay(spark):
 def test_mad_bucketed_median_matches_window(spark):
     """Round 15: the Spark side's bucket-refinement lower median must be
     VALUE-identical to the oracle's window form on random frames —
-    including negatives (trunc-division buckets are uneven but monotone)
-    and bucket-boundary values."""
+    including negatives (trunc-division buckets are uneven but monotone),
+    bucket-boundary values and NULL cents: a type whose values are mostly
+    or all NULL must neither vanish from one form nor rank its NULLs in
+    the other."""
     import random
 
     rnd = random.Random(715)
@@ -165,6 +167,11 @@ def test_mad_bucketed_median_matches_window(spark):
             rnd.randrange(10),
         ])
         rows.append((et, c))
+    # NULL cents: sprinkled over every type, a majority in t_most and the
+    # only values of t_null
+    rows += [(f"t{i % 4}", None) for i in range(40)]
+    rows += [("t_most", None)] * 30 + [("t_most", c) for c in (5, 7, 9)]
+    rows += [("t_null", None)] * 5
     df = spark.createDataFrame(rows, "event_type string, cents long")
     df.createOrReplaceTempView("x_mad_twin_src")
     try:
@@ -179,6 +186,8 @@ def test_mad_bucketed_median_matches_window(spark):
                 col="cents", alias="m", src="x_mad_twin_src")).collect()
         }
         assert win == bk
+        assert ("t_most", 7) in win
+        assert "t_null" not in {et for et, _ in win}
     finally:
         spark.catalog.dropTempView("x_mad_twin_src")
 

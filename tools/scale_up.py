@@ -27,12 +27,12 @@ Replication is workload-shape-preserving, not statistics-faking:
 
 Usage:
     python tools/scale_up.py build [/tmp/sfbig]        # ~1 min
-    SPARK_GRAFT_CPUS=32 python tools/scale_up.py run [/tmp/sfbig]
-    SPARK_GRAFT_CPUS=8  python tools/scale_up.py run [/tmp/sfbig]
+    python tools/scale_up.py run [/tmp/sfbig]          # host core count
+    SPARK_GRAFT_CPUS=4 python tools/scale_up.py run [/tmp/sfbig]
 
-``run`` prints one JSON line per entry: {"entry":..., "cpus":..,
-"sec": min-of-2}.  The round's committed artifact (SCALING_r15.md)
-records both runs and the ratios.
+``run`` times ENTRIES through ``bench.measure`` (the bench's warm-up,
+then each entry once, in name order) and prints one JSON line:
+{"cpus", "sf_dir", "load_probe", "steal_s", "queries": {entry: sec}}.
 """
 
 from __future__ import annotations
@@ -40,7 +40,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -181,34 +180,13 @@ def build(dst: str) -> None:
 
 
 def run(sf_dir: str) -> None:
-    from flink_1_11_1_spark import catalog
-    from flink_1_11_1_spark.extensions import registry
-    from flink_1_11_1_spark.session import get_spark
+    import bench
+    from flink_1_11_1_spark.session import cpus, get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark("scale-up-run")
     spark.sparkContext.setLogLevel("ERROR")
-    catalog.register(spark, sf_dir)
-    probe_sql = (
-        "SELECT sum(id * 2) s, count(*) n FROM range(16777216) GROUP BY id % 64"
-    )
-    spark.sql(probe_sql).collect()
-    t0 = time.time()
-    spark.sql(probe_sql).collect()
-    probe = round(time.time() - t0, 3)
-    q = registry.queries()
-    out = {"cpus": int(cpus), "probe": probe, "sf_dir": sf_dir, "entries": {}}
-    for name in ENTRIES:
-        spark.sparkContext.setJobDescription(f"scale-up {name}")
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            q[name](spark, sf_dir).collect()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        out["entries"][name] = round(best, 2)
-        print(f"{name}: {best:.2f}s", flush=True)
-    print(json.dumps(out))
+    out = bench.measure(spark, sf_dir, ENTRIES)
+    print(json.dumps({"cpus": cpus(), "sf_dir": sf_dir, **out}))
 
 
 if __name__ == "__main__":
