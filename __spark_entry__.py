@@ -113,9 +113,14 @@ _DEFER_FIRST: tuple[str, ...] = ()
 # conjunct split, which picks the lowering tier).
 # x_mad_outliers follows x_semdedup: its medians now leave NULL values
 # out, in the oracle and the Spark form.  The MR entries' aggregate and
-# column measures now join back through Column expressions.
+# column measures now join back through Column expressions.  The cosine,
+# pack and DataStream-reduce entries come next: the functions they ship
+# to Python workers now call module-level package code.  x_pipeline_clean
+# imports dedup lazily now (pipeline.py imported first was circular).
 _REVERIFY_FIRST: tuple[str, ...] = (
     "x_semdedup", "x_mad_outliers",
+    "x_dedup_cosine", "x_dedup_cosine_lsh", "x_pack_batches", "x_ds_reduce",
+    "x_pipeline_clean",
     "x_sql_tumble", "x_sql_hop", "x_sql_session", "x_sql_lateral",
     "x_sql_system_time", "x_ddl_roundtrip", "x_ddl_like",
     "x_ddl_options_hint", "x_catalog_qualified", "x_hive_dialect",

@@ -29,6 +29,12 @@ NOT already give us:
 - ``udf``          PyFlink udf/udtf/DataTypes shim
 - ``pyflink_shim`` ``import …pyflink_shim`` → verbatim PyFlink 1.11
                    programs run unchanged (see examples/)
+- ``worker_imports`` keeps Python workers from re-reading every zip's
+                   import index before each task (installed on import)
 """
 
+from . import worker_imports
+
 __version__ = "0.1.0"
+
+worker_imports.install()

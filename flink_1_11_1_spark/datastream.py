@@ -27,10 +27,11 @@ own Python DataStream API, which ships rows to a Beam worker).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable, Iterator, Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -184,6 +185,54 @@ def _wants_ctx(fn: Callable) -> bool:
     return len(params) >= 2
 
 
+def _call(fn: Callable, row, ctx):
+    return fn(row) if ctx is None else fn(row, ctx)
+
+
+# Arrow stages of the Python-callable transformations.  to_dict (not
+# itertuples): leading-underscore columns survive, and Row(**d) keeps
+# the field order.
+
+def _map_batches(batches: Iterator, *, fn, ctx, names) -> Iterator:
+    import pandas as pd
+
+    for pdf in batches:
+        rows = [tuple(_call(fn, Row(**d), ctx))
+                for d in pdf.to_dict("records")]
+        yield pd.DataFrame(rows, columns=names)
+
+
+def _flat_map_batches(batches: Iterator, *, fn, ctx, names) -> Iterator:
+    import pandas as pd
+
+    for pdf in batches:
+        out = [tuple(t) for d in pdf.to_dict("records")
+               for t in _call(fn, Row(**d), ctx)]
+        yield pd.DataFrame(out, columns=names)
+
+
+def _filter_batches(batches: Iterator, *, fn, ctx) -> Iterator:
+    for pdf in batches:
+        yield pdf[[bool(_call(fn, Row(**d), ctx))
+                   for d in pdf.to_dict("records")]]
+
+
+def _partition_ids(s, partitioner: Callable):
+    return s.map(partitioner).astype("int32")
+
+
+def _rowtime_sorted(pdf, rowtime: str | None):
+    if rowtime is not None and rowtime in pdf.columns:
+        pdf = pdf.sort_values(rowtime, kind="stable")
+    return pdf
+
+
+def _reduce_rows(pdf, fn: Callable, cols: list[str]):
+    """Pairwise whole-row fold of a key's (or window's) frame."""
+    return functools.reduce(
+        fn, [Row(**{c: d[c] for c in cols}) for d in pdf.to_dict("records")])
+
+
 class DataStream:
     def __init__(self, df: DataFrame, env: StreamExecutionEnvironment,
                  rowtime: str | None = None):
@@ -213,64 +262,30 @@ class DataStream:
             return self._wrap(self.df.selectExpr(*fn))
         if output_type is None:
             raise ValueError("a Python map() needs output_type (schema DDL)")
-        from pyspark.sql import Row
         from pyspark.sql.types import StructType
 
-        names = [f_.name for f_ in StructType.fromDDL(output_type).fields]
-        ctx = self._ctx() if _wants_ctx(fn) else None
-
-        def run(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            for pdf in batches:
-                # to_dict (not itertuples): leading-underscore columns
-                # survive, and Row(**d) keeps the field order
-                rows = [
-                    tuple(fn(Row(**d)) if ctx is None
-                          else fn(Row(**d), ctx))
-                    for d in pdf.to_dict("records")
-                ]
-                yield pd.DataFrame(rows, columns=names)
-
+        run = functools.partial(
+            _map_batches, fn=fn, ctx=self._ctx() if _wants_ctx(fn) else None,
+            names=[f_.name for f_ in StructType.fromDDL(output_type).fields])
         return self._wrap(self.df.mapInPandas(run, schema=output_type))
 
     def flat_map(self, fn: Callable, output_type: str) -> DataStream:
         """``DataStream.flatMap``: the callable yields 0..n tuples per
         input row (Collector.collect parity); Arrow-batched."""
-        from pyspark.sql import Row
         from pyspark.sql.types import StructType
 
-        names = [f_.name for f_ in StructType.fromDDL(output_type).fields]
-        ctx = self._ctx() if _wants_ctx(fn) else None
-
-        def run(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            for pdf in batches:
-                out = [
-                    tuple(t) for d in pdf.to_dict("records")
-                    for t in (fn(Row(**d)) if ctx is None
-                              else fn(Row(**d), ctx))
-                ]
-                yield pd.DataFrame(out, columns=names)
-
+        run = functools.partial(
+            _flat_map_batches, fn=fn,
+            ctx=self._ctx() if _wants_ctx(fn) else None,
+            names=[f_.name for f_ in StructType.fromDDL(output_type).fields])
         return self._wrap(self.df.mapInPandas(run, schema=output_type))
 
     def filter(self, fn: str | Column | Callable) -> DataStream:
         if isinstance(fn, (str, Column)):
             return self._wrap(self.df.filter(fn))
-        from pyspark.sql import Row
-
-        ctx = self._ctx() if _wants_ctx(fn) else None
-
-        def run(batches: Iterator) -> Iterator:
-            for pdf in batches:
-                mask = [
-                    bool(fn(Row(**d)) if ctx is None else fn(Row(**d), ctx))
-                    for d in pdf.to_dict("records")
-                ]
-                yield pdf[mask]
-
+        run = functools.partial(
+            _filter_batches, fn=fn,
+            ctx=self._ctx() if _wants_ctx(fn) else None)
         return self._wrap(self.df.mapInPandas(run, schema=self.df.schema))
 
     def union(self, *others: DataStream) -> DataStream:
@@ -334,7 +349,7 @@ class DataStream:
             # (pandas isn't imported there), so declare the UDF type
             # via the returnType argument alone
             def _pid(s):
-                return s.map(partitioner).astype("int32")
+                return _partition_ids(s, partitioner)
 
             pid = pandas_udf(_pid, "int")(F.col(field))
         else:
@@ -459,21 +474,15 @@ class KeyedStream:
         Bounded result = the final fold per key (Arrow per-key stage;
         the fold order is the rowtime order if assigned, else the
         stable input order)."""
-        import functools
-
-        from pyspark.sql import Row
-
         cols = list(self.df.columns)
         rowtime = self._stream._rowtime
 
         def fold(pdf):
             import pandas as pd
 
-            if rowtime is not None and rowtime in pdf.columns:
-                pdf = pdf.sort_values(rowtime, kind="stable")
-            rows = [Row(**d) for d in pdf.to_dict("records")]
-            acc = functools.reduce(fn, rows)
-            return pd.DataFrame([tuple(acc)], columns=cols)
+            pdf = _rowtime_sorted(pdf, rowtime)
+            return pd.DataFrame([tuple(_reduce_rows(pdf, fn, cols))],
+                                columns=cols)
 
         return self._stream._wrap(
             self.df.groupBy(*self._keys).applyInPandas(
@@ -535,9 +544,7 @@ class KeyedStream:
         rowtime = self._stream._rowtime
 
         def run(key, pdf):
-            if rowtime is not None and rowtime in pdf.columns:
-                pdf = pdf.sort_values(rowtime, kind="stable")
-            return fn(key, pdf)
+            return fn(key, _rowtime_sorted(pdf, rowtime))
 
         return self._stream._wrap(
             self.df.groupBy(*self._keys).applyInPandas(run, schema=schema))
@@ -691,10 +698,6 @@ class WindowedStream:
 
     def reduce(self, fn: Callable) -> DataStream:
         """Per-window whole-row fold (Arrow per (key, window) group)."""
-        import functools
-
-        from pyspark.sql import Row
-
         ks = self._keyed
         ts = ks._stream._rowtime
         a = self._assigner
@@ -707,9 +710,7 @@ class WindowedStream:
             import pandas as pd
 
             pdf = pdf.sort_values(ts, kind="stable")
-            rows = [Row(**{c: d[c] for c in cols})
-                    for d in pdf.to_dict("records")]
-            acc = functools.reduce(fn, rows)
+            acc = _reduce_rows(pdf, fn, cols)
             first = pdf.iloc[0]["__w"]
             return pd.DataFrame(
                 [tuple(acc) + (first["start"], first["end"])],

@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog
+from ..session import ship_package
 from . import registry
 
 # ---------------------------------------------------------------- exact
@@ -587,6 +588,22 @@ def _cos_layout(
     return None
 
 
+def _sign_band_codes(vs: pd.Series, bands: int, rpb: int, seed: int) -> pd.Series:
+    """``band_codes`` body for one Arrow batch."""
+    import numpy as np
+
+    M = np.asarray(vs.tolist(), dtype=np.float64)
+    if M.size == 0:
+        return pd.Series([], dtype=object)
+    planes = np.random.RandomState(seed).standard_normal(
+        (bands * rpb, M.shape[1])
+    )
+    bits = (M @ planes.T >= 0).astype(np.int64)
+    weights = 1 << np.arange(rpb - 1, -1, -1)
+    codes = (bits.reshape(len(M), bands, rpb) * weights).sum(axis=2)
+    return pd.Series(list(codes.astype(np.int32)))
+
+
 def _cos_band_candidates(
     emb: DataFrame, bands: int, rpb: int, seed: int = 7,
     checkpoint: bool = True,
@@ -603,20 +620,11 @@ def _cos_band_candidates(
     dimension, so batches and engines agree deterministically."""
     from pyspark.sql.functions import pandas_udf
 
+    ship_package(emb.sparkSession)
+
     @pandas_udf("array<int>")
     def band_codes(vs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        M = np.asarray(vs.tolist(), dtype=np.float64)
-        if M.size == 0:
-            return pd.Series([], dtype=object)
-        planes = np.random.RandomState(seed).standard_normal(
-            (bands * rpb, M.shape[1])
-        )
-        bits = (M @ planes.T >= 0).astype(np.int64)
-        weights = 1 << np.arange(rpb - 1, -1, -1)
-        codes = (bits.reshape(len(M), bands, rpb) * weights).sum(axis=2)
-        return pd.Series(list(codes.astype(np.int32)))
+        return _sign_band_codes(vs, bands, rpb, seed)
 
     # both sides of the candidate self-join read the bucket frame: the
     # lazy checkpoint runs the Arrow projection (GEMM against the plane
@@ -646,6 +654,30 @@ def _cos_band_candidates(
     )
 
 
+def _gemm_score(key, pdf: pd.DataFrame, cut: float) -> pd.DataFrame:
+    """One (bi, bj) block pair of ``_cos_gemm_candidates``: the pairs
+    scoring >= ``cut``."""
+    import numpy as np
+
+    bi, bj = key
+    M = np.asarray(pdf["v"].tolist(), dtype=np.float64)
+    M /= np.linalg.norm(M, axis=1, keepdims=True)
+    ids = pdf["vec_id"].to_numpy()
+    if bi == bj:
+        S = M @ M.T
+        iu, ju = np.triu_indices(len(ids), 1)
+        keep = S[iu, ju] >= cut
+        a, b = ids[iu[keep]], ids[ju[keep]]
+    else:
+        left = (pdf["blk"] == bi).to_numpy()
+        A, B = M[left], M[~left]
+        ia, ib = np.where(A @ B.T >= cut)
+        a, b = ids[left][ia], ids[~left][ib]
+    return pd.DataFrame(
+        {"da": np.minimum(a, b), "db": np.maximum(a, b)}
+    )
+
+
 def _cos_gemm_candidates(
     emb: DataFrame, threshold: float, block_rows: int | None = None
 ) -> DataFrame:
@@ -665,6 +697,7 @@ def _cos_gemm_candidates(
     candidate superset and the recall identity is arithmetic, not
     probabilistic."""
     spark = emb.sparkSession
+    ship_package(spark)
     n = emb.count()
     # block count grows WITH n (uncapped): every group then holds at
     # most 2·block_rows vectors — bounded executor memory — while the
@@ -703,27 +736,8 @@ def _cos_gemm_candidates(
     )
     cut = threshold - 1e-9
 
-    def score(key, pdf):  # pragma: no cover - executor-side
-        import numpy as np
-        import pandas as pd
-
-        bi, bj = key
-        M = np.asarray(pdf["v"].tolist(), dtype=np.float64)
-        M /= np.linalg.norm(M, axis=1, keepdims=True)
-        ids = pdf["vec_id"].to_numpy()
-        if bi == bj:
-            S = M @ M.T
-            iu, ju = np.triu_indices(len(ids), 1)
-            keep = S[iu, ju] >= cut
-            a, b = ids[iu[keep]], ids[ju[keep]]
-        else:
-            left = (pdf["blk"] == bi).to_numpy()
-            A, B = M[left], M[~left]
-            ia, ib = np.where(A @ B.T >= cut)
-            a, b = ids[left][ia], ids[~left][ib]
-        return pd.DataFrame(
-            {"da": np.minimum(a, b), "db": np.maximum(a, b)}
-        )
+    def score(key, pdf):
+        return _gemm_score(key, pdf, cut)
 
     return repl.groupBy("bi", "bj").applyInPandas(score, "da bigint, db bigint")
 

@@ -10,13 +10,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog
+from ..session import ship_package
 from . import registry
-from .dedup import drop_exact_duplicates
 from .text import N_ALPHA, N_TOKENS, lang_id_expr
 
 
 def clean_corpus(docs: DataFrame, min_tokens: int = 20, min_avg_len: float = 3.0) -> DataFrame:
     """Dedup (deterministic survivor) → quality gate → lang annotate."""
+    # not a module-level import: dedup's module body reads _DUCK_BUCKET
+    # from here, so importing this module first (as a worker unpickling
+    # pack_batches does) would be circular
+    from .dedup import drop_exact_duplicates
+
     deduped = drop_exact_duplicates(docs)
     quality = deduped.where(
         F.expr(f"{N_TOKENS} >= {min_tokens}")
@@ -155,6 +160,19 @@ registry.register("x_sample_weighted", _wsample, WSAMPLE_ORACLE)
 
 # ------------------------------------------------ token-budget packing
 
+def _pack_shard(pdf, budget: int):
+    """One shard's greedy token-budget scan for ``pack_batches``."""
+    pdf = pdf.sort_values("doc_id").reset_index(drop=True)
+    acc, b, out = 0, 0, []
+    for tok in pdf["tok"]:
+        if acc and acc + tok > budget:
+            b, acc = b + 1, 0
+        acc += int(tok)
+        out.append(b)
+    pdf["batch_id"] = out
+    return pdf[["doc_id", "shard", "tok", "batch_id"]]
+
+
 def pack_batches(docs: DataFrame, budget: int = 2000, shards: int = 8) -> DataFrame:
     """Greedy token-budget sequence packing: within each shard (hash of
     the key — the parallelism unit), docs are taken in doc_id order and
@@ -168,6 +186,7 @@ def pack_batches(docs: DataFrame, budget: int = 2000, shards: int = 8) -> DataFr
     the parallelism, so at 100 TB you size ``shards`` to the cluster,
     not the data.  Output: (doc_id, shard, tok, batch_id).
     """
+    ship_package(docs.sparkSession)
     d = docs.select(
         "doc_id",
         F.expr(N_TOKENS).cast("long").alias("tok"),
@@ -175,15 +194,7 @@ def pack_batches(docs: DataFrame, budget: int = 2000, shards: int = 8) -> DataFr
     )
 
     def pack(pdf):
-        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-        acc, b, out = 0, 0, []
-        for tok in pdf["tok"]:
-            if acc and acc + tok > budget:
-                b, acc = b + 1, 0
-            acc += int(tok)
-            out.append(b)
-        pdf["batch_id"] = out
-        return pdf[["doc_id", "shard", "tok", "batch_id"]]
+        return _pack_shard(pdf, budget)
 
     return d.groupBy("shard").applyInPandas(
         pack, "doc_id long, tok long, shard long, batch_id long"

@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import catalog
+from ..session import ship_package
 from . import registry
 
 # ---------------------------------------------------------------- HLL
@@ -320,6 +321,27 @@ def hll_register_cols(events: DataFrame) -> DataFrame:
     )
 
 
+def _hll_fold(key, pdfs, state):
+    """Per-key register max-fold of ``streaming_hll``."""
+    import pandas as pd
+
+    if state.exists:
+        ranks = list(state.get[0])
+    else:
+        ranks = [0] * _M
+    for pdf in pdfs:
+        for reg, rank in zip(pdf["reg"], pdf["rank"]):
+            r, k = int(rank), int(reg)
+            if r > ranks[k]:
+                ranks[k] = r
+    state.update((ranks,))
+    hit = sum(1 for r in ranks if r > 0)
+    sum_scaled = sum(1 << (53 - r) for r in ranks)
+    yield pd.DataFrame(
+        {"event_type": [key[0]], "regs_hit": [hit], "sum_scaled": [sum_scaled]}
+    )
+
+
 def streaming_hll(events: DataFrame) -> DataFrame:
     """Streaming distinct-count sketch per event_type: HLL registers as
     keyed state, one (regs_hit, sum_scaled) row emitted per key per
@@ -332,31 +354,11 @@ def streaming_hll(events: DataFrame) -> DataFrame:
     sketch over the full replay (asserted by S14), and state is O(256)
     per key regardless of stream length (no horizon needed).
     """
-    import pandas as pd
-
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    pre = hll_register_cols(events)
-
-    def fn(key, pdfs, state):
-        if state.exists:
-            ranks = list(state.get[0])
-        else:
-            ranks = [0] * _M
-        for pdf in pdfs:
-            for reg, rank in zip(pdf["reg"], pdf["rank"]):
-                r, k = int(rank), int(reg)
-                if r > ranks[k]:
-                    ranks[k] = r
-        state.update((ranks,))
-        hit = sum(1 for r in ranks if r > 0)
-        sum_scaled = sum(1 << (53 - r) for r in ranks)
-        yield pd.DataFrame(
-            {"event_type": [key[0]], "regs_hit": [hit], "sum_scaled": [sum_scaled]}
-        )
-
-    return pre.groupBy("event_type").applyInPandasWithState(
-        fn,
+    ship_package(events.sparkSession)
+    return hll_register_cols(events).groupBy("event_type").applyInPandasWithState(
+        _hll_fold,
         _HLL_OUT_SCHEMA,
         _HLL_STATE_SCHEMA,
         "update",
@@ -826,31 +828,32 @@ def cm_bucket_cols(docs: DataFrame) -> DataFrame:
     return out
 
 
+def _cm_fold(key, pdfs, state):
+    """Per-depth counter fold of ``streaming_cm``."""
+    import pandas as pd
+
+    if state.exists:
+        totals = list(state.get[0])
+    else:
+        totals = [0] * _CM_WIDTH
+    for pdf in pdfs:
+        for b in pdf["b"]:
+            totals[int(b)] += 1
+    state.update((totals,))
+    yield pd.DataFrame(
+        {"d": [key[0]], "bits": [sum(totals)], "totals": [totals]}
+    )
+
+
 def streaming_cm(docs: DataFrame) -> DataFrame:
     """Streaming count-min: each depth row is a key whose state is the
     width-64 counter array (additive fold — the sketch IS the partial
     aggregate, so the final state after any replay equals the batch cm
     table, asserted by S16).  State is O(width) per depth regardless of
     stream length; the emitted row carries the running totals."""
-    import pandas as pd
-
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    pre = cm_bucket_cols(docs)
-
-    def fn(key, pdfs, state):
-        if state.exists:
-            totals = list(state.get[0])
-        else:
-            totals = [0] * _CM_WIDTH
-        for pdf in pdfs:
-            for b in pdf["b"]:
-                totals[int(b)] += 1
-        state.update((totals,))
-        yield pd.DataFrame(
-            {"d": [key[0]], "bits": [sum(totals)], "totals": [totals]}
-        )
-
-    return pre.groupBy("d").applyInPandasWithState(
-        fn, _CM_OUT_SCHEMA, _CM_STATE_SCHEMA, "update", GroupStateTimeout.NoTimeout
+    ship_package(docs.sparkSession)
+    return cm_bucket_cols(docs).groupBy("d").applyInPandasWithState(
+        _cm_fold, _CM_OUT_SCHEMA, _CM_STATE_SCHEMA, "update", GroupStateTimeout.NoTimeout
     )

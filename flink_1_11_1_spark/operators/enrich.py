@@ -27,12 +27,34 @@ per-record tier; the engine never hardwires a transport.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
+
+from ..session import ship_package
+
+
+def _enrich_batches(batches: Iterator[pd.DataFrame], *, fn: Callable,
+                    input_col: str, output_col: str, cols: list[str],
+                    batch_size: int | None) -> Iterator[pd.DataFrame]:
+    """``enrich``'s Arrow stage."""
+    for pdf in batches:
+        chunks = (
+            [pdf[i : i + batch_size] for i in range(0, len(pdf), batch_size)]
+            if batch_size
+            else [pdf]
+        )
+        for chunk in chunks:
+            if not len(chunk):
+                continue
+            result = fn(chunk[input_col])
+            out = chunk[cols].copy()
+            out[output_col] = list(result)
+            yield out
 
 
 def enrich(
@@ -53,24 +75,67 @@ def enrich(
     # copy the field list: StructType(fields) aliases it, and .add would
     # mutate the DataFrame's cached python-side schema in place
     out_schema = StructType(list(fields)).add(output_col, output_type)
-    cols = [f.name for f in fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            chunks = (
-                [pdf[i : i + batch_size] for i in range(0, len(pdf), batch_size)]
-                if batch_size
-                else [pdf]
-            )
-            for chunk in chunks:
-                if not len(chunk):
-                    continue
-                result = fn(chunk[input_col])
-                out = chunk[cols].copy()
-                out[output_col] = list(result)
-                yield out
-
+    ship_package(df.sparkSession)
+    run = functools.partial(
+        _enrich_batches, fn=fn, input_col=input_col, output_col=output_col,
+        cols=[f.name for f in fields], batch_size=batch_size)
     return df.mapInPandas(run, out_schema)
+
+
+def _async_enrich_batches(batches: Iterator[pd.DataFrame], *, async_fn: Callable,
+                          input_col: str, output_col: str, cols: list[str],
+                          ordered: bool, capacity: int,
+                          timeout_s: float | None,
+                          on_timeout: str) -> Iterator[pd.DataFrame]:
+    """``async_enrich``'s Arrow stage."""
+    import asyncio
+
+    _TIMEOUT = object()
+
+    async def drive(values: list) -> list[tuple[int, object]]:
+        sem = asyncio.Semaphore(capacity)
+        done: list[tuple[int, object]] = []
+
+        async def one(i: int, v):
+            async with sem:  # timeout starts when the slot is granted
+                try:
+                    coro = async_fn(v)
+                    r = (
+                        await asyncio.wait_for(coro, timeout_s)
+                        if timeout_s is not None
+                        else await coro
+                    )
+                except asyncio.TimeoutError:
+                    if on_timeout == "error":
+                        raise TimeoutError(
+                            f"async lookup timed out after {timeout_s}s "
+                            f"for {input_col}={v!r}"
+                        ) from None
+                    r = _TIMEOUT
+                done.append((i, r))
+
+        tasks = [
+            asyncio.create_task(one(i, v)) for i, v in enumerate(values)
+        ]
+        await asyncio.gather(*tasks)
+        return done  # append order == completion order
+
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        completed = asyncio.run(drive(list(pdf[input_col])))
+        if ordered:
+            completed = sorted(completed, key=lambda t: t[0])
+        kept = [
+            (i, None if r is _TIMEOUT else r)
+            for i, r in completed
+            if not (r is _TIMEOUT and on_timeout == "drop")
+        ]
+        idx = [i for i, _ in kept]
+        vals = [v for _, v in kept]
+        out = pdf.iloc[idx][cols].copy()
+        out[output_col] = vals
+        yield out
 
 
 def async_enrich(
@@ -113,56 +178,10 @@ def async_enrich(
         raise ValueError(f"capacity must be >= 1, got {capacity!r}")
     fields = df.schema.fields
     out_schema = StructType(list(fields)).add(output_col, output_type)
-    cols = [f.name for f in fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import asyncio
-
-        _TIMEOUT = object()
-
-        async def drive(values: list) -> list[tuple[int, object]]:
-            sem = asyncio.Semaphore(capacity)
-            done: list[tuple[int, object]] = []
-
-            async def one(i: int, v):
-                async with sem:  # timeout starts when the slot is granted
-                    try:
-                        coro = async_fn(v)
-                        r = (
-                            await asyncio.wait_for(coro, timeout_s)
-                            if timeout_s is not None
-                            else await coro
-                        )
-                    except asyncio.TimeoutError:
-                        if on_timeout == "error":
-                            raise TimeoutError(
-                                f"async lookup timed out after {timeout_s}s "
-                                f"for {input_col}={v!r}"
-                            ) from None
-                        r = _TIMEOUT
-                    done.append((i, r))
-
-            tasks = [
-                asyncio.create_task(one(i, v)) for i, v in enumerate(values)
-            ]
-            await asyncio.gather(*tasks)
-            return done  # append order == completion order
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            completed = asyncio.run(drive(list(pdf[input_col])))
-            if ordered:
-                completed = sorted(completed, key=lambda t: t[0])
-            kept = [
-                (i, None if r is _TIMEOUT else r)
-                for i, r in completed
-                if not (r is _TIMEOUT and on_timeout == "drop")
-            ]
-            idx = [i for i, _ in kept]
-            vals = [v for _, v in kept]
-            out = pdf.iloc[idx][cols].copy()
-            out[output_col] = vals
-            yield out
-
+    ship_package(df.sparkSession)
+    run = functools.partial(
+        _async_enrich_batches, async_fn=async_fn, input_col=input_col,
+        output_col=output_col, cols=[f.name for f in fields],
+        ordered=ordered, capacity=capacity, timeout_s=timeout_s,
+        on_timeout=on_timeout)
     return df.mapInPandas(run, out_schema)

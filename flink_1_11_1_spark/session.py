@@ -59,9 +59,13 @@ RUNTIME_CONFS: dict[str, str] = {
 def ship_package(spark: SparkSession) -> None:
     """Make this package importable on executor python workers.
 
-    Closures shipped by the engine (CEP processors, pandas UDFs) refer to
-    module-level helpers, which cloudpickle serializes *by reference* —
-    the worker must import the module.  On a real cluster this is the
+    Functions shipped by the engine (keyed-state folds, pandas UDFs)
+    refer to module-level helpers, which cloudpickle serializes *by
+    reference* — the worker must import the module.  They must: that
+    import runs the package init, which installs ``worker_imports`` so
+    the worker stops re-reading pyspark.zip's import index before every
+    task.  A self-contained nested closure is pickled by value and
+    leaves the worker paying that cost.  On a real cluster this is the
     ``--py-files`` deployment; here we build the zip once (content-hashed
     name, so ``addPyFile`` stays idempotent) and attach it.
     """

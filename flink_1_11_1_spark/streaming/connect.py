@@ -16,6 +16,7 @@ verifies the streaming path with the engine's own ``asof_join``.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterator
 
 import pandas as pd
@@ -68,45 +69,48 @@ def tag_and_union(control: DataFrame, data: DataFrame) -> DataFrame:
     return c.unionByName(d)
 
 
+def _threshold_fold(key, rows: Iterator[pd.DataFrame], state, *,
+                    default_threshold: float):
+    """Per-key fold of ``dynamic_threshold_filter``."""
+    parts = [p for p in rows if len(p)]
+    if not parts:
+        return
+    # control rows FIRST on timestamp ties (side descending): the
+    # declared batch twin is an inclusive as-of join (right_time <=
+    # left_time), so a same-ts control update applies to the data
+    # row — ascending side order applied the OLD threshold
+    # (round-13 review; semi_anti.py sorts rights-first for the
+    # same reason)
+    batch = pd.concat(parts, ignore_index=True).sort_values(
+        ["ts", "side", "event_id"], ascending=[True, False, True]
+    )
+    thr = state.get[0] if state.exists else default_threshold
+    out = []
+    for ev in batch.itertuples():
+        if ev.side == 1:  # control row: update keyed threshold state
+            thr = float(ev.ctrl_val)
+        elif float(ev.value) >= thr:
+            out.append(
+                (key[0], int(ev.event_id), ev.ts, float(ev.value), thr)
+            )
+    state.update((thr,))
+    if out:
+        yield pd.DataFrame(
+            out, columns=["key", "event_id", "ts", "value", "threshold"]
+        )
+
+
 def dynamic_threshold_filter(
     control: DataFrame, data: DataFrame, default_threshold: float = float("-inf")
 ) -> DataFrame:
     """Emit data rows whose value >= the key's threshold at their time."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..session import configure
 
-    spark = control.sparkSession
-    configure(spark)
-
-    def fn(key, rows: Iterator[pd.DataFrame], state: GroupState):
-        parts = [p for p in rows if len(p)]
-        if not parts:
-            return
-        # control rows FIRST on timestamp ties (side descending): the
-        # declared batch twin is an inclusive as-of join (right_time <=
-        # left_time), so a same-ts control update applies to the data
-        # row — ascending side order applied the OLD threshold
-        # (round-13 review; semi_anti.py sorts rights-first for the
-        # same reason)
-        batch = pd.concat(parts, ignore_index=True).sort_values(
-            ["ts", "side", "event_id"], ascending=[True, False, True]
-        )
-        thr = state.get[0] if state.exists else default_threshold
-        out = []
-        for ev in batch.itertuples():
-            if ev.side == 1:  # control row: update keyed threshold state
-                thr = float(ev.ctrl_val)
-            elif float(ev.value) >= thr:
-                out.append(
-                    (key[0], int(ev.event_id), ev.ts, float(ev.value), thr)
-                )
-        state.update((thr,))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["key", "event_id", "ts", "value", "threshold"]
-            )
-
+    configure(control.sparkSession)
+    fold = functools.partial(_threshold_fold,
+                             default_threshold=default_threshold)
     return tag_and_union(control, data).groupBy("key").applyInPandasWithState(
-        fn, OUT_SCHEMA, _STATE, "append", GroupStateTimeout.NoTimeout
+        fold, OUT_SCHEMA, _STATE, "append", GroupStateTimeout.NoTimeout
     )

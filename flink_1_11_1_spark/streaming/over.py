@@ -62,6 +62,55 @@ _OVER_STATE = StructType(
 )
 
 
+def _running_sum_fold(key, rows: Iterator[pd.DataFrame], state):
+    """Per-key fold of ``running_sum``."""
+    parts = [p for p in rows if len(p)]
+    if state.exists:
+        acc, ids, tss, vals = state.get
+        buf = list(zip(ids, tss, vals))
+    else:
+        acc, buf = 0.0, []
+    for p in parts:
+        for ev in p.itertuples():
+            if pd.isna(ev.ts):
+                # NULL/NaT rowtime (round-12 review): NaT.value is
+                # int64-min, which sorts below any watermark and
+                # overflows pd.Timestamp on emission — drop, like
+                # running_over and Flink's rowtime operators.
+                continue
+            buf.append((int(ev.event_id), int(ev.ts.value // 1000), float(ev.value)))
+    wm_us = state.getCurrentWatermarkMs() * 1000
+    buf.sort(key=lambda r: (r[1], r[0]))
+    out, keep = [], []
+    for eid, ts_us, val in buf:
+        if ts_us <= wm_us:
+            acc += val
+            out.append((key[0], eid, pd.Timestamp(ts_us * 1000), acc))
+        else:
+            keep.append((eid, ts_us, val))
+    # ALWAYS update (round 11): skipping the update on a draining
+    # timeout invocation left the stale buffer AND the expired timer
+    # in the store — the timer re-fired every later trigger and
+    # re-emitted the same rows (and a row arriving after the drain
+    # would have seen the pre-drain accumulator).  When nothing is
+    # buffered the timer is parked far-future: the accumulator is
+    # keyed-state-forever, exactly Flink's OVER state contract.
+    state.update(
+        (acc, [r[0] for r in keep], [r[1] for r in keep], [r[2] for r in keep])
+    )
+    if keep:
+        # event-time timer (Flink's registerEventTimeTimer): fire
+        # when the watermark reaches the earliest buffered row, so
+        # the tail drains even if the key receives no new input.
+        state.setTimeoutTimestamp(
+            max(min(r[1] for r in keep) // 1000, state.getCurrentWatermarkMs() + 1)
+        )
+    else:
+        state.setTimeoutTimestamp(_PARK_TIMER_MS)
+    if out:
+        yield pd.DataFrame(out, columns=["user_id", "event_id", "ts", "running_sum"])
+
+
 def running_sum(events: DataFrame) -> DataFrame:
     """Event-time running sum of ``value`` per ``user_id`` (ROWS
     UNBOUNDED PRECEDING, order ts/event_id), watermark-gated emission.
@@ -69,61 +118,13 @@ def running_sum(events: DataFrame) -> DataFrame:
     Input columns: user_id, event_id, ts, value (stream must carry a
     watermark on ts).
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..session import configure
 
     configure(events.sparkSession)
-
-    def fn(key, rows: Iterator[pd.DataFrame], state: GroupState):
-        parts = [p for p in rows if len(p)]
-        if state.exists:
-            acc, ids, tss, vals = state.get
-            buf = list(zip(ids, tss, vals))
-        else:
-            acc, buf = 0.0, []
-        for p in parts:
-            for ev in p.itertuples():
-                if pd.isna(ev.ts):
-                    # NULL/NaT rowtime (round-12 review): NaT.value is
-                    # int64-min, which sorts below any watermark and
-                    # overflows pd.Timestamp on emission — drop, like
-                    # running_over and Flink's rowtime operators.
-                    continue
-                buf.append((int(ev.event_id), int(ev.ts.value // 1000), float(ev.value)))
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        buf.sort(key=lambda r: (r[1], r[0]))
-        out, keep = [], []
-        for eid, ts_us, val in buf:
-            if ts_us <= wm_us:
-                acc += val
-                out.append((key[0], eid, pd.Timestamp(ts_us * 1000), acc))
-            else:
-                keep.append((eid, ts_us, val))
-        # ALWAYS update (round 11): skipping the update on a draining
-        # timeout invocation left the stale buffer AND the expired timer
-        # in the store — the timer re-fired every later trigger and
-        # re-emitted the same rows (and a row arriving after the drain
-        # would have seen the pre-drain accumulator).  When nothing is
-        # buffered the timer is parked far-future: the accumulator is
-        # keyed-state-forever, exactly Flink's OVER state contract.
-        state.update(
-            (acc, [r[0] for r in keep], [r[1] for r in keep], [r[2] for r in keep])
-        )
-        if keep:
-            # event-time timer (Flink's registerEventTimeTimer): fire
-            # when the watermark reaches the earliest buffered row, so
-            # the tail drains even if the key receives no new input.
-            state.setTimeoutTimestamp(
-                max(min(r[1] for r in keep) // 1000, state.getCurrentWatermarkMs() + 1)
-            )
-        else:
-            state.setTimeoutTimestamp(_PARK_TIMER_MS)
-        if out:
-            yield pd.DataFrame(out, columns=["user_id", "event_id", "ts", "running_sum"])
-
     return events.groupBy("user_id").applyInPandasWithState(
-        fn, OVER_SCHEMA, _OVER_STATE, "append", GroupStateTimeout.EventTimeTimeout
+        _running_sum_fold, OVER_SCHEMA, _OVER_STATE, "append", GroupStateTimeout.EventTimeTimeout
     )
 
 
@@ -225,6 +226,52 @@ _FLAT_OK = (
 _INTEGRAL = ("byte", "short", "integer", "long")
 
 
+def _plain(v):
+    # numpy scalars / pandas NaN/NaT → JSON-serializable Python (the
+    # NaN-is-NULL rule: _is_sql_null discipline from the MR fold);
+    # dates round-trip as ordinals (review finding: a buffered DATE
+    # or NaT row crashed json.dumps)
+    if v is None or v is pd.NaT:
+        return None
+    if isinstance(v, float):
+        return None if v != v else v
+    if hasattr(v, "item"):  # numpy scalar
+        v = v.item()
+        if isinstance(v, float) and v != v:
+            return None
+    if isinstance(v, dt_mod.datetime):
+        return int(pd.Timestamp(v).value // 1000)
+    if isinstance(v, dt_mod.date):
+        return v.toordinal()
+    return v
+
+
+def _window_val(fn, vals, integral):
+    vs = [v for v in vals if v is not None]
+    if fn == "count":
+        return len(vs)
+    if not vs:
+        return None
+    if fn == "sum":
+        s = sum(vs)
+        return int(s) if integral else float(s)
+    if fn == "avg":
+        return float(sum(vs)) / len(vs)
+    if fn == "min":
+        return int(min(vs)) if integral else float(min(vs))
+    return int(max(vs)) if integral else float(max(vs))
+
+
+def _acc_add(acc, vals):
+    for k, v in enumerate(vals):
+        if v is None:
+            continue
+        acc["cnt"][k] += 1
+        acc["sum"][k] += v
+        acc["mn"][k] = v if acc["mn"][k] is None else min(acc["mn"][k], v)
+        acc["mx"][k] = v if acc["mx"][k] is None else max(acc["mx"][k], v)
+
+
 def running_over(
     events: DataFrame,
     partition_by: Sequence[str],
@@ -310,40 +357,6 @@ def running_over(
     n_aggs = len(metas)
     out_cols = in_cols + [m[1] for m in metas]
 
-    def _plain(v):
-        # numpy scalars / pandas NaN/NaT → JSON-serializable Python (the
-        # NaN-is-NULL rule: _is_sql_null discipline from the MR fold);
-        # dates round-trip as ordinals (review finding: a buffered DATE
-        # or NaT row crashed json.dumps)
-        if v is None or v is pd.NaT:
-            return None
-        if isinstance(v, float):
-            return None if v != v else v
-        if hasattr(v, "item"):  # numpy scalar
-            v = v.item()
-            if isinstance(v, float) and v != v:
-                return None
-        if isinstance(v, dt_mod.datetime):
-            return int(pd.Timestamp(v).value // 1000)
-        if isinstance(v, dt_mod.date):
-            return v.toordinal()
-        return v
-
-    def _window_val(fn, vals, integral):
-        vs = [v for v in vals if v is not None]
-        if fn == "count":
-            return len(vs)
-        if not vs:
-            return None
-        if fn == "sum":
-            s = sum(vs)
-            return int(s) if integral else float(s)
-        if fn == "avg":
-            return float(sum(vs)) / len(vs)
-        if fn == "min":
-            return int(min(vs)) if integral else float(min(vs))
-        return int(max(vs)) if integral else float(max(vs))
-
     def _acc_emit(acc, k):
         fn, _, integral = metas[k]
         if fn == "count":
@@ -357,15 +370,6 @@ def running_over(
         if fn == "min":
             return acc["mn"][k]
         return acc["mx"][k]
-
-    def _acc_add(acc, vals):
-        for k, v in enumerate(vals):
-            if v is None:
-                continue
-            acc["cnt"][k] += 1
-            acc["sum"][k] += v
-            acc["mn"][k] = v if acc["mn"][k] is None else min(acc["mn"][k], v)
-            acc["mx"][k] = v if acc["mx"][k] is None else max(acc["mx"][k], v)
 
     def fn_state(key, rows: Iterator[pd.DataFrame], state: GroupState):
         import json

@@ -136,15 +136,23 @@ def run_stream(
 ) -> tuple[list, int]:
     """Drain a streaming DataFrame to a memory sink; return (rows,
     total numRowsDroppedByWatermark across the run)."""
+    import shutil
+    import tempfile
+
     spark = out.sparkSession
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", None or f"/tmp/ckpt_{name}_{os.getpid()}")
-        .start()
-    )
+    # a fresh directory per run: a fixed per-pid path could resume the
+    # checkpoint a killed process left behind, whose file source already
+    # counts every replay file as read
+    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
+    q = None
     try:
+        q = (
+            out.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
         q.processAllAvailable()
         dropped = 0
         for p in q.recentProgress:
@@ -153,10 +161,9 @@ def run_stream(
         rows = spark.sql(f"SELECT * FROM {name}").collect()
         return rows, dropped
     finally:
-        q.stop()
-        import shutil
-
-        shutil.rmtree(f"/tmp/ckpt_{name}_{os.getpid()}", ignore_errors=True)
+        if q is not None:
+            q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 class PunctuatedWatermark:

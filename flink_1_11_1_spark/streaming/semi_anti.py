@@ -34,6 +34,7 @@ The batch twin (the parity oracle in tests) is exactly
 
 from __future__ import annotations
 
+import functools
 import json
 from collections.abc import Iterator
 
@@ -92,6 +93,75 @@ def _tag_union(left: DataFrame, right: DataFrame, key: str) -> DataFrame:
     return l.unionByName(r)
 
 
+def _semi_anti_fold(k, rows: Iterator[pd.DataFrame], state, *, horizon_us: int,
+                    emit_on_match: bool, key: str):
+    """Per-key fold of ``streaming_semi_anti_join``."""
+    min_rts, pending = (
+        (state.get[0], json.loads(state.get[1]))
+        if state.exists
+        else (_NO_RIGHT, [])
+    )
+    out: list[tuple] = []
+
+    def flush(wm_us: int) -> None:
+        nonlocal pending
+        live = []
+        for eid, lts in pending:
+            if lts + horizon_us < wm_us:  # expired: no match can arrive
+                if not emit_on_match:
+                    out.append((k[0], eid, lts))
+            else:
+                live.append((eid, lts))
+        pending = live
+
+    wm_us = state.getCurrentWatermarkMs() * 1000
+    if not state.hasTimedOut:
+        parts = [p for p in rows if len(p)]
+        if parts:
+            batch = pd.concat(parts, ignore_index=True).sort_values(
+                ["ts", "side"], ascending=[True, False]  # rights first on ties
+            )
+            for ev in batch.itertuples(index=False):
+                ts_us = int(ev.ts.value // 1000)
+                if ev.side == 1:  # right row
+                    if min_rts == _NO_RIGHT or ts_us < min_rts:
+                        min_rts = ts_us
+                    resolved, live = [], []
+                    for eid, lts in pending:
+                        (resolved if lts + horizon_us >= ts_us else live).append(
+                            (eid, lts)
+                        )
+                    if emit_on_match:
+                        out.extend((k[0], eid, lts) for eid, lts in resolved)
+                    pending = live
+                else:  # left row
+                    if min_rts != _NO_RIGHT and min_rts <= ts_us + horizon_us:
+                        if emit_on_match:
+                            out.append((k[0], int(ev.event_id), ts_us))
+                    else:
+                        pending.append((int(ev.event_id), ts_us))
+    flush(wm_us)
+
+    state.update((min_rts, json.dumps(pending)))
+    if pending:
+        next_ms = min(lts + horizon_us for _, lts in pending) // 1000 + 1
+        state.setTimeoutTimestamp(max(next_ms, state.getCurrentWatermarkMs() + 1))
+    else:
+        # no clear-timer API: PARK the timer far-future, or the old
+        # expired timestamp is written back with the state and this
+        # key re-fires on every later trigger forever (round-13
+        # review; the round-11 running_sum lesson class)
+        state.setTimeoutTimestamp(_PARK_TIMER_MS)
+    if out:
+        yield pd.DataFrame(
+            [
+                (kk, eid, pd.Timestamp(lts * 1000))
+                for kk, eid, lts in out
+            ],
+            columns=[key, "event_id", "ts"],
+        )
+
+
 def streaming_semi_anti_join(
     left: DataFrame,
     right: DataFrame,
@@ -105,82 +175,19 @@ def streaming_semi_anti_join(
     code path) with columns ``(key, ts, event_id)`` / ``(key, ts)``,
     already watermarked when streaming.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..session import configure
 
     if mode not in ("semi", "anti"):
         raise ValueError(f"mode must be semi|anti, got {mode!r}")
     configure(left.sparkSession)
-    horizon_us = _parse_interval(horizon) * 1_000_000
-    emit_on_match = mode == "semi"
-
-    def fn(k, rows: Iterator[pd.DataFrame], state: GroupState):
-        min_rts, pending = (
-            (state.get[0], json.loads(state.get[1]))
-            if state.exists
-            else (_NO_RIGHT, [])
-        )
-        out: list[tuple] = []
-
-        def flush(wm_us: int) -> None:
-            nonlocal pending
-            live = []
-            for eid, lts in pending:
-                if lts + horizon_us < wm_us:  # expired: no match can arrive
-                    if not emit_on_match:
-                        out.append((k[0], eid, lts))
-                else:
-                    live.append((eid, lts))
-            pending = live
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if not state.hasTimedOut:
-            parts = [p for p in rows if len(p)]
-            if parts:
-                batch = pd.concat(parts, ignore_index=True).sort_values(
-                    ["ts", "side"], ascending=[True, False]  # rights first on ties
-                )
-                for ev in batch.itertuples(index=False):
-                    ts_us = int(ev.ts.value // 1000)
-                    if ev.side == 1:  # right row
-                        if min_rts == _NO_RIGHT or ts_us < min_rts:
-                            min_rts = ts_us
-                        resolved, live = [], []
-                        for eid, lts in pending:
-                            (resolved if lts + horizon_us >= ts_us else live).append(
-                                (eid, lts)
-                            )
-                        if emit_on_match:
-                            out.extend((k[0], eid, lts) for eid, lts in resolved)
-                        pending = live
-                    else:  # left row
-                        if min_rts != _NO_RIGHT and min_rts <= ts_us + horizon_us:
-                            if emit_on_match:
-                                out.append((k[0], int(ev.event_id), ts_us))
-                        else:
-                            pending.append((int(ev.event_id), ts_us))
-        flush(wm_us)
-
-        state.update((min_rts, json.dumps(pending)))
-        if pending:
-            next_ms = min(lts + horizon_us for _, lts in pending) // 1000 + 1
-            state.setTimeoutTimestamp(max(next_ms, state.getCurrentWatermarkMs() + 1))
-        else:
-            # no clear-timer API: PARK the timer far-future, or the old
-            # expired timestamp is written back with the state and this
-            # key re-fires on every later trigger forever (round-13
-            # review; the round-11 running_sum lesson class)
-            state.setTimeoutTimestamp(_PARK_TIMER_MS)
-        if out:
-            yield pd.DataFrame(
-                [
-                    (kk, eid, pd.Timestamp(lts * 1000))
-                    for kk, eid, lts in out
-                ],
-                columns=[key, "event_id", "ts"],
-            )
-
+    fold = functools.partial(
+        _semi_anti_fold,
+        horizon_us=_parse_interval(horizon) * 1_000_000,
+        emit_on_match=mode == "semi",
+        key=key,
+    )
     return _tag_union(left, right, key).groupBy(key).applyInPandasWithState(
-        fn, _out_schema(key), _STATE, "append", GroupStateTimeout.EventTimeTimeout
+        fold, _out_schema(key), _STATE, "append", GroupStateTimeout.EventTimeTimeout
     )

@@ -45,6 +45,7 @@ The batch twin — and the parity oracle in tests — is
 
 from __future__ import annotations
 
+import functools
 import json
 from bisect import bisect_right
 from collections.abc import Iterator, Sequence
@@ -117,6 +118,78 @@ def _tag_union(
     return f.unionByName(v)
 
 
+def _temporal_fold(k, rows: Iterator[pd.DataFrame], state, *,
+                   emit_unmatched: bool, n_keys: int, fact_payload: list[str],
+                   fact_conv: list, ver_payload: list[str], ver_conv: list,
+                   out_cols: list[str]):
+    """Per-key fold of ``streaming_temporal_rowtime_join``."""
+    vers, facts = (
+        ([tuple(x) for x in json.loads(state.get[0])],
+         [tuple(x) for x in json.loads(state.get[1])])
+        if state.exists
+        else ([], [])
+    )
+    out: list[tuple] = []
+    wm_us = state.getCurrentWatermarkMs() * 1000
+
+    if not state.hasTimedOut:
+        parts = [p for p in rows if len(p)]
+        if parts:
+            batch = pd.concat(parts, ignore_index=True)
+            for ts_v, side, payload in zip(
+                batch["__ts"], batch["__side"], batch["__payload"]
+            ):
+                ts_us = int(ts_v.value // 1000)
+                if side == 1:  # new dim version (upsert on its ts)
+                    i = bisect_right([t for t, _ in vers], ts_us)
+                    if i and vers[i - 1][0] == ts_us:
+                        vers[i - 1] = (ts_us, payload)
+                    else:
+                        vers.insert(i, (ts_us, payload))
+                else:
+                    facts.append((ts_us, payload))
+
+    # resolve every fact the watermark has passed: no version with a
+    # smaller rowtime can still arrive, so the match is final
+    live_facts: list[tuple[int, str]] = []
+    ts_keys = [t for t, _ in vers]
+    for fts, fpayload in facts:
+        if fts <= wm_us:
+            i = bisect_right(ts_keys, fts)
+            if i:
+                out.append((fts, fpayload, vers[i - 1][1]))
+            elif emit_unmatched:
+                out.append((fts, fpayload, None))
+        else:
+            live_facts.append((fts, fpayload))
+
+    # GC (TemporalRowTimeJoinOperator.cleanUpState): versions older
+    # than the latest one at-or-before the watermark can never be
+    # valid for any future fact row
+    base = bisect_right(ts_keys, wm_us)
+    if base > 1:
+        vers = vers[base - 1:]
+
+    state.update((json.dumps(vers), json.dumps(live_facts)))
+    if live_facts:
+        next_ms = min(fts for fts, _ in live_facts) // 1000 + 1
+        state.setTimeoutTimestamp(
+            max(next_ms, state.getCurrentWatermarkMs() + 1)
+        )
+    if out:
+        recs = []
+        for fts, fpayload, vpayload in out:
+            fp = json.loads(fpayload)
+            vp = json.loads(vpayload) if vpayload is not None else {}
+            recs.append(
+                tuple(k[:n_keys])
+                + tuple(cv(fp.get(c)) for c, cv in zip(fact_payload, fact_conv))
+                + (pd.Timestamp(fts * 1000),)
+                + tuple(cv(vp.get(c)) for c, cv in zip(ver_payload, ver_conv))
+            )
+        yield pd.DataFrame(recs, columns=out_cols)
+
+
 def streaming_temporal_rowtime_join(
     fact: DataFrame,
     versions: DataFrame,
@@ -134,7 +207,7 @@ def streaming_temporal_rowtime_join(
     the watermark passes ``ts`` — the point where Flink's
     TemporalRowTimeJoinOperator also emits.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..session import configure
 
@@ -142,7 +215,6 @@ def streaming_temporal_rowtime_join(
         raise ValueError(f"how must be inner|left, got {how!r}")
     keys = [key] if isinstance(key, str) else list(key)
     configure(fact.sparkSession)
-    emit_unmatched = how == "left"
 
     fact_payload = [c for c in fact.columns if c not in keys and c != ts_col]
     ver_payload = [c for c in versions.columns if c not in keys and c != ts_col]
@@ -164,83 +236,21 @@ def streaming_temporal_rowtime_join(
     ]
     for f in out_fields:
         _reject_binary(f.dataType, f.name)
-    out_schema = StructType(out_fields)
-    out_cols = [f.name for f in out_fields]
-    fact_conv = [_converter(fact_fields[c].dataType) for c in fact_payload]
-    ver_conv = [_converter(ver_fields[c].dataType) for c in ver_payload]
-    n_keys = len(keys)
-
-    def fn(k, rows: Iterator[pd.DataFrame], state: GroupState):
-        vers, facts = (
-            ([tuple(x) for x in json.loads(state.get[0])],
-             [tuple(x) for x in json.loads(state.get[1])])
-            if state.exists
-            else ([], [])
-        )
-        out: list[tuple] = []
-        wm_us = state.getCurrentWatermarkMs() * 1000
-
-        if not state.hasTimedOut:
-            parts = [p for p in rows if len(p)]
-            if parts:
-                batch = pd.concat(parts, ignore_index=True)
-                for ts_v, side, payload in zip(
-                    batch["__ts"], batch["__side"], batch["__payload"]
-                ):
-                    ts_us = int(ts_v.value // 1000)
-                    if side == 1:  # new dim version (upsert on its ts)
-                        i = bisect_right([t for t, _ in vers], ts_us)
-                        if i and vers[i - 1][0] == ts_us:
-                            vers[i - 1] = (ts_us, payload)
-                        else:
-                            vers.insert(i, (ts_us, payload))
-                    else:
-                        facts.append((ts_us, payload))
-
-        # resolve every fact the watermark has passed: no version with a
-        # smaller rowtime can still arrive, so the match is final
-        live_facts: list[tuple[int, str]] = []
-        ts_keys = [t for t, _ in vers]
-        for fts, fpayload in facts:
-            if fts <= wm_us:
-                i = bisect_right(ts_keys, fts)
-                if i:
-                    out.append((fts, fpayload, vers[i - 1][1]))
-                elif emit_unmatched:
-                    out.append((fts, fpayload, None))
-            else:
-                live_facts.append((fts, fpayload))
-
-        # GC (TemporalRowTimeJoinOperator.cleanUpState): versions older
-        # than the latest one at-or-before the watermark can never be
-        # valid for any future fact row
-        base = bisect_right(ts_keys, wm_us)
-        if base > 1:
-            vers = vers[base - 1:]
-
-        state.update((json.dumps(vers), json.dumps(live_facts)))
-        if live_facts:
-            next_ms = min(fts for fts, _ in live_facts) // 1000 + 1
-            state.setTimeoutTimestamp(
-                max(next_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        if out:
-            recs = []
-            for fts, fpayload, vpayload in out:
-                fp = json.loads(fpayload)
-                vp = json.loads(vpayload) if vpayload is not None else {}
-                recs.append(
-                    tuple(k[:n_keys])
-                    + tuple(cv(fp.get(c)) for c, cv in zip(fact_payload, fact_conv))
-                    + (pd.Timestamp(fts * 1000),)
-                    + tuple(cv(vp.get(c)) for c, cv in zip(ver_payload, ver_conv))
-                )
-            yield pd.DataFrame(recs, columns=out_cols)
-
+    fold = functools.partial(
+        _temporal_fold,
+        emit_unmatched=how == "left",
+        n_keys=len(keys),
+        fact_payload=fact_payload,
+        fact_conv=[_converter(fact_fields[c].dataType) for c in fact_payload],
+        ver_payload=ver_payload,
+        ver_conv=[_converter(ver_fields[c].dataType) for c in ver_payload],
+        out_cols=[f.name for f in out_fields],
+    )
     return (
         _tag_union(fact, versions, keys, ts_col, fact_payload, ver_payload)
         .groupBy(*keys)
         .applyInPandasWithState(
-            fn, out_schema, _STATE, "append", GroupStateTimeout.EventTimeTimeout
+            fold, StructType(out_fields), _STATE, "append",
+            GroupStateTimeout.EventTimeTimeout,
         )
     )

@@ -42,6 +42,7 @@ At scale: one shuffle on the key; per-key state is a single long.
 
 from __future__ import annotations
 
+import functools
 import time
 from collections.abc import Iterator, Sequence
 
@@ -55,6 +56,36 @@ from .pattern import _parse_interval
 _STATE = StructType([StructField("expire_at", LongType())])
 
 UPDATE_TYPES = ("OnCreateAndWrite", "OnReadAndWrite")
+
+
+def _dedup_first_fold(key, rows: Iterator[pd.DataFrame], state, *, ttl_ms: int,
+                      extend_on_read: bool, cols: list[str],
+                      time_col: str | None):
+    """Per-key fold of ``dedup_first_ttl``."""
+    expire_at = state.get[0] if state.exists else None
+    parts = [p for p in rows if len(p)]
+    if not parts:
+        return
+    batch = pd.concat(parts, ignore_index=True)
+    if time_col is not None:
+        batch = batch.sort_values(time_col, kind="stable")
+    keep = []
+    clock = (
+        (int(v) for v in batch[time_col])
+        if time_col is not None
+        else (int(time.time() * 1000) for _ in range(len(batch)))
+    )
+    for i, now in zip(batch.index, clock):
+        if expire_at is None or now >= expire_at:
+            # state absent or expired-at-access (NeverReturnExpired):
+            # this row is FIRST; (re)create the state
+            keep.append(i)
+            expire_at = now + ttl_ms
+        elif extend_on_read:
+            expire_at = now + ttl_ms
+    state.update((expire_at,))
+    if keep:
+        yield batch.loc[keep, cols]
 
 
 def dedup_first_ttl(
@@ -72,7 +103,7 @@ def dedup_first_ttl(
     epoch ms) switches the TTL clock to that column for deterministic
     tests; omit for processing time.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..session import configure
 
@@ -81,38 +112,13 @@ def dedup_first_ttl(
             f"update_type must be one of {UPDATE_TYPES}, got {update_type!r}"
         )
     configure(events.sparkSession)
-    ttl_ms = int(_parse_interval(ttl) * 1000)
-    extend_on_read = update_type == "OnReadAndWrite"
-    out_schema = events.schema
-    cols = events.columns
-    use_col_clock = time_col is not None
-
-    def fn(key, rows: Iterator[pd.DataFrame], state: GroupState):
-        expire_at = state.get[0] if state.exists else None
-        parts = [p for p in rows if len(p)]
-        if not parts:
-            return
-        batch = pd.concat(parts, ignore_index=True)
-        if use_col_clock:
-            batch = batch.sort_values(time_col, kind="stable")
-        keep = []
-        clock = (
-            (int(v) for v in batch[time_col])
-            if use_col_clock
-            else (int(time.time() * 1000) for _ in range(len(batch)))
-        )
-        for i, now in zip(batch.index, clock):
-            if expire_at is None or now >= expire_at:
-                # state absent or expired-at-access (NeverReturnExpired):
-                # this row is FIRST; (re)create the state
-                keep.append(i)
-                expire_at = now + ttl_ms
-            elif extend_on_read:
-                expire_at = now + ttl_ms
-        state.update((expire_at,))
-        if keep:
-            yield batch.loc[keep, cols]
-
+    fold = functools.partial(
+        _dedup_first_fold,
+        ttl_ms=int(_parse_interval(ttl) * 1000),
+        extend_on_read=update_type == "OnReadAndWrite",
+        cols=events.columns,
+        time_col=time_col,
+    )
     return events.groupBy(*keys).applyInPandasWithState(
-        fn, out_schema, _STATE, "append", GroupStateTimeout.NoTimeout
+        fold, events.schema, _STATE, "append", GroupStateTimeout.NoTimeout
     )

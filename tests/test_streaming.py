@@ -60,6 +60,29 @@ def test_s1_tumble_stream_equals_batch(spark, replay_dir):
     assert got_m == want_m
 
 
+def test_run_stream_ignores_stale_checkpoint(spark, replay_dir):
+    """A finished query's checkpoint left at the fixed per-pid path
+    ``run_stream`` once used (a killed process, its pid reused) is not
+    resumed: resuming it would count every replay file as read."""
+    name = "s_stale_ckpt"
+    stale = f"/tmp/ckpt_{name}_{os.getpid()}"
+    counts = replay.events_stream(spark, replay_dir).groupBy("event_type") \
+        .agg(F.count("*").alias("n"))
+    try:
+        q = (counts.writeStream.format("memory").queryName(f"{name}_planted")
+             .outputMode("complete").option("checkpointLocation", stale)
+             .start())
+        q.processAllAvailable()
+        q.stop()
+        got, _ = replay.run_stream(counts, "complete", name)
+    finally:
+        shutil.rmtree(stale, ignore_errors=True)
+    want = spark.read.parquet(os.path.join(replay_dir, "chunk_*.parquet")) \
+        .groupBy("event_type").agg(F.count("*").alias("n")).collect()
+    assert _rows_set(got, "event_type", "n") == \
+        _rows_set(want, "event_type", "n") != set()
+
+
 def test_replay_chunk_mtimes_monotonic_across_calls(spark, tmp_path):
     """The file source replays chunks in mtime order; with the fast
     driver-side writes two write_replay_frames calls land within the
