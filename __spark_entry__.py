@@ -117,8 +117,10 @@ _DEFER_FIRST: tuple[str, ...] = ()
 # pack and DataStream-reduce entries come next: the functions they ship
 # to Python workers now call module-level package code.  x_pipeline_clean
 # imports dedup lazily now (pipeline.py imported first was circular).
+# x_quantiles' helper now leaves NULL values out of both passes.  The
+# MR and CEP entries below run on one fold core and one tier-A builder.
 _REVERIFY_FIRST: tuple[str, ...] = (
-    "x_semdedup", "x_mad_outliers",
+    "x_semdedup", "x_mad_outliers", "x_quantiles",
     "x_dedup_cosine", "x_dedup_cosine_lsh", "x_pack_batches", "x_ds_reduce",
     "x_pipeline_clean",
     "x_sql_tumble", "x_sql_hop", "x_sql_session", "x_sql_lateral",

@@ -469,7 +469,7 @@ class KeyedStream:
     def max_by(self, field: str) -> DataStream:
         return self._by(field, asc=False)
 
-    def reduce(self, fn: Callable, output_same: bool = True) -> DataStream:
+    def reduce(self, fn: Callable) -> DataStream:
         """``KeyedStream.reduce``: pairwise fold of whole rows.
         Bounded result = the final fold per key (Arrow per-key stage;
         the fold order is the rowtime order if assigned, else the
@@ -535,8 +535,7 @@ class KeyedStream:
         windows (fire every ``slide`` elements over the last ``size``)."""
         return CountWindowedStream(self, size, slide)
 
-    def process(self, fn: Callable, schema: str,
-                state_fold: bool = False) -> DataStream:
+    def process(self, fn: Callable, schema: str) -> DataStream:
         """``KeyedProcessFunction`` slot: bounded inputs run the
         callable per key over the rowtime-ordered pandas frame
         (``fn(key_tuple, pdf) -> pdf``); the streaming stateful twin

@@ -690,7 +690,9 @@ def exact_quantiles(
     exposed for arbitrary inputs; property-tested over random frames).
 
     Same rank convention: lower discrete quantile, smallest value with
-    cum_count >= ceil(p*n); ties ordered by (value, tiebreak)."""
+    cum_count >= ceil(p*n); ties ordered by (value, tiebreak).  NULL
+    values take no rank and do not count in n (Spark's
+    ``percentile_disc``)."""
     spark = df.sparkSession
     _QVIEW_N[0] += 1
     view = f"__exact_quantiles_{_QVIEW_N[0]}"
@@ -700,7 +702,8 @@ def exact_quantiles(
     try:
         return spark.sql(f"""
 WITH b AS (
-  SELECT {bk} AS bk, count(*) AS cnt FROM {view} GROUP BY 1
+  SELECT {bk} AS bk, count(*) AS cnt FROM {view}
+  WHERE {value_col} IS NOT NULL GROUP BY 1
 ),
 c AS (
   SELECT bk, cnt,
@@ -722,7 +725,7 @@ r AS (
          row_number() OVER (PARTITION BY {bk}
                             ORDER BY {value_col}, {tiebreak_col}) AS rn
   FROM {view}
-  WHERE {bk} IN (SELECT bk FROM hit)
+  WHERE {value_col} IS NOT NULL AND {bk} IN (SELECT bk FROM hit)
 )
 SELECT h.p AS p, r.v AS value
 FROM hit h JOIN r ON r.bk = h.bk AND r.rn = h.target - h.below

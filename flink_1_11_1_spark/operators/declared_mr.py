@@ -465,7 +465,7 @@ ORDER BY a.user_id, v_first
 # ------------------------------------------------ backtracking (round 7)
 # PATTERN (A B? C) where B and C share the SAME value condition — not
 # provably disjoint, so match_recognize auto-selects the branching NFA
-# (streaming/nfa._fold_events_bt, Flink [cep]nfa/NFA.java semantics):
+# (streaming/nfa._fold_events, backtracking mode — Flink [cep]nfa/NFA.java):
 # at the row after A the fold FORKS (bind it to B, or skip B and bind
 # it to C); the greedy branch (B taken) wins iff a second qualifying
 # row completes C, else the backtrack branch (B skipped) emits.  The
@@ -580,7 +580,7 @@ def mr_group_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plans NATIVELY: bounded groups unroll into tier-A lead() branches
     ordered by the regex decision sequence
-    (nfa_lowering._lower_fixed_groups) — no Python stage; the NFA
+    (nfa_lowering._lower_fixed) — no Python stage; the NFA
     group loop-back fold stays the general path (past_last,
     unbounded reps).  Oracle: the greedy 5-row template wins its
     start; the 3-row template emits where the 5-row can't."""

@@ -21,10 +21,11 @@ Rendering on Spark's micro-batch model:
   directories) and the whole tree stays ONE partitioned dataset for
   clean discovery.  Commits are ``root/_commits/pt=<bucket>`` markers
   for every partition whose END <= the current watermark.
-- The watermark base is DISK-persisted per batch (the late.py marker
-  pattern): max event time over batches < current — so a retry of
-  batch N never counts N's own rows, and a driver restart resumes the
-  commit frontier exactly.
+- The watermark base is DISK-persisted per batch (streaming/
+  wm_markers.py, shared with late.py): max event time over batches <
+  current — so a retry of batch N never counts N's own rows, and a
+  driver restart resumes the commit frontier exactly.  The root must
+  be a local (or locally mounted) path; a remote URI is rejected.
 - Commits are monotone and idempotent (marker files; re-commit is a
   no-op), and a partition is never committed while rows for it can
   still arrive inside the watermark delay — Flink's guarantee.
@@ -37,7 +38,6 @@ marker files only (O(#partitions), not O(rows)).
 
 from __future__ import annotations
 
-import json
 import os
 import re
 
@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..streaming.pattern import _parse_interval
+from ..streaming.wm_markers import marker_dir, prev_max_us, write_max_us
 
 
 class PartitionCommitSink:
@@ -61,29 +62,12 @@ class PartitionCommitSink:
         self.part_us = _parse_interval(partition) * 1_000_000
         self.wm_delay_us = _parse_interval(watermark_delay) * 1_000_000
         self.commit_delay_us = _parse_interval(commit_delay) * 1_000_000
+        self._wm_dir = marker_dir(self.path, "PartitionCommitSink")
 
     # -- disk state ------------------------------------------------------
 
-    def _wm_dir(self) -> str:
-        return os.path.join(self.path, "_wm")
-
     def _commit_dir(self) -> str:
         return os.path.join(self.path, "_commits")
-
-    def _prev_max_us(self, before_batch: int) -> int | None:
-        d = self._wm_dir()
-        if not os.path.isdir(d):
-            return None
-        best: int | None = None
-        for fn in os.listdir(d):
-            m = re.fullmatch(r"b(\d+)\.json", fn)
-            if not m or int(m.group(1)) >= before_batch:
-                continue
-            with open(os.path.join(d, fn)) as fh:
-                v = json.load(fh)["max_us"]
-            if v is not None and (best is None or v > best):
-                best = v
-        return best
 
     def committed(self) -> list[int]:
         """Committed partition START buckets (epoch micros), sorted."""
@@ -117,14 +101,11 @@ class PartitionCommitSink:
         # watermark update rule (Spark: between micro-batches), persisted
         row = batch_df.agg(F.max(ts_us).alias("m")).first()
         batch_df.unpersist()
-        os.makedirs(self._wm_dir(), exist_ok=True)
-        tmp = os.path.join(self._wm_dir(), f".b{batch_id}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"max_us": int(row.m) if row and row.m is not None else None}, fh)
-        os.replace(tmp, os.path.join(self._wm_dir(), f"b{batch_id}.json"))
+        write_max_us(self._wm_dir, batch_id,
+                     int(row.m) if row and row.m is not None else None)
 
         # commit frontier: partitions fully behind the watermark
-        prev_max = self._prev_max_us(batch_id)
+        prev_max = prev_max_us(self._wm_dir, batch_id)
         if prev_max is None:
             return
         wm_us = prev_max - self.wm_delay_us

@@ -27,14 +27,11 @@ matching numRowsDroppedByWatermark's accounting exactly).
 
 from __future__ import annotations
 
-import json
-import os
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .pattern import _parse_interval
+from .wm_markers import marker_dir, prev_max_us, write_max_us
 
 
 class LateSideOutput:
@@ -54,45 +51,13 @@ class LateSideOutput:
             _parse_interval(window_size) * 1_000_000 if window_size else None
         )
         self.sink_path = str(sink_path)
-        # the marker protocol uses driver-local os.* I/O; on a remote
-        # filesystem it would silently capture NOTHING (round-13
-        # review) — fail fast with the porting pointer instead
-        if re.match(r"^[a-z][a-z0-9+.\-]*://", self.sink_path, re.IGNORECASE):
-            raise NotImplementedError(
-                "LateSideOutput's watermark markers use driver-local file "
-                f"I/O; sink_path {self.sink_path!r} is a remote URI — use a "
-                "locally-mounted (shared/NFS) path, or port _prev_max_us/"
-                "__call__'s marker writes to the Hadoop FileSystem API for "
-                "object stores"
-            )
+        self._wm_dir = marker_dir(self.sink_path, "LateSideOutput")
         # cached watermark base: (last_batch_id, max over batches <
         # last, max over batches <= last) — avoids re-listing every
         # marker per batch; a RETRY of last_batch_id must use the
         # before-last value (never its own rows), anything older falls
         # back to the disk scan
         self._base_cache: tuple[int, int | None, int | None] | None = None
-
-    def _marker_dir(self) -> str:
-        return os.path.join(self.sink_path, "_wm")
-
-    def _prev_max_us(self, before_batch: int) -> int | None:
-        """Watermark base: max event time over markers of STRICTLY
-        earlier batches, discovered on disk (not driver memory) so a
-        restart resumes exactly and a retry of batch N never counts
-        N's own rows."""
-        d = self._marker_dir()
-        if not os.path.isdir(d):
-            return None
-        best: int | None = None
-        for fn in os.listdir(d):
-            m = re.fullmatch(r"b(\d+)\.json", fn)
-            if not m or int(m.group(1)) >= before_batch:
-                continue
-            with open(os.path.join(d, fn)) as fh:
-                v = json.load(fh)["max_us"]
-            if v is not None and (best is None or v > best):
-                best = v
-        return best
 
     def _base_for(self, batch_id: int) -> int | None:
         """Cached watermark base with exact retry discipline; disk scan
@@ -104,7 +69,7 @@ class LateSideOutput:
                 return through_last
             if batch_id == last:  # foreachBatch retry: exclude own rows
                 return before_last
-        return self._prev_max_us(batch_id)
+        return prev_max_us(self._wm_dir, batch_id)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         ts_us = F.unix_micros(F.col(self.ts_col))
@@ -131,12 +96,8 @@ class LateSideOutput:
         row = batch_df.agg(F.max(ts_us).alias("m")).first()
         if prev_max is not None:
             batch_df.unpersist()
-        os.makedirs(self._marker_dir(), exist_ok=True)
-        tmp = os.path.join(self._marker_dir(), f".b{batch_id}.json.tmp")
         batch_max = int(row.m) if row and row.m is not None else None
-        with open(tmp, "w") as fh:
-            json.dump({"batch_id": batch_id, "max_us": batch_max}, fh)
-        os.replace(tmp, os.path.join(self._marker_dir(), f"b{batch_id}.json"))
+        write_max_us(self._wm_dir, batch_id, batch_max)
         vals = [v for v in (prev_max, batch_max) if v is not None]
         self._base_cache = (batch_id, prev_max, max(vals) if vals else None)
 

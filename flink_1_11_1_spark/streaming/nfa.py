@@ -13,10 +13,17 @@ Two execution modes share one event-at-a-time contract:
   dispatch shapes every funnel uses), and the mode the native
   lowerings (nfa_lowering.py) encode.
 - BACKTRACKING (``with_backtracking()``, Flink nfa/NFA.java parity):
-  ambiguous transitions fork (``_fold_events_bt``), completed branches
-  resolve by regex-greedy priority (reluctant states reverse it), and
-  matches may start at any state behind leading optionals — validated
-  against Python's ``re`` engine by the 41-case differential fuzzer.
+  ambiguous transitions fork, completed branches resolve by
+  regex-greedy priority (reluctant states reverse it), and matches may
+  start at any state behind leading optionals — validated against
+  Python's ``re`` engine by the 41-case differential fuzzer.
+Both modes run on ONE fold core (``_fold_events``, selected by
+``spec["backtrack"]``), which differs between them in two places only:
+the transition choice (first viable transition vs a fork per viable
+transition) and the emission policy (emit at completion via
+``_emit_completed`` vs pend and resolve via ``_resolve``).  Columns,
+label lookup, WITHIN expiry, until(), the wait-or-die contiguity rules
+and starts are one copy — a fix there lands once, for both modes.
 Negative edge guards (``not_next``/``not_followed_by``) kill a waiting
 partial on an un-consumed matching event in BOTH modes.
 
@@ -842,406 +849,229 @@ def _py_cond_ok(code, p: dict | None, evvals: dict,
         raise
 
 
-def _fold_events(
-    key: int, events: pd.DataFrame, partials: list[dict], spec: dict,
-    finalize: bool = False,
-) -> tuple[list[tuple], list[dict]]:
-    """Fold a (ts, event_id)-sorted batch into partial-match state.
+def _plain(v):
+    """A pandas cell as a JSON-serializable Python value (partials
+    round-trip through streaming state as JSON)."""
+    if v is None or isinstance(v, (int, float, str, bool)):
+        return v
+    if hasattr(v, "item"):  # numpy scalar
+        return v.item()
+    return str(v)
 
-    A partial is a JSON-able dict: si (state index), cnt (count in
-    current state), closed (state frozen by a consecutive-break),
-    labels/ids/tss (collected events; tss in epoch micros), start
-    (first-event micros), sid (start event id, for to_next).
-    Returns (completed matches, surviving partials) — shared by the
-    batch and streaming backends so semantics cannot drift.
 
-    ``spec["backtrack"]`` routes to the branching fold
-    (``_fold_events_bt``); ``finalize`` only matters there (bounded
-    input exhausted → resolve buffered completions) — the
-    deterministic fold emits at completion, so it ignores it.
-    """
-    if spec.get("backtrack"):
-        return _fold_events_bt(key, events, partials, spec, finalize)
-    states = spec["states"]
-    horizon = spec["horizon_us"]
-    skip = spec["skip"]
-    groups = spec.get("groups") or []
-    # group-end state index → (start, gmin, gmax, greedy, group idx)
-    gend = {g[1]: (g[0], g[2], g[3], g[4], gi)
-            for gi, g in enumerate(groups)}
-    max_partials = spec.get("max_partials") or 100_000
-    rejected_starts = 0
-    py_conds = spec.get("py_conds") or [None] * len(states)
-    value_cols = spec.get("value_cols") or []
-    n_states = len(states)
-    out: list[tuple] = []
-    n_events = len(events)
-    if not n_events:
-        return out, partials
+def _match_row(key, p: dict) -> tuple:
+    """One output row (``match_schema`` column order) for a match."""
+    return (
+        key,
+        pd.Timestamp(p["start"] * 1000),
+        pd.Timestamp(p["tss"][-1] * 1000),
+        list(p["labels"]),
+        list(p["ids"]),
+        [pd.Timestamp(t * 1000) for t in p["tss"]],
+    )
 
-    def _plain(v):
-        if v is None or isinstance(v, (int, float, str, bool)):
-            return v
-        if hasattr(v, "item"):  # numpy scalar → JSON-serializable python
-            return v.item()
-        return str(v)
 
-    # Column extraction once per batch (the per-row itertuples/getattr
-    # path dominated fold time at 100k-event scale).  Flag columns are
-    # non-nullable booleans by construction (_with_flags coalesces).
+def _branch(p: dict, deck: list, **kw) -> dict:
+    """An independent copy of partial ``p`` on decision string ``deck``
+    (a fork sibling, or a pending completion with ``kw`` overrides)."""
+    q = {
+        "si": p["si"], "cnt": p["cnt"], "closed": p["closed"],
+        "labels": list(p["labels"]), "ids": list(p["ids"]),
+        "tss": list(p["tss"]), "vals": list(p.get("vals", [])),
+        "start": p["start"], "sid": p["sid"], "deck": deck,
+    }
+    if p.get("gc"):
+        q["gc"] = list(p["gc"])
+    q.update(kw)
+    return q
+
+
+def _skip_ref(p: dict, mode: str, var: str) -> tuple[int, int] | None:
+    """(ts, id) of the first (``to_first``) or last (``to_last``) row the
+    match mapped to ``var`` — partials starting before it are pruned;
+    None when the match has no ``var`` row (prunes nothing)."""
+    idxs = [i for i, lb in enumerate(p["labels"]) if lb == var]
+    if not idxs:
+        return None
+    i = idxs[0] if mode == "to_first" else idxs[-1]
+    return (p["tss"][i], p["ids"][i])
+
+
+def _columns(events: pd.DataFrame, spec: dict, n_states: int) -> tuple:
+    """Per-batch column extraction (the per-row itertuples/getattr path
+    dominated fold time at 100k-event scale): ts (epoch micros), ids,
+    per-state flags, value columns, and the per-state negative-guard,
+    alternative and until() flags.  Flag columns are non-nullable
+    booleans by construction (_with_flags coalesces)."""
+
+    def flags(prefix: str, on) -> dict[int, list[bool]]:
+        return {i: events[f"{prefix}{i}"].astype(bool).tolist()
+                for i in range(n_states) if on[i]}
+
     # normalize to ns first: pandas may hold datetime64[us] depending on
     # the Arrow conversion path, and a bare astype(int64) would then be
     # µs already (off by 1000 after the //1000)
-    ts_arr = (events["ts"].astype("datetime64[ns]").astype("int64") // 1000).tolist()
-    eid_arr = events["event_id"].astype("int64").tolist()
-    flag_arrs = [events[f"f{i}"].astype(bool).tolist() for i in range(n_states)]
-    val_arrs = {c: events[f"v_{c}"].tolist() for c in value_cols}
-    neg = spec.get("neg") or [(False, False)] * n_states
-    neg_arrs = {
-        i: events[f"g{i}"].astype(bool).tolist()
-        for i in range(n_states) if neg[i][0]
-    }
+    ts = (events["ts"].astype("datetime64[ns]").astype("int64") // 1000).tolist()
     alts = spec.get("alts") or [[] for _ in range(n_states)]
-    alt_codes = spec.get("alt_py_conds") or [[] for _ in range(n_states)]
-    alt_arrs = {
-        i: [events[f"f{i}x{k}"].astype(bool).tolist()
-            for k in range(len(alts[i]))]
-        for i in range(n_states) if alts[i]
-    }
-    until = spec.get("until") or [False] * n_states
-    until_arrs = {
-        i: events[f"u{i}"].astype(bool).tolist()
-        for i in range(n_states) if until[i]
-    }
-    # a match may START at any state reachable through leading
-    # optional (min 0) states — Flink's A? B matches a bare B
-    start_chain = [0]
-    while start_chain[-1] < n_states - 1 \
-            and states[start_chain[-1]][1] == 0:
-        start_chain.append(start_chain[-1] + 1)
+    return (
+        ts,
+        events["event_id"].astype("int64").tolist(),
+        [events[f"f{i}"].astype(bool).tolist() for i in range(n_states)],
+        {c: events[f"v_{c}"].tolist() for c in spec.get("value_cols") or []},
+        flags("g", [n for n, _ in spec.get("neg") or [(False, False)] * n_states]),
+        {i: [events[f"f{i}x{k}"].astype(bool).tolist() for k in range(len(a))]
+         for i, a in enumerate(alts) if a},
+        flags("u", spec.get("until") or [False] * n_states),
+    )
 
-    # greedy quantified FINAL state (B{1,3} / B+ at pattern end): the
-    # match closes at cap / strict break / expiry / finalize rather
-    # than at the min count (round 11)
-    qf = (n_states - 1 not in gend) and (
-        states[-1][2] is None or states[-1][2] != states[-1][1])
 
-    for ei in range(n_events):
-        ts_us = ts_arr[ei]
-        eid = eid_arr[ei]
-        flags = [fa[ei] for fa in flag_arrs]
-        evvals = {c: _plain(val_arrs[c][ei]) for c in value_cols}
+def _emit_completed(
+    key, completed: list[dict], survivors: list[dict], skip: str,
+    out: list[tuple], at: tuple[int, int] | None = None,
+) -> tuple[list[dict], bool]:
+    """Deterministic-mode emission: completed matches emit oldest start
+    first (stable by start event id), and AFTER MATCH SKIP prunes later
+    completions and ``survivors``.  ``at`` is the current event's
+    (ts, id) — None at finalize.  Returns (survivors,
+    suppress_start_at_this_event).
 
-        def _lbl(j: int, p: dict | None) -> str | None:
-            """Label consumed if the event can enter/extend state j —
-            the primary variable, else the first matching alternative
-            (regex ``|`` order) — or None."""
-            if flags[j]:
-                code = py_conds[j]
-                if code is None or _py_cond_ok(code, p, evvals, states[j][0]):
-                    return states[j][0]
-            for k, nm in enumerate(alts[j]):
-                if alt_arrs[j][k][ei]:
-                    code = alt_codes[j][k]
-                    if code is None or _py_cond_ok(code, p, evvals, nm):
-                        return nm
-            return None
+    past_last prunes by the emitted match's LAST ROW, not by the
+    completing event: a break/expiry completion (quantified final)
+    resolves at an event AFTER the match end, and that event — plus
+    partials started after the end — must survive.  For cap completions
+    the end IS the current event: everything else dies and no partial
+    starts there."""
+    if not completed:
+        return survivors, False
+    completed.sort(key=lambda p: (p["start"], p["sid"]))
+    skip_mode, _, skip_var = skip.partition(":")
+    past_end: tuple[int, int] | None = None
+    min_start: tuple[int, int] | None = None  # to_first/to_last prune ref
+    suppress = False
+    for p in completed:
+        g = (p["start"], p["sid"])
+        if past_end is not None and g <= past_end:
+            continue  # consumed by a past_last skip
+        if min_start is not None and g < min_start:
+            continue  # pruned by an earlier skip-to emission
+        out.append(_match_row(key, p))
+        if skip_mode == "past_last":
+            past_end = (p["tss"][-1], p["ids"][-1])
+            survivors = [
+                s for s in survivors if (s["start"], s["sid"]) > past_end
+            ]
+            if at is not None and past_end >= at:
+                suppress = True
+        elif skip_mode == "to_next":
+            survivors = [s for s in survivors if s["sid"] != p["sid"]]
+        elif skip_mode in ("to_first", "to_last"):
+            ref = _skip_ref(p, skip_mode, skip_var)
+            if ref is not None and (min_start is None or ref > min_start):
+                min_start = ref
+    if min_start is not None:
+        survivors = [
+            s for s in survivors if (s["start"], s["sid"]) >= min_start
+        ]
+    return survivors, suppress
 
-        def _ok(j: int, p: dict | None) -> bool:
-            return _lbl(j, p) is not None
 
-        def _startable(j: int) -> bool:
-            return flags[j] or any(a[ei] for a in alt_arrs.get(j, ()))
+def _resolve(
+    key, pend: list[dict], survivors: list[dict], skip: str,
+    out: list[tuple], ts_us: int | None = None,
+) -> tuple[list[dict], list[dict], bool]:
+    """Branching-mode emission: emit every pending match whose greedier
+    siblings are all dead (all of them at finalize, ``ts_us`` None) —
+    one match per start, the min-deck candidate; its siblings die.
+    Returns (pend, survivors, suppress_start_at_this_event).
 
-        if not partials and not any(_startable(j) for j in start_chain):
-            continue  # nothing live and nothing can start — skip fast
-        survivors: list[dict] = []
-        completed: list[dict] = []
-        # WITHIN expiry: partials die — EXCEPT a greedy quantified-final
-        # run at or past its min, whose own rows are all inside the
-        # window: only the EXTENSION window expired, so the longest run
-        # found is the match (round 11; mirrors the branching fold's
-        # pend resolution when the extending sibling expires).
-        kept: list[dict] = []
-        for p in partials:
-            if ts_us <= p["start"] + horizon:
-                kept.append(p)
-            elif qf and p["si"] == n_states - 1 and p["cnt"] >= states[-1][1]:
-                completed.append(p)
-        partials = kept
-        suppress_start = False
-        for p in partials:
-            si = p["si"]
-            name, mn, mx, strict_in, consec = states[si]
-            # until() stop condition: freeze the loop BEFORE the extend
-            # check (the matching event is never consumed into it); a
-            # partial frozen below min can never complete — dead
-            if until[si] and until_arrs[si][ei] and not p["closed"]:
-                p["closed"] = True
-                if p["cnt"] < mn:
-                    continue
-            # greedy: extend current state first
-            ext_lbl = (
-                _lbl(si, p)
-                if not p["closed"] and (mx is None or p["cnt"] < mx)
-                else None
-            )
-            def _complete_at(q: dict, j: int) -> bool:
-                """Reaching state j's min completes the PATTERN unless
-                j ends a group still below its repetition count."""
-                if j != n_states - 1:
-                    return False
-                if j in gend:
-                    gs_, gmn_, _gmx, _gg, gi_ = gend[j]
-                    done = (q.get("gc") or [0] * len(groups))[gi_] + 1
-                    return done >= gmn_
-                return True
-
-            if ext_lbl is not None:
-                p["cnt"] += 1
-                p["labels"].append(ext_lbl)
-                p["ids"].append(eid)
-                p["tss"].append(ts_us)
-                p.setdefault("vals", []).append(evvals)
-                p["ng"] = True  # re-arm the notNext slot
-                # a quantified final completes at its CAP (greedy takes
-                # every extension up to max); an UNBOUNDED quantified
-                # final never completes by count (break/expiry/finalize
-                # only — review finding: the mn fallback truncated
-                # B{2,} at its min); fixed finals at min
-                if qf and si == n_states - 1:
-                    done_at = mx  # None = never by count
-                else:
-                    done_at = mn
-                if done_at is not None and p["cnt"] == done_at \
-                        and _complete_at(p, si):
-                    completed.append(p)
-                else:
-                    survivors.append(p)
-                continue
-            # advance: group loop-back first (greedy: another repetition
-            # outranks proceeding), then the first later state whose
-            # flag holds, skipping optionals
-            advanced = False
-            if p["cnt"] >= mn:
-                proceed_ok = True
-                if si in gend:
-                    gs_, gmn_, gmx_, _gg, gi_ = gend[si]
-                    gc = p.get("gc") or [0] * len(groups)
-                    loops_done = gc[gi_] + 1
-                    if gmx_ is None or loops_done < gmx_:
-                        glbl = _lbl(gs_, p)
-                        if glbl is not None:
-                            gc[gi_] = loops_done
-                            p["gc"] = gc
-                            p.update(si=gs_, cnt=1, closed=False)
-                            p["labels"].append(glbl)
-                            p["ids"].append(eid)
-                            p["tss"].append(ts_us)
-                            p.setdefault("vals", []).append(evvals)
-                            p["ng"] = True
-                            survivors.append(p)
-                            advanced = True
-                    proceed_ok = not advanced and loops_done >= gmn_
-                if not advanced and proceed_ok:
-                    j = si + 1
-                    while j < n_states:
-                        jname, jmn, jmx, jstrict, jconsec = states[j]
-                        jlbl = _lbl(j, p)
-                        if jlbl is not None:
-                            p.update(si=j, cnt=1, closed=False)
-                            p["labels"].append(jlbl)
-                            p["ids"].append(eid)
-                            p["tss"].append(ts_us)
-                            p.setdefault("vals", []).append(evvals)
-                            p["ng"] = True
-                            if (jmn == 1 and _complete_at(p, j)
-                                    and not (qf and j == n_states - 1
-                                             and jmx != 1)):
-                                completed.append(p)
-                            else:
-                                survivors.append(p)
-                            advanced = True
-                            break
-                        if jmn == 0:
-                            j += 1
-                            continue
-                        break
-            if advanced:
-                continue
-            # neither extended nor advanced: contiguity kill rules
-            if consec and p["cnt"] < mn:
-                continue  # broken repeat chain below min — dead
-            if consec and qf and si == n_states - 1:
-                # a strict quantified-final run broken by a row that
-                # does not extend it: the longest run found IS the
-                # match (ISO MATCH_RECOGNIZE greedy; Flink NFA emits
-                # when the greedier branch dies)
-                completed.append(p)
-                continue
-            if consec:
-                p["closed"] = True  # min reached: freeze, may still advance
-            nxt = si + 1
-            if p["cnt"] >= mn and si in gend:
-                # waiting at a group end: dead only if EVERY available
-                # continuation (loop-back / proceed) is a strict edge
-                gs_, gmn_, gmx_, _gg, gi_ = gend[si]
-                loops_done = (p.get("gc") or [0] * len(groups))[gi_] + 1
-                loop_viable = gmx_ is None or loops_done < gmx_
-                proceed_viable = loops_done >= gmn_ and nxt < n_states
-                can_wait = (loop_viable and not states[gs_][3]) or \
-                    (proceed_viable and not states[nxt][3])
-                if not (loop_viable or proceed_viable):
-                    can_wait = False  # exhausted on both sides
-                if not can_wait:
-                    continue
-                survivors.append(p)
-                continue
-            if p["cnt"] >= mn and nxt < n_states and states[nxt][3]:
-                continue  # strict_in edge violated — dead
-            if p["cnt"] >= mn and nxt < n_states and neg[nxt][0]:
-                # negative edge guard (notNext/notFollowedBy): an
-                # UN-consumed event matching the guard kills the partial
-                hit = neg_arrs[nxt][ei]
-                strict_neg = neg[nxt][1]
-                if hit and (not strict_neg or p.get("ng", True)):
-                    continue  # killed by the negative pattern
-                if strict_neg:
-                    p["ng"] = False  # the immediate slot has passed
-            survivors.append(p)
-        # emission order: oldest start first (stable by start event id)
-        completed.sort(key=lambda p: (p["start"], p["sid"]))
-        skip_mode, _, skip_var = skip.partition(":")
-        # past_last prunes by the emitted match's LAST ROW, not by the
-        # completing event: a break/expiry completion (quantified final,
-        # round 11) resolves at an event AFTER the match end, and that
-        # event — plus partials started after the end — must survive.
-        # For cap completions the end IS the current event, reducing to
-        # the old kill-everything/suppress-start behavior exactly.
-        past_end: tuple[int, int] | None = None
-        min_start: tuple[int, int] | None = None  # to_first/to_last prune ref
-        for p in completed:
-            if past_end is not None and (p["start"], p["sid"]) <= past_end:
-                continue  # consumed by a past_last skip
-            if min_start is not None and (p["start"], p["sid"]) < min_start:
-                continue  # pruned by an earlier skip-to emission
-            out.append(
-                (
-                    key,
-                    pd.Timestamp(p["start"] * 1000),
-                    pd.Timestamp(p["tss"][-1] * 1000),
-                    list(p["labels"]),
-                    list(p["ids"]),
-                    [pd.Timestamp(t * 1000) for t in p["tss"]],
-                )
-            )
-            if skip_mode == "past_last":
-                past_end = (p["tss"][-1], p["ids"][-1])
-                survivors = [
-                    s for s in survivors if (s["start"], s["sid"]) > past_end
-                ]
-                if past_end >= (ts_us, eid):
-                    suppress_start = True
-            elif skip_mode == "to_next":
-                survivors = [s for s in survivors if s["sid"] != p["sid"]]
-            elif skip_mode in ("to_first", "to_last"):
-                idxs = [i for i, l in enumerate(p["labels"]) if l == skip_var]
-                if idxs:
-                    i = idxs[0] if skip_mode == "to_first" else idxs[-1]
-                    ref = (p["tss"][i], p["ids"][i])
-                    if min_start is None or ref > min_start:
-                        min_start = ref
-        if min_start is not None:
-            survivors = [s for s in survivors if (s["start"], s["sid"]) >= min_start]
-        partials = survivors
-        # NO_SKIP (and to_next) start a new partial at every match of a
-        # startable state (state 0, or any state behind leading optionals)
-        j0, name0 = next(
-            ((j, lb) for j in start_chain for lb in [_lbl(j, None)] if lb),
-            (None, None),
-        )
-        if not suppress_start and j0 is not None:
-            mn0 = states[j0][1]
-            p0 = {
-                "si": j0,
-                "cnt": 1,
-                "closed": False,
-                "labels": [name0],
-                "ids": [eid],
-                "tss": [ts_us],
-                "vals": [evvals],
-                "start": ts_us,
-                "sid": eid,
-            }
-            if j0 == n_states - 1 and mn0 == 1 and not qf:
-                out.append(
-                    (
-                        key,
-                        pd.Timestamp(ts_us * 1000),
-                        pd.Timestamp(ts_us * 1000),
-                        [name0],
-                        [eid],
-                        [pd.Timestamp(ts_us * 1000)],
-                    )
-                )
-            elif len(partials) < max_partials:
-                partials.append(p0)
-            else:
-                rejected_starts += 1  # hot-key guard: pool at capacity
-    if rejected_starts:
-        import warnings
-
-        warnings.warn(
-            f"NFA key {key}: live-partial cap {max_partials} hit — "
-            f"{rejected_starts} new partial start(s) rejected this batch "
-            "(bound WITHIN tighter or raise with_max_partials)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    if finalize and partials and qf:
-        # bounded input exhausted: quantified-final runs that reached
-        # their min complete (ISO MATCH_RECOGNIZE closes every match at
-        # end of partition), honoring the skip strategy in leftmost
-        # (start, sid) order.  Other partials stay incomplete, as ever.
-        fin = sorted(
-            (p for p in partials
-             if p["si"] == n_states - 1 and p["cnt"] >= states[-1][1]),
-            key=lambda p: (p["start"], p["sid"]),
-        )
-        skip_mode, _, skip_var = skip.partition(":")
-        past_end: tuple[int, int] | None = None
-        min_ref: tuple[int, int] | None = None
-        emitted_sids: set[int] = set()
-        for p in fin:
-            if past_end is not None and (p["start"], p["sid"]) <= past_end:
-                continue  # consumed by a past_last emission
-            if min_ref is not None and (p["start"], p["sid"]) < min_ref:
-                continue
-            if skip_mode == "to_next" and p["sid"] in emitted_sids:
-                continue
-            out.append(
-                (
-                    key,
-                    pd.Timestamp(p["start"] * 1000),
-                    pd.Timestamp(p["tss"][-1] * 1000),
-                    list(p["labels"]),
-                    list(p["ids"]),
-                    [pd.Timestamp(t * 1000) for t in p["tss"]],
-                )
-            )
-            emitted_sids.add(p["sid"])
-            if skip_mode == "past_last":
-                past_end = (p["tss"][-1], p["ids"][-1])
-            elif skip_mode in ("to_first", "to_last"):
-                idxs = [i for i, l in enumerate(p["labels"]) if l == skip_var]
-                if idxs:
-                    i = idxs[0] if skip_mode == "to_first" else idxs[-1]
-                    ref = (p["tss"][i], p["ids"][i])
-                    if min_ref is None or ref > min_ref:
-                        min_ref = ref
-        fin_ids = {id(p) for p in fin}
-        partials = [p for p in partials if id(p) not in fin_ids]
-    return out, partials
+    Under ORDER-SENSITIVE skip modes (past_last, to_first/to_last
+    — where an emission prunes other groups by row position), a
+    later-start pending match must never emit past an earlier
+    group that is still unresolved: either pending-blocked by a
+    live greedier sibling, or live with no completion yet.  SQL
+    MATCH_RECOGNIZE scans leftmost-first, so the earlier group —
+    if it ever completes — owns the rows and its skip decides the
+    later group's fate, not the reverse.  Such groups (and every
+    group after them) stay pending until the blocker resolves or
+    dies; ``finalize`` drains the queue to a fixpoint."""
+    if not pend:
+        return pend, survivors, False
+    skip_mode, _, skip_var = skip.partition(":")
+    order_sensitive = skip_mode in ("past_last", "to_first", "to_last")
+    live_min: dict[tuple, list] = {}
+    if ts_us is not None:
+        for s in survivors:
+            g = (s["start"], s["sid"])
+            d = s.get("deck", [])
+            if g not in live_min or d < live_min[g]:
+                live_min[g] = d
+    groups: dict[tuple, list[dict]] = {}
+    for c in pend:
+        groups.setdefault((c["start"], c["sid"]), []).append(c)
+    # earliest live group with no pending candidate: leftmost order
+    # is undecidable past it under an order-sensitive skip
+    first_live_only: tuple | None = None
+    if order_sensitive:
+        for lg in live_min:
+            if lg not in groups and (
+                    first_live_only is None or lg < first_live_only):
+                first_live_only = lg
+    new_pend: list[dict] = []
+    resume_row: tuple[int, int] | None = None  # past_last last-row
+    min_start: tuple[int, int] | None = None   # to_first/to_last ref
+    suppress = False
+    deferred = False  # an earlier group was left unresolved
+    for g in sorted(groups):
+        cands = sorted(groups[g], key=lambda c: c.get("deck", []))
+        best = cands[0]
+        if resume_row is not None:
+            if g <= resume_row:
+                continue  # consumed by the past_last match
+            new_pend.extend(groups[g])
+            continue  # starts after the resume row: left pending
+        if min_start is not None and g < min_start:
+            continue  # pruned by a skip-to emission
+        if order_sensitive and (
+                deferred
+                or (first_live_only is not None and first_live_only < g)):
+            new_pend.extend(groups[g])  # blocked behind an earlier
+            deferred = True             # unresolved group
+            continue
+        lm = live_min.get(g)
+        if lm is not None and lm < best.get("deck", []):
+            new_pend.extend(groups[g])  # a greedier branch is live
+            deferred = True
+            continue
+        out.append(_match_row(key, best))  # siblings of g die
+        if skip_mode == "past_last":
+            resume_row = (best["tss"][-1], best["ids"][-1])
+            survivors = [
+                s for s in survivors
+                if (s["start"], s["sid"]) > resume_row
+            ]
+            new_pend = [
+                c for c in new_pend
+                if (c["start"], c["sid"]) > resume_row
+            ]
+            if ts_us is not None and best["tss"][-1] == ts_us:
+                suppress = True
+        elif skip_mode == "to_next":
+            survivors = [s for s in survivors if s["sid"] != best["sid"]]
+        elif skip_mode in ("to_first", "to_last"):
+            ref = _skip_ref(best, skip_mode, skip_var)
+            if ref is not None and (min_start is None or ref > min_start):
+                min_start = ref
+        survivors = [
+            s for s in survivors if (s["start"], s["sid"]) != g
+        ]
+    if min_start is not None:
+        survivors = [
+            s for s in survivors if (s["start"], s["sid"]) >= min_start
+        ]
+        new_pend = [
+            c for c in new_pend if (c["start"], c["sid"]) >= min_start
+        ]
+    return new_pend, survivors, suppress
 
 
 def _target_prio(chain: list[int], greedy_flags: list[bool]) -> list[int]:
@@ -1256,290 +1086,187 @@ def _target_prio(chain: list[int], greedy_flags: list[bool]) -> list[int]:
     return [j] + alts if greedy_flags[j] else alts + [j]
 
 
-def _fold_events_bt(
+def _fold_events(
     key: int, events: pd.DataFrame, partials: list[dict], spec: dict,
     finalize: bool = False,
 ) -> tuple[list[tuple], list[dict]]:
-    """Branching (backtracking) fold — Flink nfa/NFA.java parity.
+    """Fold a (ts, event_id)-sorted batch into partial-match state.
 
-    Differences from the deterministic fold:
-    - An event viable for several transitions (extend the current
-      quantified state / enter any optional-skippable later state)
-      FORKS the partial; each branch carries a decision string
-      ``deck`` (0 = greediest choice at that fork, lexicographic
-      order = greedy preference — Flink's dewey-number version order).
-    - A branch reaching the final state buffers as a pending match
-      (``done``) instead of emitting: it emits only once NO live
-      sibling of the same match start has a strictly smaller deck —
-      so the emitted match per start is the regex-greedy one, exactly
-      one match per start (SQL MATCH_RECOGNIZE contract).  Siblings
-      die at emission.
-    - ``past_last`` prunes by the emitted match's last row
-      (start-row > last-row survives), which on the per-event path is
-      the same everything-dies rule as the deterministic fold.
-    - ``finalize=True`` (bounded input exhausted): live branches can
-      never complete, so pending matches resolve unconditionally.
+    A partial is a JSON-able dict: si (state index), cnt (count in
+    current state), closed (state frozen by a consecutive-break),
+    labels/ids/tss (collected events; tss in epoch micros), vals (bound
+    value columns), start (first-event micros), sid (start event id,
+    for to_next), gc (group repetitions done), ng (notNext slot armed);
+    the branching mode adds deck (decision string) and done (pending
+    completion).  Returns (completed matches, surviving partials) —
+    shared by the batch and streaming backends so semantics cannot
+    drift.  ``finalize`` (bounded input exhausted) closes what end of
+    input closes: deterministic quantified-final runs at or past their
+    min, and every resolvable pending match of the branching mode.
 
-    With mutually-exclusive conditions no fork can occur, every group
-    has one branch with an empty deck, and the flow reduces to the
-    deterministic fold's (regression-tested equivalence).
+    One event loop serves both modes (``spec["backtrack"]``).  They
+    differ in exactly two places:
+
+    - transition choice: the deterministic mode takes the FIRST viable
+      transition — extend, else the group loop-back, else the first
+      later state through skippable optionals; the branching mode takes
+      EVERY viable one in regex preference order, forking the partial
+      per choice with a ``deck`` digit (0 = greediest, lexicographic
+      order = greedy preference — Flink's dewey-number version order);
+    - emission: the deterministic mode emits at completion
+      (``_emit_completed``); the branching mode buffers completions as
+      pending (``done``) and emits one per match start once no live
+      sibling has a smaller deck (``_resolve``) — the regex-greedy
+      match, exactly one per start (SQL MATCH_RECOGNIZE contract).
+
+    Everything else — columns, label lookup, WITHIN expiry, until(),
+    the wait-or-die contiguity rules, starts — is this one copy.  With
+    mutually-exclusive conditions no fork can occur and the two modes
+    agree (regression-tested equivalence).
     """
     states = spec["states"]
+    n_states = len(states)
+    last = n_states - 1
+    lmn, lmx = states[-1][1], states[-1][2]
     horizon = spec["horizon_us"]
     skip = spec["skip"]
+    bt = bool(spec.get("backtrack"))
     max_partials = spec.get("max_partials") or 100_000
     max_branches = spec.get("max_branches") or 64
-    py_conds = spec.get("py_conds") or [None] * len(states)
+    py_conds = spec.get("py_conds") or [None] * n_states
     value_cols = spec.get("value_cols") or []
-    greedy_flags = spec.get("greedy") or [True] * len(states)
+    greedy_flags = spec.get("greedy") or [True] * n_states
+    neg = spec.get("neg") or [(False, False)] * n_states
+    alts = spec.get("alts") or [[] for _ in range(n_states)]
+    alt_codes = spec.get("alt_py_conds") or [[] for _ in range(n_states)]
+    until = spec.get("until") or [False] * n_states
+    any_in = spec.get("any_in") or [False] * n_states
+    comb = spec.get("comb") or [False] * n_states
+    emit_all = bool(spec.get("emit_all"))
     groups = spec.get("groups") or []
+    # group-end state index → (start, gmin, gmax, greedy, group idx)
     gend = {g[1]: (g[0], g[2], g[3], g[4], gi)
             for gi, g in enumerate(groups)}
-    n_states = len(states)
+    no_gc = [0] * len(groups)  # read-only default repetition counts
+    gfin = gend.get(last)  # a final group completes on its last repetition
+    # greedy quantified FINAL state (B{1,3} / B+ at pattern end): the
+    # match closes at cap / strict break / expiry / finalize rather
+    # than at the min count (round 11)
+    qf = last not in gend and lmx != lmn
+    done_cnt = lmx if qf else lmn  # None: never completes by count
+    # a match may START at any state reachable through leading
+    # optional (min 0) states — Flink's A? B matches a bare B
+    start_chain = [0]
+    while start_chain[-1] < last and states[start_chain[-1]][1] == 0:
+        start_chain.append(start_chain[-1] + 1)
+    # proceed targets per state: the next state through skippable
+    # optionals, in the order the mode tries them
+    chains = []
+    for si in range(n_states):
+        ch, j = [], si + 1
+        while j < n_states:
+            ch.append(j)
+            if states[j][1] != 0:
+                break
+            j += 1
+        chains.append(ch)
+    if bt:
+        # regex nested-decision order: a GREEDY optional prefers being
+        # entered over skipped, a RELUCTANT one being skipped; entering
+        # a start state means skipping every optional before it, so the
+        # start forks follow the same order
+        chains = [_target_prio(ch, greedy_flags) for ch in chains]
+        start_chain = _target_prio(start_chain, greedy_flags)
+
     out: list[tuple] = []
     live = [p for p in partials if not p.get("done")]
     pend = [p for p in partials if p.get("done")]
+    rejected_starts = 0
     n_events = len(events)
-
-    def _plain(v):
-        if v is None or isinstance(v, (int, float, str, bool)):
-            return v
-        if hasattr(v, "item"):
-            return v.item()
-        return str(v)
-
-    def _emit(p: dict) -> None:
-        out.append(
-            (
-                key,
-                pd.Timestamp(p["start"] * 1000),
-                pd.Timestamp(p["tss"][-1] * 1000),
-                list(p["labels"]),
-                list(p["ids"]),
-                [pd.Timestamp(t * 1000) for t in p["tss"]],
-            )
-        )
-
-    def _resolve(survivors: list[dict], at_event: bool,
-                 ts_us: int | None) -> tuple[list[dict], bool]:
-        """Emit every pending match whose greedier siblings are all
-        dead (all of them, when finalizing).  Returns (survivors,
-        suppress_start_at_this_event).
-
-        Under ORDER-SENSITIVE skip modes (past_last, to_first/to_last
-        — where an emission prunes other groups by row position), a
-        later-start pending match must never emit past an earlier
-        group that is still unresolved: either pending-blocked by a
-        live greedier sibling, or live with no completion yet.  SQL
-        MATCH_RECOGNIZE scans leftmost-first, so the earlier group —
-        if it ever completes — owns the rows and its skip decides the
-        later group's fate, not the reverse.  Such groups (and every
-        group after them) stay pending until the blocker resolves or
-        dies; ``finalize`` drains the queue to a fixpoint."""
-        nonlocal pend
-        if not pend:
-            return survivors, False
-        skip_mode, _, skip_var = skip.partition(":")
-        order_sensitive = skip_mode in ("past_last", "to_first", "to_last")
-        live_min: dict[tuple, list] = {}
-        if at_event:
-            for s in survivors:
-                g = (s["start"], s["sid"])
-                d = s.get("deck", [])
-                if g not in live_min or d < live_min[g]:
-                    live_min[g] = d
-        groups: dict[tuple, list[dict]] = {}
-        for c in pend:
-            groups.setdefault((c["start"], c["sid"]), []).append(c)
-        # earliest live group with no pending candidate: leftmost order
-        # is undecidable past it under an order-sensitive skip
-        first_live_only: tuple | None = None
-        if order_sensitive:
-            for lg in live_min:
-                if lg not in groups and (
-                        first_live_only is None or lg < first_live_only):
-                    first_live_only = lg
-        new_pend: list[dict] = []
-        resume_row: tuple[int, int] | None = None  # past_last last-row
-        min_start: tuple[int, int] | None = None   # to_first/to_last ref
-        suppress = False
-        deferred = False  # an earlier group was left unresolved
-        for g in sorted(groups):
-            cands = sorted(groups[g], key=lambda c: c.get("deck", []))
-            best = cands[0]
-            if resume_row is not None:
-                if g <= resume_row:
-                    continue  # consumed by the past_last match
-                new_pend.extend(groups[g])
-                continue  # starts after the resume row: left pending
-            if min_start is not None and g < min_start:
-                continue  # pruned by a skip-to emission
-            if order_sensitive and (
-                    deferred
-                    or (first_live_only is not None and first_live_only < g)):
-                new_pend.extend(groups[g])  # blocked behind an earlier
-                deferred = True             # unresolved group
-                continue
-            lm = live_min.get(g)
-            if lm is not None and lm < best.get("deck", []):
-                new_pend.extend(groups[g])  # a greedier branch is live
-                deferred = True
-                continue
-            _emit(best)  # siblings of g die (one match per start)
-            if skip_mode == "past_last":
-                resume_row = (best["tss"][-1], best["ids"][-1])
-                survivors = [
-                    s for s in survivors
-                    if (s["start"], s["sid"]) > resume_row
-                ]
-                new_pend = [
-                    c for c in new_pend
-                    if (c["start"], c["sid"]) > resume_row
-                ]
-                if at_event and ts_us is not None \
-                        and best["tss"][-1] == ts_us:
-                    suppress = True
-            elif skip_mode == "to_next":
-                survivors = [s for s in survivors if s["sid"] != best["sid"]]
-            elif skip_mode in ("to_first", "to_last"):
-                idxs = [i for i, l in enumerate(best["labels"])
-                        if l == skip_var]
-                if idxs:
-                    i = idxs[0] if skip_mode == "to_first" else idxs[-1]
-                    ref = (best["tss"][i], best["ids"][i])
-                    if min_start is None or ref > min_start:
-                        min_start = ref
-            survivors = [
-                s for s in survivors if (s["start"], s["sid"]) != g
-            ]
-        if min_start is not None:
-            survivors = [
-                s for s in survivors if (s["start"], s["sid"]) >= min_start
-            ]
-            new_pend = [
-                c for c in new_pend if (c["start"], c["sid"]) >= min_start
-            ]
-        pend = new_pend
-        return survivors, suppress
-
-    # startable states: state 0 plus states behind leading optionals
-    start_chain = [0]
-    while start_chain[-1] < n_states - 1 \
-            and states[start_chain[-1]][1] == 0:
-        start_chain.append(start_chain[-1] + 1)
-
     if n_events:
-        ts_arr = (
-            events["ts"].astype("datetime64[ns]").astype("int64") // 1000
-        ).tolist()
-        eid_arr = events["event_id"].astype("int64").tolist()
-        flag_arrs = [
-            events[f"f{i}"].astype(bool).tolist() for i in range(n_states)
-        ]
-        val_arrs = {c: events[f"v_{c}"].tolist() for c in value_cols}
-        neg = spec.get("neg") or [(False, False)] * n_states
-        neg_arrs = {
-            i: events[f"g{i}"].astype(bool).tolist()
-            for i in range(n_states) if neg[i][0]
-        }
-        alts = spec.get("alts") or [[] for _ in range(n_states)]
-        alt_codes = spec.get("alt_py_conds") or [[] for _ in range(n_states)]
-        alt_arrs = {
-            i: [events[f"f{i}x{k}"].astype(bool).tolist()
-                for k in range(len(alts[i]))]
-            for i in range(n_states) if alts[i]
-        }
-        until = spec.get("until") or [False] * n_states
-        until_arrs = {
-            i: events[f"u{i}"].astype(bool).tolist()
-            for i in range(n_states) if until[i]
-        }
-        any_in = spec.get("any_in") or [False] * n_states
-        comb = spec.get("comb") or [False] * n_states
-        emit_all = bool(spec.get("emit_all"))
+        (ts_arr, eid_arr, flag_arrs, val_arrs, neg_arrs, alt_arrs,
+         until_arrs) = _columns(events, spec, n_states)
+    for ei in range(n_events):
+        ts_us = ts_arr[ei]
+        eid = eid_arr[ei]
+        flags = [fa[ei] for fa in flag_arrs]
+        if not live and not pend and not any(
+                flags[j] or any(a[ei] for a in alt_arrs.get(j, ()))
+                for j in start_chain):
+            continue  # nothing live and nothing can start — skip fast
+        evvals = {c: _plain(val_arrs[c][ei]) for c in value_cols}
 
-        for ei in range(n_events):
-            ts_us = ts_arr[ei]
-            eid = eid_arr[ei]
-            flags = [fa[ei] for fa in flag_arrs]
-            evvals = {c: _plain(val_arrs[c][ei]) for c in value_cols}
+        def _labels(j: int, p: dict | None, first: bool = False) -> list:
+            """Labels the event can enter/extend state j with, in regex
+            ``|`` priority (the primary variable, then alternatives) —
+            each a separate fork choice; ``first`` stops at the first,
+            the deterministic mode's only choice."""
+            lbls = []
+            if flags[j] and (py_conds[j] is None or _py_cond_ok(
+                    py_conds[j], p, evvals, states[j][0])):
+                lbls.append(states[j][0])
+                if first:
+                    return lbls
+            for k, nm in enumerate(alts[j]):
+                if alt_arrs[j][k][ei] and (alt_codes[j][k] is None or
+                                           _py_cond_ok(alt_codes[j][k], p,
+                                                       evvals, nm)):
+                    lbls.append(nm)
+                    if first:
+                        return lbls
+            return lbls
 
-            def _lbls(j: int, p: dict | None) -> list[str]:
-                """Matching labels for state j in regex ``|`` priority
-                order (primary variable first, then alternatives) —
-                each is a separate fork choice."""
-                out_l: list[str] = []
-                if flags[j]:
-                    code = py_conds[j]
-                    if code is None or _py_cond_ok(
-                            code, p, evvals, states[j][0]):
-                        out_l.append(states[j][0])
-                for k, nm in enumerate(alts[j]):
-                    if alt_arrs[j][k][ei]:
-                        code = alt_codes[j][k]
-                        if code is None or _py_cond_ok(code, p, evvals, nm):
-                            out_l.append(nm)
-                return out_l
-
-            def _startable(j: int) -> bool:
-                return flags[j] or any(a[ei] for a in alt_arrs.get(j, ()))
-
-            if not live and not pend \
-                    and not any(_startable(j) for j in start_chain):
-                continue
-            expired = {
-                (p["start"], p["sid"])
-                for p in live if ts_us > p["start"] + horizon
-            }
-            live = [p for p in live if (p["start"], p["sid"]) not in expired]
-            survivors: list[dict] = []
-            for p in live:
-                si = p["si"]
-                name, mn, mx, strict_in, consec = states[si]
-                # until() stop condition: freeze the loop before the
-                # extend choice is even considered; frozen below min
-                # can never complete
-                if until[si] and until_arrs[si][ei] and not p["closed"]:
-                    p["closed"] = True
-                    if p["cnt"] < mn:
-                        continue
-                ext_lbls = (
-                    _lbls(si, p)
-                    if not p["closed"] and (mx is None or p["cnt"] < mx)
-                    else []
-                )
-                chain: list[int] = []
-                loop = []
-                ggreedy = True
-                if p["cnt"] >= mn:
-                    proceed_ok = True
-                    if si in gend:
-                        gs_, gmn_, gmx_, ggreedy, gi_ = gend[si]
-                        gc0 = p.get("gc") or [0] * len(groups)
-                        loops_done = gc0[gi_] + 1
-                        if gmx_ is None or loops_done < gmx_:
-                            loop = [("g", gs_, lb) for lb in _lbls(gs_, p)]
-                        proceed_ok = loops_done >= gmn_
-                    if proceed_ok:
-                        j = si + 1
-                        while j < n_states:
-                            chain.append(j)
-                            if states[j][1] == 0:
-                                j += 1
-                                continue
-                            break
-                # advance-target priority is the regex nested-decision
-                # order: a GREEDY optional prefers being entered over
-                # skipped; a RELUCTANT one prefers being skipped —
-                # evaluated left-to-right through the skippable chain;
-                # within one target, alternatives fork in ``|`` order.
-                # Group loop-vs-exit nests OUTSIDE the state decision:
-                # a greedy group prefers another repetition over
-                # proceeding; a reluctant one the reverse.
-                ext = [("x", si, lb) for lb in ext_lbls]
-                advs = [("a", j, lb)
-                        for j in _target_prio(chain, greedy_flags)
-                        for lb in _lbls(j, p)]
+        # WITHIN expiry: partials die — EXCEPT (deterministic mode) a
+        # greedy quantified-final run at or past its min, whose own
+        # rows are all inside the window: only the EXTENSION window
+        # expired, so the longest run found is the match (the branching
+        # mode buffered that length as pending already)
+        completed: list[dict] = []
+        kept: list[dict] = []
+        for p in live:
+            if ts_us <= p["start"] + horizon:
+                kept.append(p)
+            elif not bt and qf and p["si"] == last and p["cnt"] >= lmn:
+                completed.append(p)
+        survivors: list[dict] = []
+        for p in kept:
+            si = p["si"]
+            _name, mn, mx, _strict_in, consec = states[si]
+            # until() stop condition: freeze the loop BEFORE the extend
+            # check (the matching event is never consumed into it); a
+            # partial frozen below min can never complete — dead
+            if until[si] and until_arrs[si][ei] and not p["closed"]:
+                p["closed"] = True
+                if p["cnt"] < mn:
+                    continue
+            can_ext = not p["closed"] and (mx is None or p["cnt"] < mx)
+            # exits once the state's min is met: the group loop-back
+            # (at a group end with repetitions left) and the proceed
+            # chain (once the group's own min is met)
+            loop_to = None
+            chain = ()
+            ggreedy = True
+            if p["cnt"] >= mn:
+                proceed = True
+                if si in gend:
+                    gs_, gmn_, gmx_, ggreedy, gi_ = gend[si]
+                    loops_done = (p.get("gc") or no_gc)[gi_] + 1
+                    if gmx_ is None or loops_done < gmx_:
+                        loop_to = gs_
+                    proceed = loops_done >= gmn_
+                if proceed:
+                    chain = chains[si]
+            if bt:
+                # every viable transition: a greedy state prefers
+                # extending, a reluctant one leaving; a greedy group
+                # prefers another repetition over proceeding, a
+                # reluctant one the reverse; within one target,
+                # alternatives fork in ``|`` order
+                ext = [("x", si, lb) for lb in _labels(si, p)] \
+                    if can_ext else []
+                loop = [("g", loop_to, lb) for lb in _labels(loop_to, p)] \
+                    if loop_to is not None else []
+                advs = [("a", j, lb) for j in chain for lb in _labels(j, p)]
                 rest = loop + advs if ggreedy else advs + loop
                 choices = ext + rest if greedy_flags[si] else rest + ext
                 # non-deterministic edges (followedByAny / combinations,
@@ -1549,207 +1276,215 @@ def _fold_events_bt(
                 if emit_all and choices and all(
                         (k == "x" and comb[j]) or (k == "a" and any_in[j])
                         for k, j, _ in choices):
-                    choices = choices + [("i", si, None)]
-                if not choices:
-                    if consec and p["cnt"] < mn:
-                        continue
-                    if (consec and si == n_states - 1
-                            and (n_states - 1 not in gend)
-                            and (mx is None or mx != mn)):
-                        # broken strict quantified-final run: this
-                        # extending branch dies and its buffered
-                        # pending completion resolves (round 11)
-                        continue
-                    if consec:
-                        p["closed"] = True
-                    nxt = si + 1
-                    if p["cnt"] >= mn and si in gend:
-                        # waiting at a group end: dead only if every
-                        # available continuation is a strict edge
-                        gs_, gmn_, gmx_, _gg, gi_ = gend[si]
-                        loops_done = (p.get("gc")
-                                      or [0] * len(groups))[gi_] + 1
-                        loop_viable = gmx_ is None or loops_done < gmx_
-                        proceed_viable = loops_done >= gmn_ \
-                            and nxt < n_states
-                        can_wait = (
-                            (loop_viable and not states[gs_][3])
-                            or (proceed_viable and not states[nxt][3])
-                        )
-                        if not can_wait:
-                            continue
-                        survivors.append(p)
-                        continue
-                    if p["cnt"] >= mn and nxt < n_states and states[nxt][3]:
-                        continue
-                    if p["cnt"] >= mn and nxt < n_states and neg[nxt][0]:
-                        hit = neg_arrs[nxt][ei]
-                        strict_neg = neg[nxt][1]
-                        if hit and (not strict_neg or p.get("ng", True)):
-                            continue  # killed by the negative pattern
-                        if strict_neg:
-                            p["ng"] = False
-                    survivors.append(p)
+                    choices.append(("i", si, None))
+            else:
+                # the first viable transition: extend, else loop back,
+                # else the first later state whose condition holds
+                kind, j = "x", si
+                lb = _labels(si, p, True) if can_ext else None
+                if not lb and loop_to is not None:
+                    kind, j = "g", loop_to
+                    lb = _labels(j, p, True)
+                if not lb:
+                    kind = "a"
+                    for j in chain:
+                        lb = _labels(j, p, True)
+                        if lb:
+                            break
+                choices = [(kind, j, lb[0])] if lb else ()
+            if not choices:
+                # neither extended nor advanced: contiguity rules
+                # decide whether the partial waits or dies
+                if consec and p["cnt"] < mn:
+                    continue  # broken repeat chain below min — dead
+                if consec and qf and si == last:
+                    # a strict quantified-final run broken by a row
+                    # that does not extend it: the longest run found IS
+                    # the match (ISO MATCH_RECOGNIZE greedy; Flink NFA
+                    # emits when the greedier branch dies) — completed
+                    # here, or (branching) resolved from its pending
+                    # completion once this extending branch dies
+                    if not bt:
+                        completed.append(p)
                     continue
-                fork = len(choices) > 1
+                if consec:
+                    p["closed"] = True  # min reached: freeze, may advance
+                nxt = si + 1
+                if p["cnt"] >= mn and si in gend:
+                    # waiting at a group end: dead only if EVERY
+                    # available continuation (loop-back / proceed) is a
+                    # strict edge
+                    gs_, gmn_, gmx_, _gg, gi_ = gend[si]
+                    loops_done = (p.get("gc") or no_gc)[gi_] + 1
+                    if ((gmx_ is None or loops_done < gmx_)
+                            and not states[gs_][3]) or (
+                            loops_done >= gmn_ and nxt < n_states
+                            and not states[nxt][3]):
+                        survivors.append(p)
+                    continue
+                if p["cnt"] >= mn and nxt < n_states:
+                    if states[nxt][3]:
+                        continue  # strict_in edge violated — dead
+                    if neg[nxt][0]:
+                        # negative edge guard (notNext/notFollowedBy):
+                        # an UN-consumed event matching it kills the
+                        # partial
+                        strict_neg = neg[nxt][1]
+                        if neg_arrs[nxt][ei] and (
+                                not strict_neg or p.get("ng", True)):
+                            continue
+                        if strict_neg:
+                            p["ng"] = False  # the immediate slot passed
+                survivors.append(p)
+                continue
+            fork = len(choices) > 1
+            if fork:
                 gid = (p["start"], p["sid"])
                 n_in_group = sum(
-                    1 for s in survivors
-                    if (s["start"], s["sid"]) == gid
-                )
-                created = 0
-                for ci, (kind, j, lbl) in enumerate(choices):
-                    if fork and ci > 0 \
-                            and n_in_group + created >= max_branches:
+                    1 for s in survivors if (s["start"], s["sid"]) == gid)
+                deck = p.get("deck", [])
+            created = 0
+            for ci, (kind, j, lbl) in enumerate(choices):
+                if fork:
+                    if ci > 0 and n_in_group + created >= max_branches:
                         break  # cap: greediest branches kept
-                    if fork:
-                        q = {
-                            "si": p["si"], "cnt": p["cnt"],
-                            "closed": p["closed"],
-                            "labels": list(p["labels"]),
-                            "ids": list(p["ids"]),
-                            "tss": list(p["tss"]),
-                            "vals": list(p.get("vals", [])),
-                            "start": p["start"], "sid": p["sid"],
-                            "deck": list(p.get("deck", [])) + [ci],
-                        }
-                        if p.get("gc"):
-                            q["gc"] = list(p["gc"])
+                    q = _branch(p, deck + [ci])
+                else:
+                    q = p
+                created += 1
+                if kind == "i":  # ignore the event entirely: the
+                    # waiting branch lives on for later occurrences
+                    survivors.append(q)
+                    continue
+                if kind == "x":
+                    q["cnt"] += 1
+                else:
+                    if kind == "g":  # group loop-back: one more rep
+                        gc = list(q.get("gc") or no_gc)
+                        gc[gend[q["si"]][4]] += 1
+                        q["gc"] = gc
+                    q.update(si=j, cnt=1, closed=False)
+                q["ng"] = True  # a consumed event re-arms notNext
+                q["labels"].append(lbl)
+                q["ids"].append(eid)
+                q["tss"].append(ts_us)
+                q.setdefault("vals", []).append(evvals)
+                if bt and qf and q["si"] == last and q["cnt"] >= lmn \
+                        and (lmx is None or q["cnt"] < lmx):
+                    # greedy quantified final: buffer THIS length as a
+                    # pending match (stop = less-greedy digit 1) and
+                    # keep the extending branch live (digit 0).  A new
+                    # pend dominates the same lineage's older one (only
+                    # the min-deck pend of a group can ever emit), so
+                    # dominated pends are dropped to keep B+ runs O(1)
+                    # in state.
+                    qdeck = q.get("deck", [])
+                    c = _branch(q, qdeck + [1], closed=True, done=True)
+                    pend = [
+                        x for x in pend
+                        if (x["start"], x["sid"]) != (c["start"], c["sid"])
+                        or x.get("deck", []) <= c["deck"]
+                    ]
+                    pend.append(c)
+                    q["deck"] = qdeck + [0]
+                    survivors.append(q)
+                elif q["si"] == last and q["cnt"] == done_cnt and (
+                        gfin is None
+                        or (q.get("gc") or no_gc)[gfin[4]] + 1 >= gfin[1]):
+                    if not bt:
+                        completed.append(q)
+                    elif emit_all:
+                        out.append(_match_row(key, q))  # Flink CEP: all
                     else:
-                        q = p
-                    if kind == "i":  # ignore the event entirely: the
-                        # waiting branch lives on for later occurrences
-                        survivors.append(q)
-                        created += 1
-                        continue
-                    if kind == "x":
-                        q["cnt"] += 1
-                    elif kind == "g":  # group loop-back: one more rep
-                        gc_ = q.get("gc") or [0] * len(groups)
-                        gc_[gend[q["si"]][4]] += 1
-                        q["gc"] = gc_
-                        q.update(si=j, cnt=1, closed=False)
-                    else:
-                        q.update(si=j, cnt=1, closed=False)
-                    q["ng"] = True  # consume re-arms the notNext slot
-                    q["labels"].append(lbl)
-                    q["ids"].append(eid)
-                    q["tss"].append(ts_us)
-                    q.setdefault("vals", []).append(evvals)
-                    created += 1
-                    lmn, lmx = states[-1][1], states[-1][2]
-                    qf = (n_states - 1 not in gend) and (
-                        lmx is None or lmx != lmn)
-                    if (qf and q["si"] == n_states - 1 and q["cnt"] >= lmn
-                            and (lmx is None or q["cnt"] < lmx)):
-                        # greedy quantified final: buffer THIS length as
-                        # a pending match (stop = less-greedy digit 1)
-                        # and keep the extending branch live (digit 0);
-                        # _resolve emits the pending only once every
-                        # greedier sibling is dead — round 11.  A new
-                        # pend dominates the same lineage's older one
-                        # (only the min-deck pend of a group can ever
-                        # emit), so dominated pends are dropped to keep
-                        # B+ runs O(1) in state.
-                        c = {
-                            "si": q["si"], "cnt": q["cnt"], "closed": True,
-                            "labels": list(q["labels"]),
-                            "ids": list(q["ids"]), "tss": list(q["tss"]),
-                            "vals": list(q.get("vals", [])),
-                            "start": q["start"], "sid": q["sid"],
-                            "deck": list(q.get("deck", [])) + [1],
-                            "done": True,
-                        }
-                        gid_q = (c["start"], c["sid"])
-                        pend = [
-                            x for x in pend
-                            if (x["start"], x["sid"]) != gid_q
-                            or x.get("deck", []) <= c["deck"]
-                        ]
-                        pend.append(c)
-                        q["deck"] = list(q.get("deck", [])) + [0]
-                        survivors.append(q)
-                        continue
-                    done_here = (
-                        q["si"] == n_states - 1
-                        and q["cnt"] == (lmx if (
-                            qf and q["si"] == n_states - 1
-                            and lmx is not None) else states[-1][1])
-                        and (n_states - 1 not in gend
-                             or (q.get("gc") or [0] * len(groups))[
-                                 gend[n_states - 1][4]] + 1
-                             >= gend[n_states - 1][1])
-                    )
-                    if done_here:
-                        if emit_all:
-                            _emit(q)  # Flink CEP: every found match
-                        else:
-                            q["done"] = True
-                            pend.append(q)
-                    else:
-                        survivors.append(q)
+                        q["done"] = True
+                        pend.append(q)
+                else:
+                    survivors.append(q)
+        if bt:
             # expired groups may unblock pending siblings; completions
             # this event resolve in the same pass
-            survivors, suppress_start = _resolve(survivors, True, ts_us)
-            live = survivors
-            # Start-fork priority follows the same regex nested
-            # take/skip decision order as advances: entering state j
-            # means skipping every optional before it, so a RELUCTANT
-            # leading optional is preferentially skipped (its own take
-            # ranks below the states behind it) — raw chain order would
-            # hand it the greedier deck.
-            startable = [] if suppress_start else \
-                [(j, lb) for j in _target_prio(start_chain, greedy_flags)
-                 for lb in _lbls(j, None)]
-            fork0 = len(startable) > 1
-            for ci, (j0, lbl0) in enumerate(startable):
-                mn0 = states[j0][1]
-                p0 = {
-                    "si": j0, "cnt": 1, "closed": False,
-                    "labels": [lbl0], "ids": [eid], "tss": [ts_us],
-                    "vals": [evvals], "start": ts_us, "sid": eid,
-                    "deck": [ci] if fork0 else [],
-                }
-                qf0 = (n_states - 1 not in gend) and (
-                    states[-1][2] is None or states[-1][2] != states[-1][1])
-                if j0 == n_states - 1 and mn0 == 1 and qf0:
+            pend, live, suppress = _resolve(
+                key, pend, survivors, skip, out, ts_us)
+        else:
+            live, suppress = _emit_completed(
+                key, completed, survivors, skip, out, (ts_us, eid))
+        if suppress:
+            continue
+        # starts at every match of a startable state (state 0, or any
+        # state behind leading optionals): the first startable label,
+        # or (branching) a fork over all of them
+        if bt:
+            starts = [(j, lb) for j in start_chain for lb in _labels(j, None)]
+        else:
+            starts = ()
+            for j in start_chain:
+                lb = _labels(j, None, True)
+                if lb:
+                    starts = ((j, lb[0]),)
+                    break
+        fork0 = len(starts) > 1
+        for ci, (j0, lbl0) in enumerate(starts):
+            p0 = {
+                "si": j0, "cnt": 1, "closed": False,
+                "labels": [lbl0], "ids": [eid], "tss": [ts_us],
+                "vals": [evvals], "start": ts_us, "sid": eid,
+            }
+            if bt:
+                p0["deck"] = [ci] if fork0 else []
+            if j0 == last and states[j0][1] == 1:  # complete at once
+                if not qf:
+                    if bt and n_states > 1 and not emit_all:
+                        # behind leading optionals: resolve against
+                        # greedier starts
+                        p0["done"] = True
+                        pend.append(p0)
+                    elif not bt or n_states > 1 or ci == 0:
+                        # a single-state match is decided here; later
+                        # alternatives are the same match with a
+                        # lower-priority labeling
+                        out.append(_match_row(key, p0))
+                    continue
+                if bt:
                     # greedy quantified final starting here: pend the
                     # length-1 completion (stop digit) and keep the
                     # extending start live (greedier digit)
-                    pend.append({
-                        **p0, "closed": True, "done": True,
-                        "labels": list(p0["labels"]),
-                        "ids": list(p0["ids"]), "tss": list(p0["tss"]),
-                        "vals": list(p0["vals"]),
-                        "deck": list(p0["deck"]) + [1],
-                    })
-                    if len(live) < max_partials:
-                        live.append({**p0, "deck": list(p0["deck"]) + [0]})
-                elif j0 == n_states - 1 and mn0 == 1:
-                    if n_states == 1:
-                        if ci == 0:  # leftmost alternative only: a
-                            # single-state match is decided at this
-                            # event; later alternatives are the same
-                            # match with a lower-priority labeling
-                            _emit({**p0, "done": True})
-                    elif emit_all:
-                        _emit({**p0, "done": True})
-                    else:  # instant complete behind leading optionals:
-                        p0["done"] = True  # resolve vs greedier starts
-                        pend.append(p0)
-                elif len(live) < max_partials:
-                    live.append(p0)
-    if finalize:
+                    pend.append(_branch(p0, p0["deck"] + [1],
+                                        closed=True, done=True))
+                    p0["deck"] = p0["deck"] + [0]
+            if len(live) < max_partials:
+                live.append(p0)
+            elif not bt:
+                rejected_starts += 1  # hot-key guard: pool at capacity
+    if rejected_starts:
+        import warnings
+
+        warnings.warn(
+            f"NFA key {key}: live-partial cap {max_partials} hit — "
+            f"{rejected_starts} new partial start(s) rejected this batch "
+            "(bound WITHIN tighter or raise with_max_partials)",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+    if finalize and bt:
+        # live branches can never complete: pending matches resolve.
         # One _resolve pass emits at most one past_last match and
         # defers every group behind its resume row; iterate to a
-        # fixpoint (resume_row resets per pass) so matches starting
-        # after an emitted match's last row still resolve.
+        # fixpoint so matches starting after an emitted match's last
+        # row still resolve.
         while pend:
             before = len(pend)
-            _resolve([], False, None)
+            pend, _, _ = _resolve(key, pend, [], skip, out)
             if len(pend) == before:
                 break  # no progress — nothing left resolvable
         live = []
+    elif finalize and qf:
+        # quantified-final runs that reached their min complete (ISO
+        # MATCH_RECOGNIZE closes every match at end of partition),
+        # honoring the skip strategy in leftmost (start, sid) order.
+        # Other partials stay incomplete, as ever.
+        fin = [p for p in live if p["si"] == last and p["cnt"] >= lmn]
+        _emit_completed(key, fin, [], skip, out)
+        live = [p for p in live if not (p["si"] == last and p["cnt"] >= lmn)]
     return out, live + pend
 
 

@@ -16,17 +16,22 @@ caller falls back to the NFA fold; every tier emits the exact
 fold-equivalence tests in tests/test_nfa_lowering.py):
 
 - **A — contiguous fixed-length**: every state's count is bounded and
-  transitions are strict (SQL pattern concatenation).  All greedy count
-  vectors are enumerated (product of [min,max] ranges, capped) and each
-  becomes a conjunction over ``lead()`` columns: state flags at their
-  offsets, greedy-consistency negations (a state below max must FAIL at
-  the next offset, a skipped optional must FAIL where the next state
-  matched), and the WITHIN bound as ``lead(ts, L-1) <= ts + horizon``.
-  Vectors are mutually exclusive by construction, so matches are the
-  filter's rows.  Cross-variable DEFINEs participate via static offset
-  instantiation of their SQL text (FIRST/LAST resolve to fixed offsets
-  per vector).  AFTER MATCH SKIP: no_skip/to_next always (one
-  deterministic partial per start row); past_last additionally requires
+  transitions are strict (SQL pattern concatenation).  All count
+  vectors are enumerated (``_count_vectors``: the product of the
+  states' [min,max] ranges, or — for bounded group patterns — of each
+  element's options, a group's repetition count times its members'
+  counts; capped) and ONE branch builder (``_lower_fixed``) turns each
+  into a conjunction over ``lead()`` columns: state flags at their
+  offsets and the WITHIN bound as ``lead(ts, L-1) <= ts + horizon``.
+  Deterministic mode (flat patterns only) adds greedy-consistency
+  negations (a state below max must FAIL at the next offset, a skipped
+  optional must FAIL where the next state matched), so vectors are
+  mutually exclusive and matches are the filter's rows; backtracking
+  mode (flat or grouped) instead orders the CASE by regex preference.
+  Cross-variable DEFINEs participate via static offset instantiation
+  of their SQL text (FIRST/LAST resolve to fixed offsets per vector).
+  AFTER MATCH SKIP: no_skip/to_next always (one deterministic partial
+  per start row); past_last additionally requires
   a static no-overlap proof — ``max(state0)==1`` and state 0's
   equality-literal conjunct contradicting every later state's (a row
   inside a match can then never start another).
@@ -465,8 +470,8 @@ def try_lower_batch(
         if not backtrack or not _groups_lowerable(states, groups, skip):
             return None
         try:
-            return _lower_fixed_groups(
-                flagged, states, key, value_cols, horizon_s, groups)
+            return _lower_fixed(flagged, states, key, value_cols, horizon_s,
+                                backtrack=True, groups=groups)
         except _Unlowerable:
             return None
     tier = eligible_tier(states, horizon_s, skip)
@@ -535,135 +540,6 @@ def _groups_lowerable(states, groups, skip: str) -> bool:
     return True
 
 
-def _lower_fixed_groups(
-    flagged: DataFrame, states, key: str, value_cols, horizon_s: int,
-    groups,
-) -> DataFrame:
-    """Unrolled tier A for bounded group patterns (backtracking mode):
-    every (group repetition count, per-occurrence state count)
-    assignment becomes one branch; branches are ordered by the
-    flattened regex decision sequence (greedy prefers more, reluctant
-    fewer, positionally left-to-right) and resolved by a first-match
-    CASE — exactly the branching fold's preference."""
-    leads = _Leads()
-    n = len(states)
-    gmap = {g[0]: tuple(g) for g in groups}
-    elements: list[tuple] = []
-    i = 0
-    while i < n:
-        if i in gmap:
-            elements.append(("g",) + gmap[i])
-            i = gmap[i][1] + 1
-        else:
-            elements.append(("s", i))
-            i += 1
-
-    def counts(i: int) -> range:
-        return range(states[i].min_count, states[i].max_count + 1)
-
-    def element_options(el) -> list[tuple[tuple, list[tuple[int, int]]]]:
-        if el[0] == "s":
-            i = el[1]
-            return [
-                ((-c if states[i].greedy else c,), [(i, c)])
-                for c in counts(i)
-            ]
-        _, gs, ge, gmn, gmx, gg = el
-        inner = list(range(gs, ge + 1))
-        opts = []
-        for reps in range(gmn, gmx + 1):
-            per_pos = [list(counts(i)) for _ in range(reps) for i in inner]
-            for combo in itertools.product(*per_pos):
-                positions: list[tuple[int, int]] = []
-                kp = [-reps if gg else reps]
-                it = iter(combo)
-                for _ in range(reps):
-                    for i in inner:
-                        c = next(it)
-                        positions.append((i, c))
-                        kp.append(-c if states[i].greedy else c)
-                opts.append((tuple(kp), positions))
-        return opts
-
-    all_opts = [element_options(el) for el in elements]
-    nbranch = 1
-    for o in all_opts:
-        nbranch *= len(o)
-    if nbranch > _MAX_VECTORS:
-        raise _Unlowerable(f"{nbranch} unrolled branches > cap")
-
-    def alt_or(i: int, off: int) -> str:
-        alts = getattr(states[i], "alts", ())
-        refs = [leads.ref(f"f{i}", off)] + [
-            leads.ref(f"f{i}x{k}", off) for k in range(len(alts))
-        ]
-        return "(" + " OR ".join(refs) + ")" if alts else refs[0]
-
-    def label_at(i: int, off: int) -> str:
-        alts = getattr(states[i], "alts", ())
-        if not alts:
-            return f"'{states[i].name}'"
-        whens = [f"WHEN {leads.ref(f'f{i}', off)} THEN '{states[i].name}'"]
-        whens += [
-            f"WHEN {leads.ref(f'f{i}x{k}', off)} THEN '{a[0]}'"
-            for k, a in enumerate(alts)
-        ]
-        return "CASE " + " ".join(whens) + " END"
-
-    raw = []
-    for combo in itertools.product(*all_opts):
-        sort_key = tuple(x for kp, _ in combo for x in kp)
-        positions = [p for _, ps in combo for p in ps]
-        raw.append((sort_key, positions))
-    raw.sort(key=lambda t: t[0])
-
-    branches: list[tuple[str, dict]] = []
-    for _, positions in raw:
-        L = sum(c for _, c in positions)
-        if L > _MAX_LEN:
-            raise _Unlowerable(f"unrolled length {L} > cap")
-        if L == 0:
-            continue
-        conds, labels, off = [], [], 0
-        for i, c in positions:
-            for _ in range(c):
-                conds.append(alt_or(i, off))
-                labels.append(label_at(i, off))
-                off += 1
-        if horizon_s < _UNBOUNDED_S and L > 1:
-            conds.append(
-                f"{leads.ref('ts', L - 1)} <= ts + INTERVAL {horizon_s} SECOND"
-            )
-        ids = ", ".join(leads.ref("event_id", o) for o in range(L))
-        tss = ", ".join(leads.ref("ts", o) for o in range(L))
-        branches.append((
-            " AND ".join(f"({c})" for c in conds),
-            {
-                "end_ts": leads.ref("ts", L - 1),
-                "labels": f"array({', '.join(labels)})",
-                "ids": f"array({ids})",
-                "tss": f"array({tss})",
-            },
-        ))
-    if not branches:
-        raise _Unlowerable("no live unrolled branches")
-    w = Window.partitionBy(key).orderBy("ts", "event_id")
-    enriched = leads.attach(flagged, w)
-    any_cond = " OR ".join(f"({c})" for c, _ in branches)
-    out = enriched.filter(F.expr(any_cond))
-    return _out_select(
-        out,
-        key,
-        {
-            "start_ts": "ts",
-            "end_ts": _case([(c, e["end_ts"]) for c, e in branches]),
-            "labels": _case([(c, e["labels"]) for c, e in branches]),
-            "ids": _case([(c, e["ids"]) for c, e in branches]),
-            "tss": _case([(c, e["tss"]) for c, e in branches]),
-        },
-    )
-
-
 def _out_select(
     df: DataFrame, key: str, exprs: dict[str, str], out_key: str | None = None
 ) -> DataFrame:
@@ -684,29 +560,86 @@ def _case(branches: list[tuple[str, str]]) -> str:
     return f"CASE {arms} END"
 
 
+def _count_vectors(states, groups=()) -> list[tuple[tuple, list[tuple[int, int]]]]:
+    """Tier-A count vectors as (preference key, [(state, count), ...]).
+
+    A flat pattern yields the product of its states' [min, max] ranges
+    (state 0 takes at least one row).  A bounded group pattern yields
+    every (group repetition count, per-occurrence state count)
+    assignment, its positions flattened occurrence by occurrence.  The
+    key is the flattened regex decision sequence — greedy prefers more,
+    reluctant fewer, positionally left to right — so sorting by it
+    gives the branching fold's preference order."""
+    gmap = {g[0]: tuple(g) for g in groups}
+
+    def state_opts(i: int) -> list[tuple[tuple, list[tuple[int, int]]]]:
+        s = states[i]
+        lo = max(1, s.min_count) if i == 0 else s.min_count
+        return [((-c if s.greedy else c,), [(i, c)])
+                for c in range(lo, s.max_count + 1)]
+
+    def group_opts(gs, ge, gmn, gmx, gg):
+        inner = list(range(gs, ge + 1))
+        opts = []
+        for reps in range(gmn, gmx + 1):
+            per_pos = [
+                range(states[i].min_count, states[i].max_count + 1)
+                for _ in range(reps) for i in inner
+            ]
+            for combo in itertools.product(*per_pos):
+                positions = list(zip(inner * reps, combo))
+                kp = [-reps if gg else reps] + [
+                    -c if states[i].greedy else c for i, c in positions]
+                opts.append((tuple(kp), positions))
+        return opts
+
+    all_opts = []
+    i = 0
+    while i < len(states):
+        if i in gmap:
+            all_opts.append(group_opts(*gmap[i]))
+            i = gmap[i][1] + 1
+        else:
+            all_opts.append(state_opts(i))
+            i += 1
+    nvec = 1
+    for o in all_opts:
+        nvec *= len(o)
+    if nvec > _MAX_VECTORS:
+        raise _Unlowerable(f"{nvec} count vectors > cap")
+    return [
+        (tuple(x for kp, _ in combo for x in kp),
+         [p for _, ps in combo for p in ps])
+        for combo in itertools.product(*all_opts)
+    ]
+
+
 def _lower_fixed(
     flagged: DataFrame, states, key: str, value_cols, horizon_s: int,
     backtrack: bool = False,
     subsets: dict[str, tuple[str, ...]] | None = None,
+    groups=(),
 ) -> DataFrame:
-    """Tier A: enumerate count vectors over lead() columns.
+    """Tier A: one branch per count vector (``_count_vectors``), each a
+    conjunction over lead() columns — state conditions at their
+    offsets, the WITHIN bound — resolved by a first-match CASE.
 
-    Deterministic-greedy mode (default): each vector carries
-    greedy-consistency NEGATIONS (the next extension / the skipped
-    optional must NOT have matched), making vectors mutually exclusive
-    — the fold's one-path semantics.
+    Deterministic-greedy mode (default, flat patterns only): each
+    vector also carries greedy-consistency NEGATIONS (the next
+    extension / the skipped optional must NOT have matched), making
+    vectors mutually exclusive — the fold's one-path semantics.
 
     Backtracking mode: negations are dropped and the CASE tries
-    vectors in DESCENDING lexicographic count order (prefer more rows
-    in earlier states — the regex-greedy allocation, reluctant states
-    ascending) so the first satisfiable allocation wins, exactly the
-    branching fold's resolution (equivalence-tested)."""
+    vectors in regex preference order (prefer more rows in earlier
+    states, reluctant states fewer; a group's repetition count before
+    its members) so the first satisfiable allocation wins, exactly the
+    branching fold's resolution (equivalence-tested).  Group patterns
+    lower only in this mode."""
     leads = _Leads()
     n = len(states)
-    ranges = [
-        range(max(1, s.min_count) if i == 0 else s.min_count, s.max_count + 1)
-        for i, s in enumerate(states)
-    ]
+    vectors = _count_vectors(states, groups)
+    if backtrack:
+        vectors.sort(key=lambda v: v[0])
 
     def full_cond(i: int, off: int, bound: dict[str, list[int]]) -> str | None:
         s = states[i]
@@ -735,25 +668,29 @@ def _lower_fixed(
         ]
         return "CASE " + " ".join(whens) + " END"
 
-    branches: list[tuple[tuple, str, dict]] = []
-    for vec in itertools.product(*ranges):
-        offsets: list[list[int]] = []
-        pos = 0
-        for cnt in vec:
-            offsets.append(list(range(pos, pos + cnt)))
-            pos += cnt
-        L = pos
+    branches: list[tuple[str, dict]] = []
+    for _, positions in vectors:
+        spans: list[tuple[int, list[int]]] = []  # (state, its offsets)
+        L = 0
+        for i, cnt in positions:
+            spans.append((i, list(range(L, L + cnt))))
+            L += cnt
+        if L > _MAX_LEN:
+            raise _Unlowerable(f"unrolled length {L} > cap")
+        if L == 0:
+            continue
         conds: list[str] = []
         dead = False
 
         def bound_before(off: int) -> dict[str, list[int]]:
-            return {
-                states[i].name: [o for o in offsets[i] if o < off] for i in range(n)
-            }
+            bound: dict[str, list[int]] = {s.name: [] for s in states}
+            for i, offs in spans:
+                bound[states[i].name] += [o for o in offs if o < off]
+            return bound
 
         # state conditions at their assigned offsets
-        for i in range(n):
-            for o in offsets[i]:
+        for i, offs in spans:
+            for o in offs:
                 c = full_cond(i, o, bound_before(o))
                 if c is None:
                     dead = True
@@ -770,16 +707,16 @@ def _lower_fixed(
         # the batch finalize); under a bounded WITHIN a breaking row
         # beyond the horizon ALSO closes (the fold's expiry completion),
         # so the negated extension must be within-horizon to count.
-        for i in range(n) if not backtrack else ():
-            if not offsets[i]:
+        for k, (i, offs) in enumerate(spans if not backtrack else ()):
+            if not offs:
                 # skipped optional: must fail where the next state matched
-                p = next(offsets[j][0] for j in range(i + 1, n) if offsets[j])
+                p = next(o[0] for _, o in spans[k + 1:] if o)
                 c = full_cond(i, p, bound_before(p))
                 if c is not None:
                     conds.append(f"NOT coalesce({c}, false)")
                 continue
-            if vec[i] < states[i].max_count:
-                p = offsets[i][-1] + 1  # the row after this state's run
+            if len(offs) < states[i].max_count:
+                p = offs[-1] + 1  # the row after this state's run
                 c = full_cond(i, p, bound_before(p))
                 if c is not None:
                     if i == n - 1 and horizon_s < _UNBOUNDED_S:
@@ -790,31 +727,20 @@ def _lower_fixed(
             conds.append(
                 f"{leads.ref('ts', L - 1)} <= ts + INTERVAL {horizon_s} SECOND"
             )
-        labels = ", ".join(
-            label_at(i, o) for i in range(n) for o in offsets[i]
-        )
+        labels = ", ".join(label_at(i, o) for i, offs in spans for o in offs)
         ids = ", ".join(leads.ref("event_id", o) for o in range(L))
         tss = ", ".join(leads.ref("ts", o) for o in range(L))
-        branches.append(
-            (
-                vec,
-                " AND ".join(f"({c})" for c in conds),
-                {
-                    "end_ts": leads.ref("ts", L - 1),
-                    "labels": f"array({labels})",
-                    "ids": f"array({ids})",
-                    "tss": f"array({tss})",
-                },
-            )
-        )
+        branches.append((
+            " AND ".join(f"({c})" for c in conds),
+            {
+                "end_ts": leads.ref("ts", L - 1),
+                "labels": f"array({labels})",
+                "ids": f"array({ids})",
+                "tss": f"array({tss})",
+            },
+        ))
     if not branches:
         raise _Unlowerable("all count vectors statically dead")
-    if backtrack:
-        # regex preference: greedy states want MORE rows (descending),
-        # reluctant states fewer (ascending) — lexicographic by state
-        branches.sort(key=lambda b: tuple(
-            -c if states[i].greedy else c for i, c in enumerate(b[0])))
-    branches = [(c, e) for _, c, e in branches]
     w = Window.partitionBy(key).orderBy("ts", "event_id")
     enriched = leads.attach(flagged, w)
     any_cond = " OR ".join(f"({c})" for c, _ in branches)

@@ -81,21 +81,18 @@ def events_spec(sf_dir: str, watermark_delay: str = "10 minutes") -> TableSpec:
     computed expr adapts to the parquet physical encoding (ns-as-long vs
     µs timestamp) by probing the file footer — no Spark session needed."""
     import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType, TimestampType
 
     path = f"{sf_dir}/events.parquet"
     phys = str(pq.read_schema(path).field("ts").type)
     # Spark under legacy.parquet.nanosAsLong=true reads BOTH a plain
     # INT64 column and an INT64 TIMESTAMP(NANOS) column (pyarrow:
-    # "timestamp[ns]") as BIGINT nanos — either footer type must take
-    # the ns-as-long branch.  Anything else (timestamp[us]/[ms]) is a
-    # real Spark TimestampType.  catalog.ts_norm_sql branches on the
-    # Spark-read LongType and is the authority; this probe mirrors it
-    # for the session-free DDL path.
-    expr = (
-        "timestamp_millis(ts div 1000000)"
-        if phys == "int64" or phys.startswith("timestamp[ns")
-        else "date_trunc('MILLISECOND', cast(ts as timestamp))"
-    )
+    # "timestamp[ns]") as BIGINT nanos; anything else (timestamp[us]/
+    # [ms]) is a real Spark TimestampType.  Map the footer type to the
+    # Spark type and let catalog.ts_norm_sql, the authority, pick the
+    # expression.
+    nanos = phys == "int64" or phys.startswith("timestamp[ns")
+    expr = _catalog.ts_norm_sql(LongType() if nanos else TimestampType())
     return TableSpec(
         path=path,
         computed={"ts": expr},

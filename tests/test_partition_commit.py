@@ -149,3 +149,12 @@ def test_read_committed_before_first_write(spark, tmp_path):
     root = str(tmp_path / "pc_empty")
     sink = PartitionCommitSink("ts", root, partition="1 hour")
     assert read_committed(spark, root, sink).count() == 0
+
+
+def test_partition_commit_remote_uri_rejected(tmp_path):
+    """The watermark markers and the data listing are driver-local file
+    I/O: a remote URI root must fail fast, not write markers under a
+    local ``s3:/...`` directory and never commit."""
+    with pytest.raises(NotImplementedError, match="remote URI"):
+        PartitionCommitSink("ts", "s3://bucket/pc")
+    PartitionCommitSink("ts", str(tmp_path / "ok"))  # local fine

@@ -194,9 +194,10 @@ def test_mad_bucketed_median_matches_window(spark):
 
 def test_exact_quantiles_property_random_frames(spark):
     """Hypothesis-style property over seeded random frames: the generic
-    two-pass helper equals plain sorted indexing for every probability,
-    across list shapes (duplicates, negatives, single bucket, many
-    buckets, tiny n)."""
+    two-pass helper equals plain sorted indexing of the non-NULL values
+    for every probability, across list shapes (duplicates, negatives,
+    single bucket, many buckets, tiny n, NULL values — which rank
+    nowhere, as in Spark's percentile_disc)."""
     import random
 
     from flink_1_11_1_spark.extensions.stats import exact_quantiles
@@ -206,16 +207,20 @@ def test_exact_quantiles_property_random_frames(spark):
         [rng.randint(-50, 50) for _ in range(n)]
         for n in (1, 2, 7, 100, 500)
     ] + [[5] * 40, list(range(200)), [rng.randint(0, 10**6) for _ in range(300)]]
+    cases += [
+        [None, None, 1, 2, 3, 4],
+        [None if rng.random() < 0.3 else rng.randint(-50, 50) for _ in range(120)],
+    ]
     probs = (0.01, 0.5, 0.9, 0.99, 1.0)
     for vals in cases:
         df = spark.createDataFrame(
-            [(i, v) for i, v in enumerate(vals)], ["id", "v"]
+            [(i, v) for i, v in enumerate(vals)], "id bigint, v bigint"
         )
         got = {
             r.p: r.value
             for r in exact_quantiles(df, "v", "id", probs, bucket_width=7.0).collect()
         }
-        s = sorted(vals)
+        s = sorted(v for v in vals if v is not None)
         import math as _math
 
         for p in probs:

@@ -1250,6 +1250,7 @@ def test_late_sideoutput_cached_base_retry_discipline(spark, tmp_path):
     use the before-N base (never N's own rows), and (c) match the
     disk-scan result exactly."""
     from flink_1_11_1_spark.streaming.late import LateSideOutput, read_late_rows
+    from flink_1_11_1_spark.streaming.wm_markers import prev_max_us
 
     def frame(rows):  # (event_id, minute offset)
         return spark.createDataFrame(
@@ -1269,7 +1270,7 @@ def test_late_sideoutput_cached_base_retry_discipline(spark, tmp_path):
     ids = sorted(r.event_id for r in read_late_rows(spark, sink.sink_path).collect())
     assert ids == [3]
     # cache vs disk agreement for the next batch
-    assert sink._base_for(2) == sink._prev_max_us(2)
+    assert sink._base_for(2) == prev_max_us(sink._wm_dir, 2)
     # batch 2 base now includes 12:00: event 5 at 11:30 is late
     sink(frame([(5, (11, 30)), (6, (13, 0))]), 2)
     ids = sorted(r.event_id for r in read_late_rows(spark, sink.sink_path).collect())
