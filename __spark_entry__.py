@@ -112,16 +112,21 @@ _DEFER_FIRST: tuple[str, ...] = ()
 # then the CEP entries (their state conditions reach the same
 # conjunct split, which picks the lowering tier).
 # x_mad_outliers follows x_semdedup: its medians now leave NULL values
-# out, in the oracle and the Spark form.  The MR entries' aggregate and
-# column measures now join back through Column expressions.  The cosine,
-# pack and DataStream-reduce entries come next: the functions they ship
-# to Python workers now call module-level package code.  x_pipeline_clean
-# imports dedup lazily now (pipeline.py imported first was circular).
+# out, in the oracle and the Spark form.  The LSH dedup tiers and
+# x_ann_pq follow it: their candidate self-joins and staged SQL now go
+# through one bucket-pair helper and spark.sql frame parameters.  The
+# MR entries' aggregate and column measures now join back through
+# Column expressions.  The cosine, pack and DataStream-reduce entries
+# come next: the functions they ship to Python workers now call
+# module-level package code.  x_pipeline_clean imports dedup lazily now
+# (pipeline.py imported first was circular).
 # x_quantiles' helper now leaves NULL values out of both passes.  The
 # MR and CEP entries below run on one fold core and one tier-A builder.
 _REVERIFY_FIRST: tuple[str, ...] = (
-    "x_semdedup", "x_mad_outliers", "x_quantiles",
-    "x_dedup_cosine", "x_dedup_cosine_lsh", "x_pack_batches", "x_ds_reduce",
+    "x_semdedup", "x_mad_outliers", "x_dedup_minhash", "x_dedup_simhash",
+    "x_dedup_incremental", "x_dedup_cosine_lsh", "x_dedup_clusters",
+    "x_ann_pq", "x_quantiles",
+    "x_dedup_cosine", "x_pack_batches", "x_ds_reduce",
     "x_pipeline_clean",
     "x_sql_tumble", "x_sql_hop", "x_sql_session", "x_sql_lateral",
     "x_sql_system_time", "x_ddl_roundtrip", "x_ddl_like",

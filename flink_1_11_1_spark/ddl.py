@@ -581,8 +581,7 @@ class DdlCatalog:
             if _mr._MR_RE.match(s):
                 return _mr.match_recognize(self.spark, s)
             pre_expansion = s
-            s = _mr.expand_mr_factors(self.spark, s)
-            views = list(_mr.last_factor_views)
+            s, views = _mr.expand_mr_factors(self.spark, s)
             if views:
                 try:
                     return self._execute_routed(s)
@@ -1321,8 +1320,7 @@ class DdlCatalog:
         if "MATCH_RECOGNIZE" in q.upper():
             from .extensions import match_recognize as _mr
 
-            expanded = _mr.expand_mr_factors(self.spark, q)
-            factor_views = list(_mr.last_factor_views)
+            expanded, factor_views = _mr.expand_mr_factors(self.spark, q)
             try:
                 self.spark.sql(expanded).createOrReplaceTempView(name)
             finally:

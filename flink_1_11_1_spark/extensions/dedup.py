@@ -338,35 +338,63 @@ def minhash_layout(
     return (num_hashes, 1)
 
 
+def _bucket_pairs(
+    buckets: DataFrame, key: str, on: Column | None = None,
+    carry: tuple[Column, ...] = (),
+) -> DataFrame:
+    """Candidate pairs from a bucket frame ``(id, band, <key>, ...)``:
+    the distinct ``(da, db, *carry)`` whose rows agree on ``band`` and
+    ``key`` with ``a.id < b.id`` and, when given, the extra predicate
+    ``on``.  ``on`` and ``carry`` address the self-join sides as ``a``
+    and ``b``.  Every LSH tier's candidate generator is this join over
+    its own bucket frame."""
+    # both sides of the self-join read the bucket frame and Catalyst
+    # does not reuse the exchange across the aliases (round-14 plan
+    # audit: no ReusedExchange), so without the lazy checkpoint the
+    # whole lineage behind the buckets ran once per side (simhash: 2.2
+    # -> 1.5 s at sf0.1, identical rows)
+    buckets = buckets.localCheckpoint(eager=False)
+    pid = buckets.columns[0]
+    cond = (
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col(f"a.{key}") == F.col(f"b.{key}"))
+        & (F.col(f"a.{pid}") < F.col(f"b.{pid}"))
+    )
+    if on is not None:
+        cond = cond & on
+    return (
+        buckets.alias("a")
+        .join(buckets.alias("b"), cond)
+        .select(F.col(f"a.{pid}").alias("da"), F.col(f"b.{pid}").alias("db"),
+                *carry)
+        .distinct()
+    )
+
+
+def _minhash_buckets(
+    sig: DataFrame, bands: int = BANDS, rows_per_band: int = ROWS_PER_BAND,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """``(doc_id, *carry, band, bh)``: one row per signature band, keyed
+    on the hash of that band's min-hash rows."""
+    band_structs = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.hash(*[F.col(f"h{i}") for i in range(
+                b * rows_per_band, (b + 1) * rows_per_band)]).alias("bh"),
+        )
+        for b in range(bands)
+    ]
+    return sig.select(
+        "doc_id", *carry, F.explode(F.array(*band_structs)).alias("bk")
+    ).select("doc_id", *carry, "bk.band", "bk.bh")
+
+
 def lsh_candidates(
     sig: DataFrame, bands: int = BANDS, rows_per_band: int = ROWS_PER_BAND
 ) -> DataFrame:
-    """Band-bucket join: pairs agreeing on all rows of >=1 band.
-
-    The bucket frame feeds BOTH sides of the self-join and Catalyst does
-    not reuse the exchange across the aliases, so without the lazy
-    checkpoint the whole signature lineage executed twice (measured in
-    the round-14 plan audit: no ReusedExchange node; ~2x the signature
-    cost on every caller).
-    """
-    band_structs = []
-    for b in range(bands):
-        cols = [F.col(f"h{i}") for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
-        band_structs.append(F.struct(F.lit(b).alias("band"), F.hash(*cols).alias("bh")))
-    buckets = sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bk")
-    ).select("doc_id", "bk.band", "bk.bh").localCheckpoint(eager=False)
-    return (
-        buckets.alias("a")
-        .join(
-            buckets.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .distinct()
-    )
+    """Band-bucket join: pairs agreeing on all rows of >=1 band."""
+    return _bucket_pairs(_minhash_buckets(sig, bands, rows_per_band), "bh")
 
 
 def minhash_lsh_pairs(
@@ -434,12 +462,7 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     Banded candidate generation (4×16-bit keys) + exact
     bit_count(xor) verification — never an all-pairs comparison.
     """
-    sig = simhash_signatures(docs)
-    # the band frame feeds both sides of the candidate self-join: the
-    # lazy checkpoint runs the signature aggregation (64 bit votes over
-    # every token) ONCE instead of once per side (round 14; measured
-    # 2.2 -> 1.5 s at sf0.1, identical rows; no ReusedExchange without it)
-    bands = sig.select(
+    bands = simhash_signatures(docs).select(
         "doc_id",
         "sh",
         F.explode(
@@ -453,21 +476,12 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
                 ]
             )
         ).alias("bb"),
-    ).select("doc_id", "sh", "bb.band", "bb.bk").localCheckpoint(eager=False)
+    ).select("doc_id", "sh", "bb.band", "bb.bk")
     return (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bk") == F.col("b.bk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        _bucket_pairs(
+            bands, "bk",
+            carry=(F.expr("bit_count(a.sh ^ b.sh)").alias("hamming"),),
         )
-        .select(
-            F.col("a.doc_id").alias("da"),
-            F.col("b.doc_id").alias("db"),
-            F.expr("bit_count(a.sh ^ b.sh)").alias("hamming"),
-        )
-        .distinct()
         .where(F.col("hamming") <= max_hamming)
         .orderBy("da", "db")
     )
@@ -604,15 +618,10 @@ def _sign_band_codes(vs: pd.Series, bands: int, rpb: int, seed: int) -> pd.Serie
     return pd.Series(list(codes.astype(np.int32)))
 
 
-def _cos_band_candidates(
-    emb: DataFrame, bands: int, rpb: int, seed: int = 7,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """(da, db) LSH candidates: per-vector band codes (sign bits of
-    random-hyperplane projections, rpb bits per band) → shuffle join on
-    (band, code).  The corpus is exploded `bands`× and the candidate
-    join is a plain shuffle — no broadcast, no corpus², scale-safe; AQE
-    re-balances hot buckets.  Projections run as one vectorized Arrow
+def _cos_buckets(emb: DataFrame, bands: int, rpb: int, seed: int = 7) -> DataFrame:
+    """``(vec_id, band, code)``: per-vector band codes, the sign bits of
+    random-hyperplane projections, rpb bits per band.  The corpus is
+    exploded `bands`x.  Projections run as one vectorized Arrow
     pandas_udf batch (numpy GEMM against the plane bank — large
     layouts are hundreds of planes, which as SQL literals would be
     megabyte expressions and per-element lambda evaluation); the plane
@@ -626,32 +635,19 @@ def _cos_band_candidates(
     def band_codes(vs: pd.Series) -> pd.Series:
         return _sign_band_codes(vs, bands, rpb, seed)
 
-    # both sides of the candidate self-join read the bucket frame: the
-    # lazy checkpoint runs the Arrow projection (GEMM against the plane
-    # bank) once instead of once per side (round 14).  checkpoint=False
-    # exists for the plan-shape test, which asserts the banded routing
-    # on the pre-checkpoint lineage (the final plan only shows the
-    # checkpoint scan).
-    buckets = (
-        emb.select(
-            "vec_id",
-            F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
-        )
-        .select("vec_id", F.posexplode(band_codes("v")).alias("band", "code"))
-    )
-    if checkpoint:
-        buckets = buckets.localCheckpoint(eager=False)
-    return (
-        buckets.alias("a")
-        .join(
-            buckets.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.code") == F.col("b.code"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("da"), F.col("b.vec_id").alias("db"))
-        .distinct()
-    )
+    return emb.select(
+        "vec_id",
+        F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
+    ).select("vec_id", F.posexplode(band_codes("v")).alias("band", "code"))
+
+
+def _cos_band_candidates(
+    emb: DataFrame, bands: int, rpb: int, seed: int = 7
+) -> DataFrame:
+    """(da, db) LSH candidates: shuffle join of ``_cos_buckets`` on
+    (band, code) — no broadcast, no corpus², scale-safe; AQE
+    re-balances hot buckets."""
+    return _bucket_pairs(_cos_buckets(emb, bands, rpb, seed), "code")
 
 
 def _gemm_score(key, pdf: pd.DataFrame, cut: float) -> pd.DataFrame:
@@ -979,32 +975,11 @@ def incremental_dedup_pairs(
     sh = arr.select("doc_id", F.explode("gs").alias("g")).localCheckpoint(
         eager=False
     )
-    buckets = minhash_signatures_from_arrays(arr).join(flags, "doc_id")
-    band_structs = []
-    for b in range(BANDS):
-        cols = [F.col(f"h{i}") for i in range(b * ROWS_PER_BAND, (b + 1) * ROWS_PER_BAND)]
-        band_structs.append(F.struct(F.lit(b).alias("band"), F.hash(*cols).alias("bh")))
-    # both sides of the candidate self-join read bk: lazy-checkpoint so
-    # the signature lineage executes once (round 14, same fix as
-    # lsh_candidates — Catalyst does not reuse the exchange here)
-    bk = buckets.select(
-        "doc_id", "is_new", F.explode(F.array(*band_structs)).alias("bk")
-    ).select("doc_id", "is_new", "bk.band", "bk.bh").localCheckpoint(eager=False)
-    cand = (
-        bk.alias("a")
-        .join(
-            bk.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("a.is_new") | F.col("b.is_new")),  # one-sided pruning
-        )
-        .select(
-            F.col("a.doc_id").alias("da"),
-            F.col("b.doc_id").alias("db"),
-            (F.col("a.is_new") & F.col("b.is_new")).alias("_both"),
-        )
-        .distinct()
+    sig = minhash_signatures_from_arrays(arr).join(flags, "doc_id")
+    cand = _bucket_pairs(
+        _minhash_buckets(sig, carry=("is_new",)), "bh",
+        on=F.col("a.is_new") | F.col("b.is_new"),  # one-sided pruning
+        carry=((F.col("a.is_new") & F.col("b.is_new")).alias("_both"),),
     )
     verified = _pair_jaccard(cand.select("da", "db"), sh).where(
         F.col("jac") >= threshold
@@ -1095,43 +1070,21 @@ def streaming_minhash_dedup(
         batch = batch.localCheckpoint(eager=True)
         sh_new = shingles(batch, n).localCheckpoint(eager=True)
         sig_new = minhash_signatures(sh_new).localCheckpoint(eager=True)
-        have_index = os.path.exists(os.path.join(index_dir, "sig"))
-        if have_index:
-            sig_idx = spark.read.parquet(os.path.join(index_dir, "sig"))
-            sh_idx = spark.read.parquet(os.path.join(index_dir, "sh"))
-            sig_all = sig_idx.unionByName(sig_new)
-            sh_all = sh_idx.unionByName(sh_new)
-        else:
-            sig_all, sh_all = sig_new, sh_new
-
-        def buckets(sig: DataFrame) -> DataFrame:
-            band_structs = []
-            for b in range(BANDS):
-                cols = [
-                    F.col(f"h{i}")
-                    for i in range(b * ROWS_PER_BAND, (b + 1) * ROWS_PER_BAND)
-                ]
-                band_structs.append(
-                    F.struct(F.lit(b).alias("band"), F.hash(*cols).alias("bh"))
-                )
-            return sig.select(
-                "doc_id", F.explode(F.array(*band_structs)).alias("bk")
-            ).select("doc_id", "bk.band", "bk.bh")
-
-        cand = (
-            buckets(sig_new)
-            .alias("a")
-            .join(
-                buckets(sig_all).alias("b"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bh") == F.col("b.bh"))
-                & (F.col("a.doc_id") != F.col("b.doc_id")),
+        # the batch's rows are flagged new: the one-sided candidate
+        # join of incremental_dedup_pairs over index + batch
+        sig_all = sig_new.withColumn("is_new", F.lit(True))
+        sh_all = sh_new
+        if os.path.exists(os.path.join(index_dir, "sig")):
+            sig_all = (
+                spark.read.parquet(os.path.join(index_dir, "sig"))
+                .withColumn("is_new", F.lit(False))
+                .unionByName(sig_all)
             )
-            .select(
-                F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("da"),
-                F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("db"),
-            )
-            .distinct()
+            sh_all = spark.read.parquet(
+                os.path.join(index_dir, "sh")).unionByName(sh_new)
+        cand = _bucket_pairs(
+            _minhash_buckets(sig_all, carry=("is_new",)), "bh",
+            on=F.col("a.is_new") | F.col("b.is_new"),
         )
         pairs = (
             _pair_jaccard(cand, sh_all)

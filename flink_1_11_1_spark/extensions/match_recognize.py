@@ -457,12 +457,6 @@ _MR_KW_RE = re.compile(r"\bMATCH_RECOGNIZE\b", re.IGNORECASE)
 _MR_TABLE_BEFORE_RE = re.compile(r"([A-Za-z_][\w.`]*)\s*$")
 _MR_FACTOR_N = [0]
 
-#: Temp views created by the LAST expand_mr_factors call.  The caller
-#: (ddl.execute) drops them once the enclosing statement has been
-#: analyzed — statement scope, so SHOW TABLES never surfaces them and a
-#: failing statement doesn't leak session views.
-last_factor_views: list[str] = []
-
 
 def _leading_ctes(sql: str) -> list[tuple[str, str]]:
     """Parse a statement's leading WITH clause into ``(name, defs_text)``
@@ -493,7 +487,7 @@ def _leading_ctes(sql: str) -> list[tuple[str, str]]:
 
 def expand_mr_factors(
     spark: SparkSession, sql: str, sf_dir: str | None = None
-) -> str:
+) -> tuple[str, list[str]]:
     """Rewrite every ``<table> MATCH_RECOGNIZE ( ... )`` TABLE FACTOR in
     a statement to a temp-view reference over the executed match.
 
@@ -518,52 +512,58 @@ def expand_mr_factors(
     or lift it into a CTE first).  Keyword text inside string literals,
     comments and backtick identifiers is ignored (``sql_lex``).
 
-    Created views are recorded in :data:`last_factor_views` (reset per
-    call) so ``ddl.execute`` can drop them once the enclosing statement
-    has been analyzed — they are statement-scoped, not session views.
+    Returns the rewritten text and the views it created, which the
+    caller drops once the enclosing statement has been analyzed — they
+    are statement-scoped, not session views.  When a factor fails to
+    expand, the views of the factors before it are dropped here.
     """
-    del last_factor_views[:]
+    views: list[str] = []
     # SQL identifiers are case-insensitive: key by lowercase so a
     # factor written SRC finds the CTE declared src
     ctes = {name.lower(): defs for name, defs in _leading_ctes(sql)}
     out = sql
-    while True:
-        lx = lex(out)
-        kw = next((c for c in _MR_KW_RE.finditer(out) if lx.is_code(c.start())),
-                  None)
-        if kw is None:
-            return out
-        tb = _MR_TABLE_BEFORE_RE.search(out[: kw.start()])
-        if not tb or tb.group(1).upper() in ("FROM", "JOIN", "AS", "ON"):
-            raise ValueError(
-                "MATCH_RECOGNIZE must follow a named table/view or "
-                "same-statement CTE reference (parenthesized subquery "
-                "sources are unsupported — lift the subquery into a CTE "
-                "or register a view first)"
+    try:
+        while True:
+            lx = lex(out)
+            kw = next((c for c in _MR_KW_RE.finditer(out)
+                       if lx.is_code(c.start())), None)
+            if kw is None:
+                return out, views
+            tb = _MR_TABLE_BEFORE_RE.search(out[: kw.start()])
+            if not tb or tb.group(1).upper() in ("FROM", "JOIN", "AS", "ON"):
+                raise ValueError(
+                    "MATCH_RECOGNIZE must follow a named table/view or "
+                    "same-statement CTE reference (parenthesized subquery "
+                    "sources are unsupported — lift the subquery into a CTE "
+                    "or register a view first)"
+                )
+            table = tb.group(1)
+            i = kw.end()
+            while i < len(out) and out[i].isspace():
+                i += 1
+            if i >= len(out) or out[i] != "(":
+                raise ValueError("MATCH_RECOGNIZE must be followed by (...)")
+            close = lx.call(i)[1]
+            body, after = out[i + 1:close], close + 1
+            view = f"__mr_factor_{_MR_FACTOR_N[0]}"
+            _MR_FACTOR_N[0] += 1
+            events = None
+            if table.lower() in ctes:
+                # evaluate the CTE (and its predecessors) out-of-line; the
+                # match consumes the DataFrame, bypassing table resolution
+                events = spark.sql(
+                    f"WITH {ctes[table.lower()]} SELECT * FROM {table}")
+            df = match_recognize(
+                spark, f"SELECT * FROM {table} MATCH_RECOGNIZE ({body})",
+                sf_dir, events=events,
             )
-        table = tb.group(1)
-        i = kw.end()
-        while i < len(out) and out[i].isspace():
-            i += 1
-        if i >= len(out) or out[i] != "(":
-            raise ValueError("MATCH_RECOGNIZE must be followed by (...)")
-        close = lx.call(i)[1]
-        body, after = out[i + 1:close], close + 1
-        view = f"__mr_factor_{_MR_FACTOR_N[0]}"
-        _MR_FACTOR_N[0] += 1
-        events = None
-        if table.lower() in ctes:
-            # evaluate the CTE (and its predecessors) out-of-line; the
-            # match consumes the DataFrame, bypassing table resolution
-            events = spark.sql(
-                f"WITH {ctes[table.lower()]} SELECT * FROM {table}")
-        df = match_recognize(
-            spark, f"SELECT * FROM {table} MATCH_RECOGNIZE ({body})",
-            sf_dir, events=events,
-        )
-        df.createOrReplaceTempView(view)
-        last_factor_views.append(view)
-        out = out[: tb.start(1)] + view + out[after:]
+            df.createOrReplaceTempView(view)
+            views.append(view)
+            out = out[: tb.start(1)] + view + out[after:]
+    except BaseException:
+        for view in views:
+            spark.catalog.dropTempView(view)
+        raise
 
 
 def match_recognize(

@@ -685,42 +685,31 @@ def pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round 14: the Spark side STAGES the multiply-referenced
     intermediates (quantized vectors, subspace slices, trained
-    codebook) behind lazy checkpoints + temp views — Spark inlines
-    repeated CTE references, and the one-text plan scanned embeddings
-    10 times (quantization + slicing re-run per reference).  Every
-    expression string still comes from the shared fragment builders,
-    and the DuckDB oracle keeps the original single-text form, so the
-    contract is unchanged (output oracle-checked at all three scales).
+    codebook) behind lazy checkpoints, passed to each statement as
+    ``spark.sql`` frame parameters — Spark inlines repeated CTE
+    references, and the one-text plan scanned embeddings 10 times
+    (quantization + slicing re-run per reference).  Every expression
+    string still comes from the shared fragment builders, and the
+    DuckDB oracle keeps the original single-text form, so the contract
+    is unchanged (output oracle-checked at all three scales).
     """
     catalog.register(spark, sf_dir)
     ms = ", ".join(f"({m})" for m in range(PQ_M))
     slice_fn, sqdist_fn, idx_fn, arr_fn = (
         _pq_spark_slice, _pq_spark_sqdist, _pq_spark_idx, _pq_spark_arr,
     )
-    try:
-        return _pq_ann_build(spark, ms, slice_fn, sqdist_fn, idx_fn, arr_fn)
-    finally:
-        # every spark.sql() above is analyzed eagerly, so the returned
-        # plan no longer needs the views — drop them so the names do
-        # not leak into (or clobber) the caller's session (ADVICE r14)
-        for vw in ("x_pq_v", "x_pq_sub", "x_pq_cb"):
-            spark.catalog.dropTempView(vw)
-
-
-def _pq_ann_build(spark, ms, slice_fn, sqdist_fn, idx_fn, arr_fn) -> DataFrame:
     v = spark.sql(
         f"SELECT vec_id, {_PQ_SPARK_QUANT} AS q FROM embeddings"
     ).localCheckpoint(eager=False)
-    v.createOrReplaceTempView("x_pq_v")
     sub = spark.sql(
         f"""SELECT v.vec_id, mm.m, {slice_fn('v.q', 'mm.m')} AS sub
-  FROM x_pq_v v CROSS JOIN (SELECT * FROM (VALUES {ms}) AS t(m)) mm"""
+  FROM {{v}} v CROSS JOIN (SELECT * FROM (VALUES {ms}) AS t(m)) mm""",
+        v=v,
     ).localCheckpoint(eager=False)
-    sub.createOrReplaceTempView("x_pq_sub")
     cb0 = (
         f"""(SELECT mm.m, s.code, {slice_fn('s.q', 'mm.m')} AS sub
   FROM (SELECT q, row_number() OVER (ORDER BY md5(cast(vec_id as string)), vec_id) - 1 AS code
-        FROM x_pq_v) s
+        FROM {{v}}) s
   CROSS JOIN (SELECT * FROM (VALUES {ms}) AS t(m)) mm
   WHERE s.code < {PQ_K})"""
     )
@@ -730,20 +719,20 @@ def _pq_ann_build(spark, ms, slice_fn, sqdist_fn, idx_fn, arr_fn) -> DataFrame:
     )
     cb = spark.sql(
         f"""WITH codes0 AS (
-  {_pq_assign_block(sqdist_fn, cb0, from_name="x_pq_sub")}
+  {_pq_assign_block(sqdist_fn, cb0, from_name="{sub}")}
 )
 SELECT mem.m, mem.code, {arr_fn(cent_coords)} AS sub
-FROM codes0 mem JOIN x_pq_sub s ON s.vec_id = mem.vec_id AND s.m = mem.m
-GROUP BY mem.m, mem.code"""
+FROM codes0 mem JOIN {{sub}} s ON s.vec_id = mem.vec_id AND s.m = mem.m
+GROUP BY mem.m, mem.code""",
+        v=v, sub=sub,
     ).localCheckpoint(eager=False)
-    cb.createOrReplaceTempView("x_pq_cb")
     return spark.sql(
         f"""WITH codes AS (
-  {_pq_assign_block(sqdist_fn, "x_pq_cb", from_name="x_pq_sub")}
+  {_pq_assign_block(sqdist_fn, "{cb}", from_name="{sub}")}
 ),
 dtab AS (
   SELECT q.vec_id AS qid, c.m, c.code, {sqdist_fn('q.sub', 'c.sub', PQ_SUB)} AS d
-  FROM x_pq_sub q JOIN x_pq_cb c ON c.m = q.m
+  FROM {{sub}} q JOIN {{cb}} c ON c.m = q.m
   WHERE q.vec_id < {PQ_NQ}
 ),
 adc AS (
@@ -763,14 +752,15 @@ ex AS (
   SELECT s.qid, s.vec_id, s.adc_dist,
          {sqdist_fn('vq.q', 'vv.q', PQ_M * PQ_SUB)} AS exact_dist
   FROM short s
-  JOIN x_pq_v vq ON vq.vec_id = s.qid
-  JOIN x_pq_v vv ON vv.vec_id = s.vec_id
+  JOIN {{v}} vq ON vq.vec_id = s.qid
+  JOIN {{v}} vv ON vv.vec_id = s.vec_id
 )
 SELECT qid, vec_id AS nn_id,
        cast(exact_dist as bigint) AS exact_dist,
        cast(adc_dist as bigint) AS adc_dist
 FROM (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY exact_dist, vec_id) rn FROM ex)
-WHERE rn = 1 ORDER BY qid"""
+WHERE rn = 1 ORDER BY qid""",
+        v=v, sub=sub, cb=cb,
     )
 
 

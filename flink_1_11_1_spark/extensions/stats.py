@@ -646,28 +646,23 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 15: Spark inlines repeated CTE references, so the one-text
     plan scanned events three times and ran the median window twice
     (``v`` feeds med/dev/final, ``m`` feeds dev/final).  The Spark side
-    stages ``v`` and ``m`` behind lazy checkpoints + temp views; the
-    shared projection/devation/final fragments are literally the same
-    strings as the oracle text's, and the median twin is pinned by
+    stages ``v`` and ``m`` behind lazy checkpoints and passes them as
+    ``spark.sql`` frame parameters; the shared projection/deviation/
+    final fragments are literally the same strings as the oracle text's,
+    and the median twin is pinned by
     tests/test_stats.py::test_mad_bucketed_median_matches_window.
     """
     catalog.register(spark, sf_dir)
-    try:
-        v = spark.sql(_MAD_V).localCheckpoint(eager=False)
-        v.createOrReplaceTempView("x_mad_v")
-        m = spark.sql(
-            _MAD_MED_BUCKETED.format(
-                col="cents", alias="median_cents", src="x_mad_v")
-        ).localCheckpoint(eager=False)
-        m.createOrReplaceTempView("x_mad_m")
-        return spark.sql(f"""
-WITH dev AS ({_MAD_DEV.format(v='x_mad_v', m='x_mad_m')}),
+    v = spark.sql(_MAD_V).localCheckpoint(eager=False)
+    m = spark.sql(
+        _MAD_MED_BUCKETED.format(col="cents", alias="median_cents", src="{v}"),
+        v=v,
+    ).localCheckpoint(eager=False)
+    return spark.sql(f"""
+WITH dev AS ({_MAD_DEV.format(v='{v}', m='{m}')}),
 mad AS ({_MAD_MED_BUCKETED.format(col='d', alias='mad_cents', src='dev')})
-{_MAD_FINAL.format(v='x_mad_v', m='x_mad_m', mad='mad')}
-""")
-    finally:
-        for vw in ("x_mad_v", "x_mad_m"):
-            spark.catalog.dropTempView(vw)
+{_MAD_FINAL.format(v='{v}', m='{m}', mad='mad')}
+""", v=v, m=m)
 
 
 registry.register("x_mad_outliers", mad_outliers, _MAD_SQL)

@@ -682,7 +682,7 @@ ORDER BY m.user_id, s_first
 # boundaries because the PARTITION, not the data, slices the stream.
 
 MR_MULTIKEY_SQL = """
-SELECT * FROM events_day_x MATCH_RECOGNIZE (
+SELECT * FROM events MATCH_RECOGNIZE (
   PARTITION BY user_id, dy
   ORDER BY ts, event_id
   MEASURES FIRST(V.event_id) AS v_first, COUNT(V.*) AS n_views,
@@ -699,12 +699,10 @@ def mr_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import catalog as _catalog
 
     ev = _catalog.load_table(spark, sf_dir, "events")
-    ev.withColumn("dy", F.dayofmonth("ts").cast("long")).createOrReplaceTempView(
-        "events_day_x"
-    )
-    return match_recognize(spark, MR_MULTIKEY_SQL).orderBy(
-        "user_id", "dy", "v_first"
-    )
+    return match_recognize(
+        spark, MR_MULTIKEY_SQL,
+        events=ev.withColumn("dy", F.dayofmonth("ts").cast("long")),
+    ).orderBy("user_id", "dy", "v_first")
 
 
 MR_MULTIKEY_ORACLE = f"""

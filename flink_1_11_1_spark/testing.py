@@ -16,6 +16,8 @@ from __future__ import annotations
 import datetime as _dt
 import math
 import os
+import re
+from collections import Counter
 from typing import Any
 
 import duckdb
@@ -116,3 +118,49 @@ def plan_fingerprint(df) -> str:
     s = _re.sub(r"/root/testdata/sf[\d.]+", "<sf>", s)
     s = _re.sub(r"\s+", " ", s)
     return s.strip()
+
+
+_FILE_SCAN_RE = re.compile(
+    r"FileScan parquet .*?Location: \w+\(\d+ paths?\)\[(?P<paths>[^\]]*)\]"
+    r".*?PushedFilters: \[(?P<pushed>.*?)\], ReadSchema: (?P<schema>struct<.*>)"
+)
+
+
+def duplicate_scans(plan) -> dict[tuple[str, str, str], int]:
+    """Parquet scans that run more than once in one executed plan:
+    ``{(table, read schema, pushed filters): count}`` for every key seen
+    at least twice.  ``plan`` is a DataFrame or an ``executedPlan()``
+    string.
+
+    AQE accounting: Spark reuses an exchange only when AQE cuts the
+    plan into query stages at run time, so an unexecuted adaptive plan
+    shows no reuse at all.  A DataFrame whose plan is not final yet is
+    therefore collected first; in the final plan a reused stage prints
+    as a ``ReusedExchange`` leaf with no scan beneath it, and the
+    ``== Initial Plan ==`` sections are skipped.  What is left counts
+    each scan that really ran.  A ``localCheckpoint``ed lineage runs as
+    its own job and shows here only as ``Scan ExistingRDD``."""
+    if not isinstance(plan, str):
+        if "isFinalPlan=false" in plan._jdf.queryExecution().executedPlan().toString():
+            plan.collect()
+        plan = plan._jdf.queryExecution().executedPlan().toString()
+    counts: Counter[tuple[str, str, str]] = Counter()
+    skip_below = None
+    for line in plan.splitlines():
+        # column where the node (or its "+-" edge) starts, past the
+        # ancestors' ":" rails
+        depth = len(line) - len(line.lstrip(" :"))
+        if skip_below is not None and depth > skip_below:
+            continue
+        skip_below = None
+        if "== Initial Plan ==" in line:
+            skip_below = depth
+            continue
+        m = _FILE_SCAN_RE.search(line)
+        if m:
+            table = ",".join(
+                os.path.basename(p.strip()).removesuffix(".parquet")
+                for p in m["paths"].split(",")
+            )
+            counts[table, m["schema"], m["pushed"]] += 1
+    return {k: n for k, n in counts.items() if n > 1}

@@ -771,15 +771,36 @@ def test_mr_factor_views_are_statement_scoped(spark):
                   if t.name.startswith("__mr_factor_")]
         assert leaked == []
         # the result stays collectible even though the view is gone
-        # (analysis is eager); a FAILING statement also cleans up
-        with pytest.raises(Exception):
-            tenv.execute_sql(
-                f"SELECT nonexistent_col FROM mrl_ev {mr} AS m")
-        leaked = [t.name for t in spark.catalog.listTables()
-                  if t.name.startswith("__mr_factor_")]
-        assert leaked == []
+        # (analysis is eager); a FAILING statement also cleans up —
+        # whether the enclosing query fails, or a later factor fails to
+        # expand after an earlier factor's view was registered
+        failing = [
+            f"SELECT nonexistent_col FROM mrl_ev {mr} AS m",
+            f"SELECT * FROM mrl_ev {mr} AS m JOIN mrl_ev MATCH_RECOGNIZE "
+            "(PARTITION BY user_id ORDER BY ts MEASURES nonsense) AS n "
+            "ON m.a_id = n.a_id",
+        ]
+        for sql in failing:
+            with pytest.raises(Exception):
+                tenv.execute_sql(sql)
+            leaked = [t.name for t in spark.catalog.listTables()
+                      if t.name.startswith("__mr_factor_")]
+            assert leaked == [], sql
     finally:
         spark.catalog.dropTempView("mrl_ev")
+
+
+@pytest.mark.parametrize("name", ["x_mr_multikey", "x_mad_outliers", "x_ann_pq"])
+def test_staged_entries_leave_no_session_view(spark, name):
+    """Entries that hand derived frames to SQL (x_mr_multikey's
+    day-keyed events to match_recognize, the MAD and PQ staged CTEs as
+    spark.sql frame parameters) register no view that outlives them."""
+    from flink_1_11_1_spark.extensions import registry
+
+    catalog.register(spark, SF_SMOKE)
+    before = {t.name for t in spark.catalog.listTables()}
+    assert registry.queries()[name](spark, SF_SMOKE).count() > 0
+    assert {t.name for t in spark.catalog.listTables()} == before
 
 
 def test_mr_factor_cte_source(spark):

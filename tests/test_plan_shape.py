@@ -253,7 +253,7 @@ def test_cosine_lsh_entry_uses_band_join_not_gemm(spark):
     grouped-GEMM Arrow stage (that is the permissive-threshold path).
     Since round 14 the bucket frame sits behind a lazy checkpoint (it
     feeds both self-join sides), so the banded stage is asserted on the
-    pre-checkpoint lineage and the entry plan on the join + scan shape."""
+    bucket builder's plan and the entry plan on the join + scan shape."""
     plan = _entry_plan(spark, "x_dedup_cosine_lsh")
     assert "FlatMapGroupsInPandas" not in plan       # no GEMM stage
     assert "Scan ExistingRDD" in plan                # checkpointed buckets
@@ -265,7 +265,7 @@ def test_cosine_lsh_entry_uses_band_join_not_gemm(spark):
 
     emb = catalog.load_table(spark, SF_SMOKE, "embeddings")
     bucket_plan = (
-        dedup._cos_band_candidates(emb, 8, 12, checkpoint=False)
+        dedup._cos_buckets(emb, 8, 12)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Generate" in bucket_plan                 # posexplode(band codes)
